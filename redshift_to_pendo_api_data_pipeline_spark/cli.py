@@ -85,18 +85,14 @@ def _make_sink(cfg: dict, stream: StreamSpec, version: int, state: State):
                 max_bytes=int(sink_cfg.get("batch_bytes", 5_000_000)),
                 request_delay=float(sink_cfg.get("request_delay", 0.0)),
             )
-            results = sink_dataframe(flat, scfg).cache()
-            try:
-                from pyspark.sql import functions as FF
-                agg = results.agg(
-                    FF.sum("total").alias("t"), FF.sum("failed").alias("f")
-                ).first()
-                if agg["f"]:
-                    print(f"WARN {stream.name}: {agg['f']} records quarantined",
-                          file=sys.stderr)
-                return int(agg["t"] or 0)
-            finally:
-                results.unpersist()
+            # one row per POSTed batch: collect once and sum here, so no
+            # second action can re-run (and re-POST) a writer partition
+            rows = sink_dataframe(flat, scfg).collect()
+            failed = sum(r["failed"] for r in rows)
+            if failed:
+                print(f"WARN {stream.name}: {failed} records quarantined",
+                      file=sys.stderr)
+            return sum(r["total"] for r in rows)
 
         return http_sink
     raise SystemExit(f"unknown sink kind {kind!r}")

@@ -4,8 +4,6 @@ The reference applies these per row in Python inside the target's message
 loop; here each is a Catalyst expression that stays inside whole-stage
 codegen (SURVEY.md §2.7):
 
-- F1  ISO-8601 date formatting      (tap messages.py:349-352, sync.py:75-80)
-- F5  int->str cast reconciliation  (target __init__.py:544-547)
 - F8  recursive dict flatten, ``__`` separator; lists stringified
                                      (target __init__.py:408-418)
 - F9  field rename per mapping, collision-safe (target __init__.py:531-548)
@@ -17,8 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
-
-ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss'Z'"
 
 _I64_MAX = (1 << 63) - 1
 _I64_MIN = -(1 << 63)
@@ -63,18 +59,6 @@ def fixed_point(col: Column, scale: int = 2) -> Column:
     '25.5' breaks value-hash comparison; integers never do). The multiply
     happens in decimal arithmetic, so the cast is exact."""
     return (col * F.lit(10**scale)).cast("long")
-
-
-def iso8601(col: Column) -> Column:
-    """F1: timestamp/date -> ``...T...Z`` string, matching the reference's
-    ``isoformat() + 'Z'`` (messages.py:349-352)."""
-    return F.date_format(col, ISO_FMT)
-
-
-def coerce_to_string(col: Column) -> Column:
-    """F5: mapped-field type reconciliation — the target casts ints to str
-    when the Pendo schema says string (__init__.py:544-547)."""
-    return col.cast("string")
 
 
 def flatten(df: DataFrame, sep: str = "__") -> DataFrame:

@@ -20,8 +20,6 @@ surface BASELINE.json's north star asks for, designed 100 TB-first:
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
@@ -274,41 +272,6 @@ def minhash_dedup_pairs_staged(
 
 
 # ----------------------------------------------------------------- simhash
-
-def simhash_udf(n_bits: int = 64):
-    """64-bit SimHash over word tokens as a vectorized pandas UDF — the
-    bit-vote accumulation isn't expressible as array built-ins without an
-    explode+64-way agg, so this is the honest Arrow-batched Python path
-    (SURVEY.md §2.10: pandas_udf where built-ins genuinely can't)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.LongType())
-    def _simhash(texts: pd.Series) -> pd.Series:
-        # blake2b, not Python hash(): deterministic across worker processes
-        # (PYTHONHASHSEED varies), so signatures are reproducible run-to-run.
-        def tok_hash(tok: str) -> int:
-            return int.from_bytes(
-                hashlib.blake2b(tok.encode(), digest_size=8).digest(), "little"
-            )
-
-        out = np.zeros(len(texts), dtype=np.int64)
-        positions = np.arange(n_bits, dtype=np.uint64)
-        for i, t in enumerate(texts):
-            tokens = set((t or "").lower().split())
-            if not tokens:
-                continue
-            hashes = np.array([tok_hash(tok) for tok in tokens], dtype=np.uint64)
-            # bit matrix: (tokens, bits) of 0/1 -> votes per bit
-            bits = (hashes[:, None] >> positions[None, :]) & np.uint64(1)
-            votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-            sig = np.uint64(0)
-            for b in np.nonzero(votes > 0)[0]:
-                sig |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(sig)
-        return pd.Series(out)
-
-    return _simhash
-
 
 def simhash_signatures_jvm(
     df: DataFrame, text_col: str, id_col: str, n_bits: int = 64

@@ -99,7 +99,8 @@ def ordered_limit(
 ) -> DataFrame:
     """O1+O2: ORDER BY rk LIMIT n (sync.py:145-146). Spark executes this as
     TakeOrderedAndProject — per-partition top-k then a single merge, no
-    global sort shuffle."""
+    global sort shuffle. The merge leaves the result in ONE partition;
+    ``sink.http_sink.sink_dataframe`` re-fans it across writers."""
     key = F.asc(order_key) if ascending else F.desc(order_key)
     return df.orderBy(key).limit(n)
 

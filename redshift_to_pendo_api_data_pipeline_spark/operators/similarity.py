@@ -1216,40 +1216,6 @@ def bucketed_neardup_pairs(
     return pairs
 
 
-def bucketed_pairs_from_staged(
-    spark,
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    stage_path: str,
-    threshold: float = 0.45,
-    tables: list[int] | None = None,
-) -> DataFrame:
-    """Verified near-dup pairs derived from an EXISTING staged
-    (id, tbl, bucket) assignment — the probe half of
-    bucketed_neardup_pairs without re-signing the corpus. ``tables``
-    restricts to a table subset: because table t always uses seed +
-    1000·t, the single-table result IS ``tables=[0]`` of any wider
-    staging — so a recall audit stages once at the widest L and derives
-    every narrower variant by filter, and production can A/B table
-    counts against one assignment artifact."""
-    asg = spark.read.parquet(stage_path)
-    if tables is not None:
-        asg = asg.where(F.col("tbl").isin([int(t) for t in tables]))
-    # hydrate vectors onto the assignment with ONE equi-join on id (the
-    # assignment is scan-sized, so this broadcasts or AQE-broadcasts),
-    # then verify within (tbl, bucket) groups as BLAS gram matrices —
-    # no self-join at all, so no cardinality-estimate fragility. A pair
-    # sharing a bucket in several tables is verified once per table
-    # (bounded by L) and collapsed by the final DISTINCT (cosine is
-    # deterministic per pair, so the triple collapses exactly).
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    pairs = _within_bucket_pairs(asg.join(vecs, "id"), threshold)
-    if tables is None or len(tables) > 1:
-        pairs = pairs.distinct()
-    return pairs
-
-
 def label_centroid_similarity(
     df: DataFrame, vec_col: str, label_col: str, scale: int = 10**6
 ) -> DataFrame:

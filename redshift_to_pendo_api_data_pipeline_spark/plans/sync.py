@@ -63,7 +63,9 @@ def sync_plan(
     subset — any unsunk row with rk below the new bookmark would be lost
     forever on the next incremental run. Spark executes the ordered limit
     as TakeOrderedAndProject (per-partition top-k + single merge), so no
-    global sort is paid. FULL_TABLE ignores the limit entirely: a
+    global sort is paid; the merge leaves the shaped frame in one
+    partition, and the HTTP sink re-fans it across concurrent writers
+    (``sink_dataframe``). FULL_TABLE ignores the limit entirely: a
     versioned full refresh truncated to n arbitrary rows would drop the
     rest at ACTIVATE_VERSION time.
     """

@@ -10,8 +10,8 @@ Reference policies being re-expressed (SURVEY.md §2.9):
 - B10 fixed inter-request delay (:324)
 
 All of this is plain library code that runs *inside* an executor task
-(``foreachPartition``); none of it touches the driver, so sink throughput
-scales linearly with partitions.
+(the ``mapPartitions`` writer); none of it touches the driver, so sink
+throughput scales with the number of writer partitions.
 """
 
 from __future__ import annotations
@@ -48,10 +48,11 @@ def batch_records(
 class TokenBucket:
     """B5: thread-safe token-bucket limiter, `calls` per `period` seconds.
 
-    One instance per executor process (module-level singleton per config)
-    so all partition tasks in that executor share the budget — on a
-    1000-executor cluster the per-executor rate must be provisioned as
-    global_limit / num_executors.
+    One instance per Python worker process and config (module-level
+    singleton in ``http_sink``). Spark runs each concurrent task in its own
+    worker, so every writer task has a bucket of its own: the caller must
+    provision each writer with global_limit / num_writers, which
+    ``http_sink.sink_dataframe`` does.
     """
 
     def __init__(self, calls: int, period: float) -> None:

@@ -3,9 +3,11 @@
 The reference consumes a Singer message stream on stdin and POSTs batches
 to ``/api/v1/metadata/{kind}/{group}/value`` with asyncio concurrency
 (target-pendo/src/__init__.py:301-368). Here the equivalent is a
-``foreachPartition`` writer: Spark supplies the parallelism (one task per
-partition, many executors), so the writer itself stays synchronous and
-simple; per-partition connection reuse replaces the shared httpx pool.
+``mapPartitions`` writer: ``sink_dataframe`` spreads the records over as
+many writer partitions as the batch count and the cluster's cores allow,
+and Spark runs them as concurrent tasks, so the writer itself stays
+synchronous and simple; per-partition connection reuse replaces the
+shared httpx pool.
 
 Reliability semantics preserved (SURVEY.md §2.9):
 - B6 retry: expo backoff, ≤5 tries, give up on 4xx;
@@ -24,6 +26,7 @@ else visitor (__init__.py:40-72, endpoints.py:7-36).
 from __future__ import annotations
 
 import json
+import math
 import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
@@ -124,10 +127,13 @@ class SinkConfig:
     max_records: int = DEFAULT_MAX_RECORDS
     max_bytes: int = DEFAULT_MAX_BYTES
     # rate_calls/rate_period is the GLOBAL API budget (Pendo: 1800 calls
-    # per 300 s, __init__.py:308-311). TokenBuckets are per executor
-    # process, so sink_dataframe divides this budget by the live executor
-    # count before shipping the config to tasks — N executors each get
-    # rate_calls/N. Configs used directly in post_batch/write_partition
+    # per 300 s, __init__.py:308-311). Each writer task runs in its own
+    # Python worker with its own TokenBucket, so sink_dataframe divides
+    # this budget by its writer count before shipping the config to tasks
+    # — N writers each get rate_calls/N. That bounds one sink call; each
+    # bucket starts full, so several sink calls inside one period (sync
+    # cycles, a quarantine retry pass) can together exceed the budget.
+    # Configs used directly in post_batch/write_partition
     # (single-process paths) spend the whole budget.
     rate_calls: int = 1800
     rate_period: float = 300.0
@@ -155,8 +161,11 @@ class BatchResult:
     failed_classes: list[str] = field(default_factory=list)
 
 
-# One bucket per (calls, period) per executor process — all partition tasks
-# running in that executor share it.
+# One bucket per (calls, period) per Python worker process. Spark runs
+# each concurrent task in its own worker, so a writer never shares its
+# bucket with another writer of the same sink call. A later sink call
+# with another writer share, or a task landing in a fresh worker, gets a
+# new full bucket.
 _BUCKETS: dict[tuple[int, float], TokenBucket] = {}
 
 
@@ -167,27 +176,24 @@ def _bucket(calls: int, period: float) -> TokenBucket:
     return _BUCKETS[key]
 
 
-def _executor_count(spark) -> int:
-    """Live executor count (excluding the driver entry when executors
-    exist). In local mode there is exactly one executor process, so the
-    full rate budget applies. spark.executor.instances wins when set — a
-    static pin is the reliable number under dynamic allocation."""
-    pinned = spark.conf.get("spark.executor.instances", None)
-    if pinned:
-        return max(int(pinned), 1)
-    status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus()
-    # local mode: one entry (the driver IS the executor); cluster: driver
-    # + N executors
-    return max(status.size() - 1, 1)
-
-
-def per_executor_config(cfg: SinkConfig, n_exec: int) -> SinkConfig:
-    """Split the global rate budget: each of n_exec executors gets
-    rate_calls // n_exec (min 1). Every other field passes through; the
-    caller's config is never mutated."""
+def per_writer_config(cfg: SinkConfig, writers: int) -> SinkConfig:
+    """Split the global rate budget: each of ``writers`` concurrent writers
+    gets rate_calls // writers (min 1). Every other field passes through;
+    the caller's config is never mutated."""
     from dataclasses import replace
 
-    return replace(cfg, rate_calls=max(1, cfg.rate_calls // max(n_exec, 1)))
+    return replace(cfg, rate_calls=max(1, cfg.rate_calls // max(writers, 1)))
+
+
+def _writer_count(spark, n: int, cfg: SinkConfig) -> int:
+    """Writers for ``n`` records: one per batch, but no more than the
+    executors' cores (``defaultParallelism``) nor than ``rate_calls``, so
+    every writer keeps a rate budget of at least one call."""
+    return max(1, min(
+        math.ceil(n / cfg.max_records),
+        spark.sparkContext.defaultParallelism,
+        cfg.rate_calls,
+    ))
 
 
 def post_batch(cfg: SinkConfig, batch: list[bytes]) -> BatchResult:
@@ -282,28 +288,49 @@ def write_partition(cfg: SinkConfig, payloads: Iterable[bytes]) -> Iterator[tupl
 
 
 def sink_dataframe(df: DataFrame, cfg: SinkConfig) -> DataFrame:
-    """Write a shaped DataFrame (any schema; serialized to one JSON doc per
-    row here) to the HTTP endpoint. Returns the per-batch results as a
-    DataFrame ``(total, updated, failed, failed_payloads)`` — the caller
-    aggregates (A4) and persists the quarantine set (B7).
+    """Write a shaped DataFrame (any schema with the record key in ``id``;
+    serialized to one JSON doc per row here) to the HTTP endpoint. Returns
+    the per-batch results as a DataFrame ``(total, updated, failed,
+    failed_payloads)`` — the caller aggregates (A4) and persists the
+    quarantine set (B7).
 
-    Distribution: each partition runs an independent writer with its own
-    HTTP connection; concurrency = numPartitions, the Spark-native
-    replacement for asyncio.gather+Semaphore(10) (__init__.py:351-368).
+    Distribution: the input is counted once and spread over
+    ``fan = min(ceil(n / max_records), defaultParallelism, rate_calls)``
+    writer partitions, each an independent writer with its own HTTP
+    connection. That is the Spark-native replacement for
+    asyncio.gather+Semaphore(10) (__init__.py:351-368). The input's own
+    partitioning does not matter: an ordered limit leaves one partition,
+    and ``n <= max_records`` rows still make one POST. ``run_sync`` caches
+    its input, so there the count also fills the cache; an uncached input
+    is evaluated twice, once by the count and once by the writers.
 
-    The global rate budget is split across executors here (the TokenBucket
-    is per executor process — N executors each honoring the full 1800/300s
-    would hit the API at N x the limit). The executor count is sampled at
-    plan-build time; with dynamic allocation scaling OUT afterwards the
-    aggregate can exceed the budget — pin spark.executor.instances (or
-    spark.dynamicAllocation.maxExecutors) for a hard guarantee.
+    Records are hash-partitioned on ``id`` and re-sorted by their input
+    position inside each writer, so every version of a key is posted by
+    one writer in input order and last-writer-wins per key holds as in a
+    serial sink.
+
+    The global rate budget is split across the ``fan`` writers (each runs
+    in its own Python worker with its own TokenBucket); since ``fan`` never
+    exceeds ``rate_calls``, the writers' budgets sum to at most the global
+    one within this call. Buckets start full, so successive calls inside
+    one ``rate_period`` can add their bursts together.
     """
-    per_exec_cfg = per_executor_config(cfg, _executor_count(df.sparkSession))
-    json_df = df.select(F.to_json(F.struct(*df.columns)).alias("payload"))
+    fan = _writer_count(df.sparkSession, df.count(), cfg)
+    json_df = (
+        df.select(
+            F.to_json(F.struct(*df.columns)).alias("payload"),
+            "id",
+            F.monotonically_increasing_id().alias("_seq"),
+        )
+        .repartition(fan, "id")
+        .sortWithinPartitions("_seq")
+        .select("payload")
+    )
+    writer_cfg = per_writer_config(cfg, fan)
 
     def _run(it: Iterator) -> Iterator[tuple]:
         yield from write_partition(
-            per_exec_cfg, (row["payload"].encode() for row in it)
+            writer_cfg, (row["payload"].encode() for row in it)
         )
 
     return json_df.rdd.mapPartitions(_run).toDF(

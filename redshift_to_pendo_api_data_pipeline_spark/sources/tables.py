@@ -63,15 +63,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_table_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan WITHOUT the nanos->timestamp conversion. Use when a filter must
-    push down to the parquet scan on a nanos column: compare against the
-    bookmark as a long (ns since epoch), then convert after — the converted
-    column defeats parquet predicate pushdown, the raw long doesn't."""
-    path = f"{sf_dir}/{name}.parquet"
-    return spark.read.parquet(path)
-
-
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 

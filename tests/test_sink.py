@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
@@ -88,7 +89,9 @@ def test_endpoint_routing():
 class _MockAPI(BaseHTTPRequestHandler):
     """Accepts metadata batches; rejects records whose id is in
     fail_ids (per-record errors, like the real API's error.list);
-    returns 500 for the first `flaky_500s` requests."""
+    returns 500 for the first `flaky_500s` requests. Every POST first
+    sleeps `service_s`, and the mock counts POSTs and the most POSTs in
+    flight at once."""
 
     store: list[list[dict]] = []
     fail_ids: set = set()
@@ -97,9 +100,25 @@ class _MockAPI(BaseHTTPRequestHandler):
     # (status, code, n): answer the first n requests with an HTTP
     # `status` whose body is a Pendo error.list carrying `code`
     error_list_replies: tuple = ()
+    service_s: float = 0.0
+    posts: int = 0
+    inflight: int = 0
+    max_inflight: int = 0
     lock = threading.Lock()
 
     def do_POST(self):  # noqa: N802
+        with _MockAPI.lock:
+            _MockAPI.posts += 1
+            _MockAPI.inflight += 1
+            _MockAPI.max_inflight = max(_MockAPI.max_inflight, _MockAPI.inflight)
+        try:
+            time.sleep(_MockAPI.service_s)
+            self._handle()
+        finally:
+            with _MockAPI.lock:
+                _MockAPI.inflight -= 1
+
+    def _handle(self):
         body = self.rfile.read(int(self.headers["content-length"]))
         if not self.path.startswith("/api/v1/metadata/"):
             self.send_response(404)
@@ -158,6 +177,8 @@ def mock_api():
     _MockAPI.fail_codes = {}
     _MockAPI.flaky_500s = 0
     _MockAPI.error_list_replies = ()
+    _MockAPI.service_s = 0.0
+    _MockAPI.posts = _MockAPI.inflight = _MockAPI.max_inflight = 0
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _MockAPI)
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
@@ -305,22 +326,121 @@ def test_classify_error_mapping():
 
 
 def test_rate_budget_split_across_executors():
-    """rate_calls is the GLOBAL API budget; sink_dataframe splits it per
-    executor via per_executor_config (a per-executor TokenBucket honoring
-    the full budget would hit the API at N x the limit on an N-executor
-    cluster)."""
+    """rate_calls is the GLOBAL API budget; sink_dataframe splits it over
+    the concurrent writers its executors run via per_writer_config (a
+    per-writer TokenBucket honoring the full budget would hit the API at
+    N x the limit with N writers)."""
     from redshift_to_pendo_api_data_pipeline_spark.sink.http_sink import (
-        SinkConfig, per_executor_config,
+        per_writer_config,
     )
 
     cfg = SinkConfig(base_url="http://x", stream_name="visitors", rate_calls=1800)
-    assert per_executor_config(cfg, 4).rate_calls == 450
-    assert per_executor_config(cfg, 1).rate_calls == 1800
-    assert per_executor_config(cfg, 10_000).rate_calls == 1  # never zero
-    assert cfg.rate_calls == 1800  # caller's config untouched
-    assert per_executor_config(cfg, 4).rate_period == cfg.rate_period
+    for writers in (1, 3, 4, 7, 64, 1800):
+        w = per_writer_config(cfg, writers)
+        assert w.rate_calls >= 1                         # no writer gets 0
+        assert writers * w.rate_calls <= cfg.rate_calls  # sum within budget
+        assert w.rate_period == cfg.rate_period
+    assert per_writer_config(cfg, 4).rate_calls == 450
+    assert per_writer_config(cfg, 1).rate_calls == 1800
+    assert per_writer_config(cfg, 10_000).rate_calls == 1  # never zero
+    assert cfg.rate_calls == 1800                        # caller's config untouched
 
 
 def test_executor_count_local_mode(spark):
-    from redshift_to_pendo_api_data_pipeline_spark.sink.http_sink import _executor_count
-    assert _executor_count(spark) == 1  # local: full budget stays
+    """In local mode the one executor's cores (local[4] here) cap the
+    writer count; one batch of records keeps one writer and so the full
+    budget, and a narrow budget caps the writers below the cores."""
+    from redshift_to_pendo_api_data_pipeline_spark.sink.http_sink import _writer_count
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores == 4
+    cfg = SinkConfig(base_url="http://x", stream_name="v", max_records=10)
+    assert _writer_count(spark, 0, cfg) == 1
+    assert _writer_count(spark, 10, cfg) == 1      # local: full budget stays
+    assert _writer_count(spark, 11, cfg) == 2
+    assert _writer_count(spark, 10_000, cfg) == cores
+    narrow = SinkConfig(base_url="http://x", stream_name="v", max_records=10,
+                        rate_calls=3)
+    assert _writer_count(spark, 10_000, narrow) == 3
+
+
+def test_rate_budget_split_across_writers(spark, mock_api):
+    """A budget narrower than the cluster caps the fan-out itself: 40 rows
+    at 10 per batch would fan out over all 4 cores, but rate_calls=2 keeps
+    exactly 2 writers, so the writers' budgets sum to the global one."""
+    base_url, api = mock_api
+    api.service_s = 0.3
+    shaped = spark.range(40).coalesce(1)
+    small = SinkConfig(base_url=base_url, stream_name="v", max_records=10,
+                       rate_calls=2, rate_period=0.1)
+    total = sink_dataframe(shaped, small).agg(F.sum("total")).first()[0]
+    assert total == 40
+    assert api.max_inflight == small.rate_calls
+    assert small.rate_calls == 2                         # the sink copied, not mutated
+
+
+# ------------------------------------------------------------- fan-out
+def _posted_ids(api) -> list:
+    return [r["id"] for batch in api.store for r in batch]
+
+
+def test_sink_fans_out_single_partition_input(spark, mock_api):
+    """An ordered limit leaves one partition; the sink re-fans it, so
+    batches are POSTed concurrently and every id exactly once."""
+    base_url, api = mock_api
+    api.service_s = 0.2
+    shaped = spark.range(40).coalesce(1)
+    cfg = SinkConfig(base_url=base_url, stream_name="v", max_records=10)
+    total = sink_dataframe(shaped, cfg).agg(F.sum("total")).first()[0]
+    assert total == 40
+    assert api.max_inflight >= 2
+    assert sorted(_posted_ids(api)) == list(range(40))
+
+
+def test_sink_small_input_makes_one_post(spark, mock_api):
+    base_url, api = mock_api
+    shaped = spark.range(0, 10, numPartitions=3)
+    cfg = SinkConfig(base_url=base_url, stream_name="v", max_records=10)
+    total = sink_dataframe(shaped, cfg).agg(F.sum("total")).first()[0]
+    assert total == 10
+    assert api.posts == 1
+    assert sorted(_posted_ids(api)) == list(range(10))
+
+
+def test_sink_keeps_input_order_per_key(spark, mock_api):
+    """Two versions of each id, the older first in input order (and in
+    another input partition), reach the API older first: last writer
+    wins per key as in a serial sink."""
+    base_url, api = mock_api
+    api.service_s = 0.02
+    shaped = spark.range(0, 200, numPartitions=4).select(
+        (F.col("id") % 100).alias("id"), (F.col("id") >= 100).alias("newer")
+    )
+    cfg = SinkConfig(base_url=base_url, stream_name="v", max_records=10)
+    sink_dataframe(shaped, cfg).collect()
+    assert api.max_inflight >= 2
+    seen: dict = {}
+    for batch in api.store:
+        for r in batch:
+            seen.setdefault(r["id"], []).append(r["newer"])
+    assert seen == {i: [False, True] for i in range(100)}
+
+
+def test_cli_http_sink_posts_each_batch_once(spark, mock_api):
+    """The CLI's HTTP sink reads the per-batch results once: POSTs equal
+    distinct batches and every record is posted exactly once."""
+    from redshift_to_pendo_api_data_pipeline_spark.cli import _make_sink
+    from redshift_to_pendo_api_data_pipeline_spark.plans.state import State
+    from redshift_to_pendo_api_data_pipeline_spark.schema import StreamSpec
+
+    base_url, api = mock_api
+    cfg = {"sink": {"kind": "http", "base_url": base_url, "batch_records": 10}}
+    stream = StreamSpec(name="visitors", primary_key="id")
+    sink = _make_sink(cfg, stream, 1, State())
+    shaped = spark.range(45).select(
+        "id", F.struct((F.col("id") * 2).alias("score")).alias("values")
+    )
+    assert sink(shaped) == 45
+    batches = {frozenset(r["id"] for r in b) for b in api.store}
+    assert api.posts == len(api.store) == len(batches)
+    assert sorted(_posted_ids(api)) == list(range(45))
