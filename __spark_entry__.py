@@ -1626,8 +1626,9 @@ def q_embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup GROUPS from near-dup PAIRS: connected components (min-
-    label propagation) over the PRODUCTION pair graph — MinHash-LSH
+    """Near-dup GROUPS from near-dup PAIRS: connected components
+    (dedup.connected_components: driver union-find under its edge cap,
+    star contraction above it) over the PRODUCTION pair graph — MinHash-LSH
     candidates + exact-Jaccard verify from staged signatures
     (word_jaccard_pairs is the exact flavor, itself scale-safe via
     prefix filtering). cluster_id = min doc_id in the component; the
@@ -4237,13 +4238,13 @@ def q_entity_name_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity resolution end-to-end: typo-class name MATCHING
     (dedup.editdist_pairs — blocked Levenshtein over the distinct-name
     dictionary) chained into transitive-closure CLUSTERING
-    (dedup.connected_components — iterative min-label propagation), the
-    canonical record-linkage pipeline (Fellegi-Sunter matching +
-    clustering stage). Output: every distinct part name with its
-    cluster representative (min name reachable via <=2-edit links;
-    singletons represent themselves). The oracle recomputes the
-    closure with a recursive CTE — certifying pair generation AND the
-    iterative clustering against a different fixpoint algorithm."""
+    (dedup.connected_components — union-find on the driver, since the
+    name graph is dictionary-sized), the canonical record-linkage
+    pipeline (Fellegi-Sunter matching + clustering stage). Output:
+    every distinct part name with its cluster representative (min name
+    reachable via <=2-edit links; singletons represent themselves).
+    The oracle recomputes the closure with a recursive CTE — certifying
+    pair generation AND the clustering against a different algorithm."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
         connected_components,
         editdist_pairs,
@@ -5443,8 +5444,8 @@ def q_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_part_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivorship merge closing the linkage arc (block → score →
     cluster → merge, operators/linkage.golden_records): the
-    Fellegi–Sunter pairs at score >= 20 become clusters via iterative
-    min-label connected components, unmatched parts stay singleton
+    Fellegi–Sunter pairs at score >= 20 become clusters via
+    dedup.connected_components, unmatched parts stay singleton
     clusters, and each cluster resolves to ONE golden record — every
     field independently taking its modal value (count desc, value asc
     tiebreak). Returns multi-member clusters only (the merge report)."""
@@ -5900,12 +5901,13 @@ def q_related_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same near-dup GROUPS as dedup_clusters, computed by the
     O(log²)-round large-star/small-star contraction (operators/dedup.
-    connected_components_star) instead of O(diameter) min-label
-    propagation — the CC algorithm that survives chain-shaped graphs
-    (entity-resolution chains, citation paths) where propagation's
-    round count is the component diameter. Same staged pair graph,
-    same recursive-CTE oracle: two independent algorithms, one
-    hash-certified answer."""
+    connected_components_star) — the path connected_components takes
+    above its driver edge cap, called directly here because the
+    registry graph sits under the cap. Its round count does not grow
+    with the diameter, so it survives chain-shaped graphs
+    (entity-resolution chains, citation paths). Same staged pair
+    graph, same recursive-CTE oracle as dedup_clusters' union-find:
+    two independent algorithms, one hash-certified answer."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
         connected_components_star,
         minhash_dedup_pairs_staged,

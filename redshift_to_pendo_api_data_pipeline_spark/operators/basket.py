@@ -135,13 +135,14 @@ def frequent_item_pairs(
     )
 
 
-def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """Degree-orient an undirected edge list: every edge points from
-    its lower-degree endpoint to the higher (ties broken by node id,
-    so the orientation is a total order and acyclic). Input edges may
-    be in either canonical form; duplicates and self-loops are
-    dropped. Output columns: ``u`` (low side), ``v`` (high side)."""
-    canon = (
+def undirected_edges(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """The simple undirected graph of an edge list: each edge once as
+    ``(a, b)`` with ``a < b`` (least/greatest of its endpoints), with
+    self-loops and duplicates dropped. Every graph operator reads its
+    input through this one canonical form."""
+    return (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("a"),
             F.greatest(F.col(src), F.col(dst)).alias("b"),
@@ -149,12 +150,32 @@ def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFr
         .where(F.col("a") != F.col("b"))
         .distinct()
     )
-    deg = (
-        canon.select(F.col("a").alias("node"))
-        .unionAll(canon.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
+
+
+def mirror(canon: DataFrame) -> DataFrame:
+    """Both orientations ``(u, v)`` of every canonical ``(a, b)`` edge:
+    the adjacency relation, 2|E| rows, so ``groupBy("u")`` is the
+    degree and a join on ``u`` walks every neighbor."""
+    return canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+        canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
+
+
+def _degrees(canon: DataFrame, name: str) -> DataFrame:
+    """(node, ``name``) degree of every node of a canonical edge set."""
+    return mirror(canon).groupBy(F.col("u").alias("node")).agg(
+        F.count(F.lit(1)).cast("long").alias(name)
+    )
+
+
+def orient_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Degree-orient an undirected edge list: every edge points from
+    its lower-degree endpoint to the higher (ties broken by node id,
+    so the orientation is a total order and acyclic). Input edges may
+    be in either canonical form; duplicates and self-loops are
+    dropped. Output columns: ``u`` (low side), ``v`` (high side)."""
+    canon = undirected_edges(edges, src, dst)
+    deg = _degrees(canon, "deg")
     da = deg.select(F.col("node").alias("a"), F.col("deg").alias("deg_a"))
     db = deg.select(F.col("node").alias("b"), F.col("deg").alias("deg_b"))
     # degree hydration: big-big equi-joins — shuffle_hash, not SMJ (the
@@ -279,20 +300,7 @@ def degree_distribution(
     diagnostic read off any mined graph (hub detection before the
     triangle pass, power-law sanity). Canonicalizes/dedups edges, one
     union + two groupBys: (node degree) then (degree n_nodes)."""
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        canon.select(F.col("a").alias("node"))
-        .unionAll(canon.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-    )
+    deg = _degrees(undirected_edges(edges, src, dst), "degree")
     return deg.groupBy("degree").agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")
     )
@@ -384,39 +392,29 @@ def frequent_item_triples(
 
 def k_core(
     edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
-    max_iter: int = 50,
 ) -> DataFrame:
     """k-core decomposition membership: the maximal subgraph where
     every node keeps degree >= k — the standard community/spam-ring
     densifier (near-dup rings and co-purchase cliques live in high
     cores; degree-1 chaff doesn't). Iterative peel: drop nodes with
     degree < k, recompute degrees on the induced subgraph, repeat to
-    fixpoint — O(peel-depth) rounds, each one degree groupBy + two
-    semi-joins, localCheckpoint per round truncating lineage (the
-    connected-components discipline). Returns (node, degree-in-core).
+    the fixpoint. A peel only removes edges, so a round that keeps the
+    edge count is the fixpoint and there are at most |E| rounds. Each
+    round is one degree groupBy + two semi-joins behind a lazy
+    localCheckpoint, and ONE count job that both materializes the
+    checkpoint and tests convergence against the previous round's
+    count. Returns (node, degree-in-core).
 
     Not SQL-expressible as one query (the fixpoint is genuinely
     iterative) — certified by property test: every member has >= k
     in-core neighbors, and no dropped node could re-enter."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    cur = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    for _ in range(max_iter):
-        deg = (
-            cur.select(F.col("a").alias("node"))
-            .unionAll(cur.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        )
-        keep = deg.where(F.col("degree") >= k).select("node")
-        nxt = (
+    cur = undirected_edges(edges, src, dst).localCheckpoint(eager=False)
+    n_cur = cur.count()
+    while True:
+        keep = _degrees(cur, "degree").where(F.col("degree") >= k).select("node")
+        cur = (
             cur.join(
                 keep.hint("shuffle_hash").withColumnRenamed("node", "a"),
                 "a", "left_semi",
@@ -425,18 +423,65 @@ def k_core(
                 keep.hint("shuffle_hash").withColumnRenamed("node", "b"),
                 "b", "left_semi",
             )
-        ).localCheckpoint()
-        if nxt.count() == cur.count():
-            cur = nxt
-            break
-        cur = nxt
-    final_deg = (
-        cur.select(F.col("a").alias("node"))
-        .unionAll(cur.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
+        ).localCheckpoint(eager=False)
+        n_prev, n_cur = n_cur, cur.count()
+        if n_cur == n_prev:
+            return _degrees(cur, "core_degree")
+
+
+def _integer_pagerank(
+    adj: DataFrame, nodes: DataFrame, rank0, teleport, n_iter: int,
+    damping_ppm: int,
+) -> DataFrame:
+    """The integer PageRank recurrence shared by ``pagerank_fixed`` and
+    ``personalized_pagerank``, which differ only in the starting rank
+    ``rank0`` and the ``teleport`` term (Column expressions over
+    ``node``). Per iteration:
+
+        rank'(v) = teleport(v)
+                   + damping_ppm * sum_{u~v} (rank(u) div deg(u)) div 1e6
+
+    (integer floor-div everywhere; all terms non-negative, so Spark's
+    truncating ``div`` and DuckDB's flooring ``//`` agree). A FIXED
+    iteration count (not convergence detection) keeps the result a
+    deterministic function of the graph, unrollable as k chained CTEs
+    by an independent engine.
+
+    Shape per iteration: one nodes-sized projection (per-node share =
+    rank div degree), one edge join + dst-keyed groupBy (THE PageRank
+    shuffle), one left join back to the node relation; localCheckpoint
+    truncates lineage so round N's plan doesn't replay rounds 1..N-1.
+    All joins shuffle_hash: node and edge relations are corpus-sized.
+    ``adj`` is the ``mirror`` adjacency, so every node has degree >= 1
+    and there is no dangling-mass term."""
+    deg = adj.groupBy(F.col("u").alias("node")).agg(
+        F.count(F.lit(1)).cast("long").alias("__deg")
     )
-    return final_deg
+    ranks = nodes.withColumn("rank", rank0.cast("long"))
+    for _ in range(n_iter):
+        shares = ranks.join(deg.hint("shuffle_hash"), "node").select(
+            F.col("node").alias("u"),
+            F.expr("rank div __deg").alias("__share"),
+        )
+        inflow = (
+            adj.join(shares.hint("shuffle_hash"), "u")
+            .groupBy(F.col("v").alias("node"))
+            .agg(F.sum("__share").alias("__s"))
+        )
+        ranks = (
+            nodes.join(inflow.hint("shuffle_hash"), "node", "left")
+            .select(
+                "node",
+                (
+                    teleport
+                    + F.expr(
+                        f"{damping_ppm}L * coalesce(__s, 0L) div 1000000L"
+                    )
+                ).cast("long").alias("rank"),
+            )
+            .localCheckpoint()
+        )
+    return ranks
 
 
 def pagerank_fixed(
@@ -452,71 +497,22 @@ def pagerank_fixed(
     list (co-purchase hubs, near-dup ring centers), exact cross-engine
     because nothing ever becomes a float: total mass is ``mass``
     (parts-per-trillion units), every node starts at mass div N, and
+    the teleport term of ``_integer_pagerank`` is
 
-        rank'(v) = base + damping_ppm * sum_{u~v} (rank(u) div deg(u))
-                   div 1e6,
-        base     = (mass div N) * (1e6 - damping_ppm) div 1e6
+        base = (mass div N) * (1e6 - damping_ppm) div 1e6
 
-    (integer floor-div everywhere; all terms non-negative, so Spark's
-    truncating ``div`` and DuckDB's flooring ``//`` agree). Undirected
-    edges mean every node has degree >= 1 — no dangling-mass term. A
-    FIXED iteration count (not convergence detection) keeps the result
-    a deterministic function of the graph, unrollable as k chained
-    CTEs by an independent engine.
-
-    Shape per iteration: one nodes-sized projection (per-node share =
-    rank div degree), one edge join + dst-keyed groupBy (THE PageRank
-    shuffle), one left join back to the node relation; localCheckpoint
-    truncates lineage (the connected-components discipline). All joins
-    shuffle_hash: node and edge relations are corpus-sized.
-
-    Returns (node, rank) — rank in ppt of total mass."""
+    for every node. Returns (node, rank) — rank in ppt of total mass."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    directed = canon.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionAll(canon.select(F.col("b").alias("u"), F.col("a").alias("v")))
-    nodes = directed.select(F.col("u").alias("node")).distinct()
+    adj = mirror(undirected_edges(edges, src, dst))
+    nodes = adj.select(F.col("u").alias("node")).distinct()
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("rank", F.lit(0).cast("long"))
-    deg = directed.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("__deg")
-    )
     base = (mass // n) * (1_000_000 - damping_ppm) // 1_000_000
-    ranks = nodes.withColumn("rank", F.lit(mass // n).cast("long"))
-    for _ in range(n_iter):
-        shares = ranks.join(deg.hint("shuffle_hash"), "node").select(
-            F.col("node").alias("u"),
-            F.expr("rank div __deg").alias("__share"),
-        )
-        contrib = (
-            directed.join(shares.hint("shuffle_hash"), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("__share").alias("__s"))
-        )
-        ranks = (
-            nodes.join(contrib.hint("shuffle_hash"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"{damping_ppm}L * coalesce(__s, 0L) div 1000000L"
-                    )
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
+    return _integer_pagerank(
+        adj, nodes, F.lit(mass // n), F.lit(base), n_iter, damping_ppm
+    )
 
 
 def k_hop_reachability(
@@ -546,17 +542,7 @@ def k_hop_reachability(
     Returns (node, dist) with dist in 0..k; seeds are dist 0."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    directed = canon.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionAll(canon.select(F.col("b").alias("u"), F.col("a").alias("v")))
+    directed = mirror(undirected_edges(edges, src, dst))
     visited = seeds.select(
         F.col(seed_col).alias("node"), F.lit(0).cast("long").alias("dist")
     ).distinct().localCheckpoint()
@@ -762,59 +748,28 @@ def personalized_pagerank(
     integer contract: fixed iterations, floor-div, ppt mass units —
     unrollable as chained CTEs by an independent engine.
 
-    Per iteration: nodes-sized share projection, one edge join +
-    dst-keyed agg, a left join back (shuffle_hash, corpus-sized
-    relations), localCheckpoint lineage truncation. The seed set is an
-    enum-bounded literal by contract."""
+    Seeds start at mass div |seeds| and every other node at 0; the
+    teleport term of ``_integer_pagerank`` is
+    (mass div |seeds|) * (1e6 - damping_ppm) div 1e6 on seeds and 0
+    elsewhere. The seed set is an enum-bounded literal by contract and
+    must be non-empty."""
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    directed = canon.select(
-        F.col("a").alias("u"), F.col("b").alias("v")
-    ).unionAll(canon.select(F.col("b").alias("u"), F.col("a").alias("v")))
-    nodes = directed.select(F.col("u").alias("node")).distinct()
-    deg = directed.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("__deg")
-    )
+    if not seeds:
+        raise ValueError("seeds must be non-empty")
+    adj = mirror(undirected_edges(edges, src, dst))
+    nodes = adj.select(F.col("u").alias("node")).distinct()
     n_seeds = len(seeds)
     is_seed = F.col("node").isin([int(s) for s in seeds])
     seed_base = (mass // n_seeds) * (1_000_000 - damping_ppm) // 1_000_000
-    ranks = nodes.withColumn(
-        "rank",
-        F.when(is_seed, F.lit(mass // n_seeds)).otherwise(F.lit(0))
-        .cast("long"),
+
+    def on_seeds(value: int):
+        return F.when(is_seed, F.lit(value)).otherwise(F.lit(0))
+
+    return _integer_pagerank(
+        adj, nodes, on_seeds(mass // n_seeds), on_seeds(seed_base),
+        n_iter, damping_ppm,
     )
-    for _ in range(n_iter):
-        shares = ranks.join(deg.hint("shuffle_hash"), "node").select(
-            F.col("node").alias("u"),
-            F.expr("rank div __deg").cast("long").alias("share"),
-        )
-        inflow = (
-            directed.join(shares.hint("shuffle_hash"), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.sum("share").cast("long").alias("inflow"))
-        )
-        ranks = (
-            nodes.join(inflow.hint("shuffle_hash"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(seed_base)).otherwise(F.lit(0))
-                    + F.expr(
-                        f"{damping_ppm}L * coalesce(inflow, 0L) div 1000000"
-                    )
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
 
 
 def resource_allocation_links(
@@ -840,25 +795,16 @@ def resource_allocation_links(
     left_anti against the canonical edge set; the final top-k is a
     TakeOrderedAndProject, never a global sort.
     """
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = canon.select(F.col("a").alias("z"), F.col("b").alias("n")).unionAll(
-        canon.select(F.col("b").alias("z"), F.col("a").alias("n"))
-    )
-    deg = adj.groupBy("z").agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    centers = adj.join(deg.hint("shuffle_hash"), "z")
+    canon = undirected_edges(edges, src, dst)
+    adj = mirror(canon)  # u: the common-neighbor center z, v: its neighbor
+    deg = adj.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("deg"))
+    centers = adj.join(deg.hint("shuffle_hash"), "u")
     if max_deg is not None:
         centers = centers.where(F.col("deg") <= int(max_deg))
-    left = centers.select("z", F.col("n").alias("x"), "deg")
-    right = centers.select("z", F.col("n").alias("y"))
+    left = centers.select("u", F.col("v").alias("x"), "deg")
+    right = centers.select("u", F.col("v").alias("y"))
     wedges = (
-        left.join(right.hint("shuffle_hash"), "z")
+        left.join(right.hint("shuffle_hash"), "u")
         .where(F.col("x") < F.col("y"))
         .select(
             "x", "y",
@@ -964,20 +910,9 @@ def degree_assortativity(
     Returns one row (n_edges, r_fp); NULL r_fp for degree-regular
     graphs (denominator 0).
     """
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    adj = canon.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        canon.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = adj.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
+    canon = undirected_edges(edges, src, dst)
+    adj = mirror(canon)
+    deg = _degrees(canon, "deg")
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     hydrated = adj.join(du.hint("shuffle_hash"), "u").join(

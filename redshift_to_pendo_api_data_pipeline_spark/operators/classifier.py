@@ -11,7 +11,7 @@ Everything is JVM column algebra — the full-batch gradient per epoch is
 two linear shuffles (doc-key margin agg, feat-key gradient agg) with the
 current weights broadcast; there is NO Python in the loop and the driver
 never holds the weight vector (it lives as a (feat, w) relation,
-localCheckpoint-ed per epoch like connected_components rounds).
+localCheckpoint-ed per epoch like connected_components_star rounds).
 
 At 100 TB: feature hashing bounds the weight relation at `dim` rows
 (2^15 by default — broadcastable by construction, independent of corpus

@@ -86,8 +86,9 @@ def neardup_stage(text_col: str, id_col: str, stage_dir: str, threshold: float =
     survives). Pair-based removal — a chain A~B~C keeps A and drops B, C
     whenever B/C pair directly with a lower id; for exact component-wise
     dedup use ``dedup.connected_components`` + ``cluster_representatives``
-    (heavier: iterative). Signatures stage under ``stage_dir`` and are
-    reusable by later runs (stage-once/probe-many)."""
+    (heavier: a union-find or star-contraction pass). Signatures stage
+    under ``stage_dir`` and are reusable by later runs
+    (stage-once/probe-many)."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
         minhash_dedup_pairs_staged,
     )

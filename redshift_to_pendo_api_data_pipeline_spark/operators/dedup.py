@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
+from redshift_to_pendo_api_data_pipeline_spark.operators.basket import mirror, undirected_edges
 from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
 
 
@@ -388,34 +389,32 @@ def simhash_dedup_pairs(
 
 def connected_components(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
-    max_iter: int = 20,
     max_driver_edges: int = 5_000_000,
 ) -> DataFrame:
     """(node, cluster_id) for every node in `pairs`, where cluster_id is
     the minimum node id of its connected component — turns near-dup PAIRS
     into dedup GROUPS (keep cluster_id, drop the rest).
 
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; converges in
-    O(graph diameter) rounds (near-dup clusters are dense, so typically
-    2-3). Each round is one self-join + groupBy keyed on node id —
-    hash-partitioned, map-side-combined min; `localCheckpoint` truncates
-    the lineage so round N's plan doesn't replay rounds 1..N-1 (the
-    classic iterative-algorithm trap). Terminates early when a round
-    changes nothing.
+    Two paths, chosen by the shared ``within_driver_bound`` probe (the
+    ``batch_ivf_topk`` routing pattern):
 
-    Small-graph crossover (the ``batch_ivf_topk`` routing pattern):
-    a graph of <= ``max_driver_edges`` distinct UNDIRECTED edges —
-    probed and transferred in canonical (least, greatest) form, each
-    edge once, via Arrow as two flat columns (~80 MB of longs at the
-    default; the pair graph a VERIFIED near-dup stage emits is
-    pairs-that-passed-a-threshold, orders of magnitude below the
-    corpus) — resolves with union-find on the driver: the iterative
-    loop's per-round job latency (profiled: ~6 s of pure scheduling
-    for an 84k-edge graph) is the wrong tool below the crossover.
-    Both paths return identical (node, min-member cluster_id) rows —
-    pinned by test — and the probe costs ``limit(cap+1).count()`` on
-    the materialized canonical relation, never a full count."""
+    - a graph of <= ``max_driver_edges`` distinct UNDIRECTED edges —
+      probed and transferred in canonical (least, greatest) form, each
+      edge once, via Arrow as two flat columns (~80 MB of longs at the
+      default; the pair graph a VERIFIED near-dup stage emits is
+      pairs-that-passed-a-threshold, orders of magnitude below the
+      corpus) — resolves with union-find on the driver: a distributed
+      loop's per-round job latency is the wrong tool below the
+      crossover;
+    - a larger graph runs ``connected_components_star``, the
+      large-star/small-star contraction, whose round count does not
+      grow with the graph diameter.
+
+    Both paths return identical (node, min-member cluster_id) rows for
+    the same node set (a node seen only in a self-loop is its own
+    cluster) — pinned by test — and the probe costs
+    ``limit(cap+1).count()`` on the materialized canonical relation,
+    never a full count."""
     # materialize the directed pairs BEFORE any reuse: both the
     # canonicalization and (in the large case) the mirror re-consume
     # the relation, which would run the (expensive) upstream
@@ -482,52 +481,7 @@ def connected_components(
             ]),
         )
 
-    edges = undirected.union(
-        undirected.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
-        )
-    ).distinct().localCheckpoint()
-
-    labels = (
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint()
-    )
-    def _prop(lbl: DataFrame) -> DataFrame:
-        """One min-label step; extra columns on `lbl` ride through."""
-        neigh = (
-            edges.join(
-                lbl.select("node", "label"),
-                edges["dst"] == F.col("node"),
-            )
-            .groupBy("src").agg(F.min("label").alias("nlabel"))
-        )
-        carried = [c for c in lbl.columns if c not in ("label",)]
-        return lbl.join(neigh, lbl["node"] == neigh["src"], "left").select(
-            *carried,
-            F.least(F.col("label"), F.coalesce("nlabel", "label"))
-            .alias("label"),
-        )
-
-    # TWO propagation steps per checkpointed round: the loop's wall
-    # cost on small graphs is per-JOB scheduling (plan + stage launch),
-    # not compute — fusing two monotone steps into one materialization
-    # halves the job count and reaches the same unique fixpoint (min
-    # label per component). The change flag rides the same plan
-    # (computed against the label BEFORE the double step), so the
-    # convergence check is a narrow count over checkpointed blocks.
-    for _ in range(max_iter):
-        two = _prop(_prop(labels.withColumn("__old", F.col("label"))))
-        new_labels = two.select(
-            "node",
-            "label",
-            (F.col("label") != F.col("__old")).alias("__chg"),
-        ).localCheckpoint()
-        changed = new_labels.where(F.col("__chg")).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    return labels.select(F.col("node"), F.col("label").alias("cluster_id"))
+    return connected_components_star(undirected, "src", "dst")
 
 
 # -------------------------------------------------- decontamination
@@ -1241,12 +1195,11 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al., 'Connected Components in MapReduce and Beyond') —
-    the scale-alternative to ``connected_components``' min-label
-    propagation: label propagation needs O(graph diameter) rounds
-    (fine for dense near-dup clusters, diameter 2–3; fatal for chain-
-    shaped graphs — a path of 1M nodes is 1M rounds), while the star
-    operations contract every component to a star rooted at its
-    minimum in O(log²) rounds regardless of diameter.
+    ``connected_components``' path for graphs over the driver cap. A
+    label-propagation loop needs O(graph diameter) rounds (a path of 1M
+    nodes is 1M rounds); the star operations contract every component
+    to a star rooted at its minimum in O(log²) rounds regardless of
+    diameter.
 
     Per round (each one groupBy + a projection):
       large-star: every node attaches its STRICTLY-GREATER neighbors
@@ -1258,62 +1211,37 @@ def connected_components_star(
     stars); convergence is detected by an exact anti-join emptiness
     check (count equality alone can miss a same-size rewiring), and
     ``localCheckpoint`` truncates lineage per round. Output matches
-    ``connected_components``: (node, cluster_id = component minimum) —
-    property-tested equal on random graphs.
+    ``connected_components``: (node, cluster_id = component minimum)
+    for every node of ``pairs``, a node seen only in a self-loop being
+    its own cluster — property-tested equal on random graphs.
     """
-    e = (
-        pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("a"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    # pinned once: the edge loop and the final node set both read it
+    pairs = pairs.select(
+        F.col(id_a).alias("a"), F.col(id_b).alias("b")
+    ).localCheckpoint()
+    e = undirected_edges(pairs, "a", "b")
     for _ in range(max_iter):
         # ---- large-star: (v, m_u) for v in N(u), v > u
-        bid = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
+        bid = mirror(e)
         m = bid.groupBy("u").agg(F.min("v").alias("__mv")).select(
             "u", F.least("__mv", "u").alias("m")
         )
-        large = (
-            bid.join(m.hint("shuffle_hash"), "u")
-            .where(F.col("v") > F.col("u"))
-            .select(
-                F.least("v", "m").alias("a"),
-                F.greatest("v", "m").alias("b"),
-            )
-            .where(F.col("a") != F.col("b"))
-            .distinct()
+        large = undirected_edges(
+            bid.join(m.hint("shuffle_hash"), "u").where(F.col("v") > F.col("u")),
+            "v", "m",
         )
         # ---- small-star: group u over its <= neighbors; attach them
         # (and u) to the minimum of the group
-        bid2 = large.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).unionAll(large.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        lesser = bid2.where(F.col("v") < F.col("u"))
+        lesser = mirror(large).where(F.col("v") < F.col("u"))
         ms = lesser.groupBy("u").agg(F.min("v").alias("m"))
-        attach_leaves = (
-            lesser.join(ms.hint("shuffle_hash"), "u")
-            .select(
-                F.least("v", "m").alias("a"),
-                F.greatest("v", "m").alias("b"),
-            )
-        )
-        attach_self = ms.select(
-            F.col("m").alias("a"), F.col("u").alias("b")
-        )
+        attach = lesser.join(ms.hint("shuffle_hash"), "u").select("v", "m")
         # lazy checkpoint: the convergence probe right below is the
         # round's first action and materializes the blocks; an eager
         # pin only added a third job per round (r11)
-        nxt = (
-            attach_leaves.unionByName(attach_self)
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
+        nxt = undirected_edges(
+            attach.unionByName(ms.select(F.col("u").alias("v"), "m")),
+            "v", "m",
+        ).localCheckpoint(eager=False)
         # ONE symmetric-difference probe instead of two one-sided
         # anti-join jobs (r11): full-outer on the canonical edge key,
         # any row with either side missing means the edge sets differ.
@@ -1330,14 +1258,15 @@ def connected_components_star(
         e = nxt
         if not changed:
             break
-    labels_nonroot = e.select(
-        F.col("b").alias("node"), F.col("a").alias("cluster_id")
-    )
-    labels_root = e.select(F.col("a").alias("node")).distinct().select(
-        "node", F.col("node").alias("cluster_id")
-    )
-    return labels_nonroot.unionByName(labels_root).groupBy("node").agg(
-        F.min("cluster_id").alias("cluster_id")
+    # every node of `pairs` labels itself; a star leaf also takes its
+    # root, the smaller of the two
+    return (
+        e.select(F.col("b").alias("node"), F.col("a").alias("cluster_id"))
+        .unionByName(mirror(pairs).select(
+            F.col("u").alias("node"), F.col("u").alias("cluster_id")
+        ))
+        .groupBy("node")
+        .agg(F.min("cluster_id").alias("cluster_id"))
     )
 
 

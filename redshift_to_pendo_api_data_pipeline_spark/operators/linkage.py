@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.operators.analytics import global_ranks
+from redshift_to_pendo_api_data_pipeline_spark.operators.basket import undirected_edges
 
 
 def sorted_neighborhood_pairs(
@@ -469,16 +470,9 @@ def blocking_quality(
     Returns one row: (n_records, n_possible, n_candidates, n_true,
     n_caught, reduction_ratio_fp, pair_completeness_fp).
     """
-    def canon(df):
-        return df.select(
-            F.least(F.col(a_col), F.col(b_col)).alias("__a"),
-            F.greatest(F.col(a_col), F.col(b_col)).alias("__b"),
-        ).where(F.col("__a") != F.col("__b")).distinct()
-
-    cand = canon(cand_pairs)
-    true = canon(true_pairs)
-    caught = true.join(cand.hint("shuffle_hash"), ["__a", "__b"],
-                       "left_semi")
+    cand = undirected_edges(cand_pairs, a_col, b_col)
+    true = undirected_edges(true_pairs, a_col, b_col)
+    caught = true.join(cand.hint("shuffle_hash"), ["a", "b"], "left_semi")
     counts = (
         cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates"))
         .crossJoin(F.broadcast(

@@ -23,7 +23,8 @@ satisfy:
 4. **Cheap probe** — size is probed with ``limit(cap+1).count()``,
    O(cap) rows regardless of relation size, never a full count().
 
-Sites: ``dedup.connected_components`` (union-find under the edge cap),
+Sites: ``dedup.connected_components`` (union-find under the edge cap,
+star contraction above it),
 ``sampling.kcenter_select`` (greedy loop under the vector cap),
 ``streaming.ann_bridge.batch_ivf_topk`` (query matmul under the query
 cap).

@@ -191,17 +191,18 @@ def test_redact_pii_scrubs_and_counts(spark):
 
 
 def test_connected_components_clusters_pairs(spark):
-    """Chain 1-2-3 merges into one cluster (transitivity, needs >1
-    propagation round); 10-11 stays separate; cluster id = min member."""
+    """Chain 1-2-3 merges into one cluster (transitivity); 10-11 stays
+    separate; a node seen only in a self-loop (7) is its own cluster;
+    cluster id = min member."""
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (5, 3)], "id_a long, id_b long"
+        [(1, 2), (2, 3), (10, 11), (5, 3), (7, 7)], "id_a long, id_b long"
     )
     out = {r["node"]: r["cluster_id"]
            for r in D.connected_components(pairs).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 5: 1, 10: 10, 11: 10}
+    assert out == {1: 1, 2: 1, 3: 1, 5: 1, 7: 7, 10: 10, 11: 10}
     # crossover contract: the driver union-find (small graphs) and the
-    # distributed min-label loop (max_driver_edges=0 forces it) return
-    # identical rows — same schema, same min-member cluster ids
+    # distributed star contraction (max_driver_edges=0 forces it)
+    # return identical rows — same node set, same min-member cluster ids
     dist = {r["node"]: r["cluster_id"]
             for r in D.connected_components(
                 pairs, max_driver_edges=0).collect()}
@@ -1279,6 +1280,7 @@ def test_star_cc_long_chain_converges(spark):
     # a 60-node path: diameter 59 — label propagation's worst case is
     # exactly what the star contraction exists for
     from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
+        connected_components,
         connected_components_star,
     )
 
@@ -1288,3 +1290,7 @@ def test_star_cc_long_chain_converges(spark):
     got = {r["node"]: r["cluster_id"]
            for r in connected_components_star(df, max_iter=12).collect()}
     assert set(got.values()) == {0} and len(got) == 61
+    # the over-cap path of connected_components converges on it too
+    over_cap = {r["node"]: r["cluster_id"] for r in
+                connected_components(df, max_driver_edges=0).collect()}
+    assert set(over_cap.values()) == {0} and len(over_cap) == 61

@@ -315,6 +315,12 @@ def test_k_core_peels_cascade(spark):
             adj[a].add(b)
             adj[b].add(a)
     assert all(len(adj[n]) >= 2 for n in core2)
+    # a 110-node path has an empty 2-core; each peel only trims the
+    # two end nodes, so this needs ~55 rounds to reach the fixpoint
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(109)], ["src", "dst"]
+    )
+    assert k_core(path, 2).count() == 0
 
 
 def test_consistent_sharding_minimal_movement(spark, sf_dir):

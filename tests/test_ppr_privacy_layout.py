@@ -1,6 +1,8 @@
 """Unit tests for round-7 session-6 batch 6: personalized PageRank,
 t-closeness EMD, min-max clustering depth."""
 
+import pytest
+
 from redshift_to_pendo_api_data_pipeline_spark.operators.basket import (
     personalized_pagerank,
 )
@@ -29,6 +31,9 @@ def test_ppr_mass_concentrates_near_seed(spark):
     assert out[1] > 0
     # total mass stays bounded by the initial mass (truncation only loses)
     assert sum(out.values()) <= 1_000_000_000_000
+    # an empty seed list has no teleport target
+    with pytest.raises(ValueError):
+        personalized_pagerank(edges, [], n_iter=3)
 
 
 def test_t_closeness_skewed_group_scores_higher(spark):
