@@ -2658,8 +2658,11 @@ def q_c4_line_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     words chunk into 6-word lines; line (doc_id*31+i) %% 4 == 0 loses
     its terminal '.', %% 7 == 0 gains a 'javascript ' prefix, and doc_id
     %% 29 == 0 docs carry 'lorem ipsum' in line 0 — every rule has real
-    attrition. Zero shuffles (pure array algebra); the oracle
-    re-derives lines and every gate in SQL."""
+    attrition. Two exchanges: the doc_id width pin below and the
+    orderBy's range exchange. Catalyst pushes the document gate (and
+    with it the whole line pass) below the width pin into the scan
+    stage (SCALE.md §11). The oracle re-derives lines and every gate in
+    SQL."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.curation import (
         c4_line_filters,
     )

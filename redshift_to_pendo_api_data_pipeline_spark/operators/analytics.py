@@ -973,15 +973,8 @@ def rfm_segments(
     the (r, f, m) segment grid with customer counts and segment spend.
 
     Scale: the orders relation collapses to customer cardinality in ONE
-    map-side-combined groupBy, and the collapsed relation is
-    localCheckpoint-ed BEFORE tiling — each `global_ranks` call plans
-    two consumers (range-partitioned data + per-partition counts), so
-    three chained tiles over a lazy lineage would re-derive the
-    corpus-sized scan+agg up to 16 times (measured in the plan dump);
-    the checkpoint pins the single corpus pass and the six consumers
-    read the customer-sized materialization. The reference date is a
-    1-row broadcast scalar (Q11 shape). The final grid is bounded at
-    n^3 rows."""
+    map-side-combined groupBy. The reference date is a 1-row broadcast
+    scalar (Q11 shape). The final grid is bounded at n^3 rows."""
     base = orders.groupBy(F.col(cust_col).alias("cust")).agg(
         F.max(date_col).alias("__last"),
         F.count(F.lit(1)).alias("frequency"),
@@ -996,7 +989,6 @@ def rfm_segments(
             "recency_days", F.datediff("__ref", "__last").cast("int")
         )
         .drop("__last", "__ref")
-        .localCheckpoint()
     )
     scored = with_ntile(
         base, [F.col("recency_days").asc(), F.col("cust").asc()], n, "r"
@@ -1505,6 +1497,28 @@ def concentration_hhi(
     )
 
 
+def _range_pinned(df: DataFrame, sort_cols: list) -> DataFrame:
+    """``df`` range-partitioned on ``sort_cols`` and tagged with its
+    partition id ``__pid``, under a lazy ``localCheckpoint`` — the
+    shared first step of ``global_prefix_sum`` and
+    ``global_prefix_max_excl``.
+
+    Correctness pin (NON-EAGER since r11 — see global_ranks): both the
+    window branch and the totals branch key on spark_partition_id;
+    without the pin each branch can re-materialize the range Exchange
+    with independently re-SAMPLED boundaries (sampling reads upstream
+    shuffle output whose fetch order is nondeterministic), making the
+    two branches disagree about partition membership. The shared
+    checkpoint RDD is the pin; eager materialization is not required
+    for it."""
+    spark = df.sparkSession
+    nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
+    return (
+        df.repartitionByRange(nparts, *sort_cols)
+        .withColumn("__pid", F.spark_partition_id())
+    ).localCheckpoint(eager=False)
+
+
 def global_prefix_sum(
     df: DataFrame, sort_cols: list, value_col: str,
     prefix_name: str = "cum_value", keep_total: bool = False,
@@ -1526,20 +1540,7 @@ def global_prefix_sum(
     must already be an exact (integer/decimal) type — a float running
     sum is partition-order dependent and can never hash cross-engine.
     """
-    spark = df.sparkSession
-    nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
-    # localCheckpoint pin (NON-EAGER since r11 — see global_ranks):
-    # both the window branch and the totals branch key on
-    # spark_partition_id; without the pin each branch can
-    # re-materialize the range Exchange with independently re-SAMPLED
-    # boundaries (sampling reads upstream shuffle output whose fetch
-    # order is nondeterministic), making the two branches disagree
-    # about partition membership. The shared checkpoint RDD is the
-    # pin; eager materialization is not required for it.
-    ranged = (
-        df.repartitionByRange(nparts, *sort_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    ).localCheckpoint(eager=False)
+    ranged = _range_pinned(df, sort_cols)
     w_local = (
         Window.partitionBy("__pid")
         .orderBy(*sort_cols)
@@ -2057,20 +2058,7 @@ def global_prefix_max_excl(
     ``prev_max = greatest(partition_prefix_max, local_running_max)``
     (greatest skips NULLs; the global first row gets NULL — no
     predecessor). ``sort_cols`` must be a total order."""
-    spark = df.sparkSession
-    nparts = max(int(spark.conf.get("spark.sql.shuffle.partitions")), 1)
-    # localCheckpoint pin (NON-EAGER since r11 — see global_ranks):
-    # both the window branch and the totals branch key on
-    # spark_partition_id; without the pin each branch can
-    # re-materialize the range Exchange with independently re-SAMPLED
-    # boundaries (sampling reads upstream shuffle output whose fetch
-    # order is nondeterministic), making the two branches disagree
-    # about partition membership. The shared checkpoint RDD is the
-    # pin; eager materialization is not required for it.
-    ranged = (
-        df.repartitionByRange(nparts, *sort_cols)
-        .withColumn("__pid", F.spark_partition_id())
-    ).localCheckpoint(eager=False)
+    ranged = _range_pinned(df, sort_cols)
     w_local = (
         Window.partitionBy("__pid")
         .orderBy(*sort_cols)
@@ -2274,16 +2262,11 @@ def interval_concurrency_peak(
     Intervals with end <= start are dropped as degenerate (a data bug
     surfaced in n_dropped, not silently counted). Output one row:
     n_intervals, n_dropped, peak_concurrency, first_peak_t."""
-    # r11: base feeds the n_intervals count AND (filtered) both union
-    # legs of the endpoint stream — unpinned, the caller's upstream
-    # join/groupBy lineage re-ran per consumer (profiled: the lineitem
-    # per-order groupBy map stage executed twice per run). One narrow
-    # (id, start, end) materialization serves all three.
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(start_col).cast("long").alias("__s"),
         F.col(end_col).cast("long").alias("__e"),
-    ).localCheckpoint(eager=False)
+    )
     valid = base.where(F.col("__e") > F.col("__s"))
     n_all = base.agg(F.count(F.lit(1)).cast("long").alias("n_intervals"))
     n_ok = valid.agg(F.count(F.lit(1)).cast("long").alias("__n_ok"))

@@ -696,14 +696,9 @@ def hitrate_at_k(
     recs = related_items(edges, n_train, per_item_k=per_item_k).select(
         "antecedent", "consequent"
     )
-    # the distinct test relation feeds FOUR plan branches (sizes,
-    # prediction join, hit semi-join, eligibility semi-join) —
-    # materialize it once instead of re-running the scan+distinct per
-    # branch (r11 profile: the same 1.2 MB-shuffle distinct stage ran
-    # 3x per execution)
     ti = test_baskets.select(
         F.col(basket_col).alias("b"), F.col(item_col).alias("i")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct()
     sizes = ti.groupBy("b").agg(F.count(F.lit(1)).alias("sz"))
     eligible = sizes.where(F.col("sz") >= 2).select("b")
     preds = ti.join(recs, ti["i"] == recs["antecedent"]).select(

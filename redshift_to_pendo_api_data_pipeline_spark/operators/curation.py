@@ -338,17 +338,10 @@ def c4_line_filters(
         F.filter("__lines", _line_ok).alias("__kept"),
         "__poisoned",
     )
-    from redshift_to_pendo_api_data_pipeline_spark.operators.routing import (
-        pin_filter,
-    )
-
     return (
-        # pin_filter: without it the pushed-down condition re-inlines
-        # the full __kept line pass below the scan-side exchange and
-        # the document filter runs the line rules twice (r11 profile)
-        base.where(pin_filter(
+        base.where(
             (~F.col("__poisoned")) & (F.size("__kept") >= int(min_lines))
-        ))
+        )
         .select(
             F.col(id_col),
             F.array_join("__kept", line_sep).alias(text_col),

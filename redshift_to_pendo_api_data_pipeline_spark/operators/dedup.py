@@ -415,21 +415,14 @@ def connected_components(
     cluster) — pinned by test — and the probe costs
     ``limit(cap+1).count()`` on the materialized canonical relation,
     never a full count."""
-    # materialize the directed pairs BEFORE any reuse: both the
-    # canonicalization and (in the large case) the mirror re-consume
-    # the relation, which would run the (expensive) upstream
-    # pair-generation twice otherwise
-    directed = pairs.select(
-        F.col(id_a).alias("src"), F.col(id_b).alias("dst")
-    ).localCheckpoint()
     # canonical UNDIRECTED edges (least, greatest) — each undirected
     # edge exactly once, so the crossover cap counts what the docstring
     # says it counts (the pre-fix probe counted the MIRRORED directed
     # relation, silently halving the effective capacity)
-    undirected = directed.select(
-        F.least("src", "dst").alias("src"),
-        F.greatest("src", "dst").alias("dst"),
-    ).distinct().localCheckpoint()
+    undirected = pairs.select(
+        F.least(id_a, id_b).alias("src"),
+        F.greatest(id_a, id_b).alias("dst"),
+    ).distinct().localCheckpoint()  # probe + transfer read it once
 
     from redshift_to_pendo_api_data_pipeline_spark.operators.routing import (
         within_driver_bound,
@@ -1213,7 +1206,9 @@ def connected_components_star(
     ``localCheckpoint`` truncates lineage per round. Output matches
     ``connected_components``: (node, cluster_id = component minimum)
     for every node of ``pairs``, a node seen only in a self-loop being
-    its own cluster — property-tested equal on random graphs.
+    its own cluster — property-tested equal on random graphs. Raises
+    ``RuntimeError`` if the edge set still changes in round ``max_iter``
+    (a partial labelling is never returned).
     """
     # pinned once: the edge loop and the final node set both read it
     pairs = pairs.select(
@@ -1258,6 +1253,11 @@ def connected_components_star(
         e = nxt
         if not changed:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star: edge set still changing after "
+            f"{max_iter} rounds"
+        )
     # every node of `pairs` labels itself; a star leaf also takes its
     # root, the smaller of the two
     return (

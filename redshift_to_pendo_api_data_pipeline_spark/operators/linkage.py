@@ -220,13 +220,11 @@ def candidate_keys(
     columns) before the distinct shuffles; shuffle volume was up to
     21 corpora and the whole map side ran inside the scan stage):
 
-    1. Pin the column projection ONCE (``localCheckpoint``), spread to
-       full parallelism first when the scan arrives under-partitioned
-       (a small-file local fixture scans as ONE task; the Expand then
-       ran single-threaded — the measured 6x cost was this, not the
-       agg). At warehouse scale the scan keeps its natural
-       partitioning and the pin costs one projection write, paid back
-       by the second pass.
+    1. Project the columns, spread to full parallelism when the scan
+       arrives under-partitioned (a small-file local fixture scans as
+       ONE task; the Expand then ran single-threaded — the measured 6x
+       cost was this, not the agg). At warehouse scale the scan keeps
+       its natural partitioning.
     2. SINGLES pass: one (gid, md5-digest) explode + two-level
        dedup-count — no multi-countDistinct agg, so no Catalyst
        distinct-rewrite (measured at ~0.2s of DRIVER PLANNING per
@@ -239,7 +237,7 @@ def candidate_keys(
        table with k key columns this deletes k*(w-1) corpus-sized
        distinct shuffles, the dominant ones (near-unique combos get
        no map-side dedup, so each would shuffle ~a full corpus).
-    4. REMAINING-pairs pass: same explode shape over the pinned base,
+    4. REMAINING-pairs pass: same explode shape over the base,
        sized to the surviving pairs only (sub-key combos dedup
        map-side by definition of being sub-key, so this shuffle is
        the cheap one).
@@ -262,7 +260,6 @@ def candidate_keys(
     target_par = spark.sparkContext.defaultParallelism
     if base.rdd.getNumPartitions() < target_par:
         base = base.repartition(target_par)
-    base = base.localCheckpoint(eager=True)
 
     def _digest(cs: list[str]):
         # 128-bit tuple digest as a struct of two independently seeded

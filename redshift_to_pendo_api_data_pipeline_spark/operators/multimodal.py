@@ -608,15 +608,6 @@ def dhash_neardup_pairs(
         n_bands = max_hamming + 1
     width = -(-63 // n_bands)  # ceil: bands cover all 63 hash bits
     mask = (1 << width) - 1
-    # materialize (id, dhash) ONCE before the self-join: both join
-    # sides otherwise re-execute the full upstream lineage — for the
-    # audio/image callers that lineage is the codec mapInPandas chain,
-    # so every fingerprint was decoded and hashed TWICE (profiled at
-    # 2x the query's total CPU). The checkpointed relation is two longs
-    # per row; the banding explode stays lazy on top of it.
-    hashes = hashes.select(
-        F.col(id_col), F.col("dhash")
-    ).localCheckpoint(eager=True)
     bands = hashes.select(
         F.col(id_col).alias("__id"),
         F.col("dhash"),

@@ -109,27 +109,3 @@ def local_df(spark, rows, schema) -> DataFrame:
     if out.schema != schema:
         out = spark.createDataFrame(table, schema=schema)
     return out
-
-
-def pin_filter(cond):
-    """Pushdown pin for a filter over EXPENSIVE derived columns.
-
-    PushPredicateThroughNonJoin inlines projected aliases into a
-    pushed-down condition with no cost check: a document filter
-    referencing a heavy derived column (an F.filter over split lines,
-    a per-line rlike) gets the WHOLE expression tree duplicated below
-    every Project/Exchange down to the scan — the duplicate runs
-    outside the consumer stage's subexpression elimination, and below
-    a width-pinning exchange it runs on the narrow pre-shuffle side
-    (r11 profile: c4_line_filters paid its full line pass twice, one
-    copy single-task). AND-ing a non-deterministic always-true guard
-    pins the filter where it was written; the condition's VALUE is
-    unchanged for every row.
-
-    Use only on conditions whose referenced columns are expensive to
-    recompute — a pinned filter also gives up legitimate pushdown
-    (e.g. below a join) for everything AND-ed with it.
-    """
-    from pyspark.sql import functions as F
-
-    return cond & (F.monotonically_increasing_id() >= F.lit(0))

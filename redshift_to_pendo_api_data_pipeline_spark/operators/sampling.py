@@ -650,14 +650,10 @@ def kcenter_select(
     (``max_driver_vecs=0`` forces the distributed loop)."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.similarity import _dot
 
-    # pin the projection BEFORE the k-pass loop (r8, r7 verdict #6):
-    # each greedy pass re-consumed the full lineage otherwise, reading
-    # the parquet k times; checkpointed, the k passes are
-    # memory-resident against one materialization.
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
-    ).localCheckpoint(eager=True)
+    )
 
     from redshift_to_pendo_api_data_pipeline_spark.operators.routing import (
         local_df,

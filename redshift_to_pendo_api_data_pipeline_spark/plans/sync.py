@@ -120,8 +120,8 @@ def run_sync(
 
     obs = Observation(f"sync:{stream.name}")
     shaped = shaped.observe(obs, F.count(F.lit(1)).alias("record_count"))
-    # Cache: the same filtered set feeds the sink, the count and the new
-    # bookmark — without this the source would be scanned three times.
+    # Correctness pin: the sink, the count and the new bookmark must read
+    # one row set, or a bookmark can pass rows the sink never saw.
     shaped = shaped.cache()
     try:
         n = sink(shaped)

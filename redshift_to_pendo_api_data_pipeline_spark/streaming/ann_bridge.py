@@ -247,11 +247,12 @@ def streaming_ann_topk(
     spark = stream_df.sparkSession
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # foreachBatch re-evaluates the source per action; persist so
-        # batch_ivf_topk's bounded crossover probe + the chosen path
-        # read the batch once. Routing lives in batch_ivf_topk itself:
-        # micro-batches over max_driver_queries rows take the join-based
-        # distributed path instead of collecting to the driver.
+        # Correctness pin: foreachBatch re-evaluates the source per
+        # action; batch_ivf_topk's crossover probe and the chosen path
+        # must read one copy of the batch. Routing lives in
+        # batch_ivf_topk itself: micro-batches over max_driver_queries
+        # rows take the join-based distributed path instead of
+        # collecting to the driver.
         batch_df.persist()
         try:
             out = batch_ivf_topk(

@@ -1,5 +1,6 @@
 """Dedup suite + text analysis + similarity search."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.operators import dedup as D
@@ -1290,6 +1291,9 @@ def test_star_cc_long_chain_converges(spark):
     got = {r["node"]: r["cluster_id"]
            for r in connected_components_star(df, max_iter=12).collect()}
     assert set(got.values()) == {0} and len(got) == 61
+    # too few rounds to converge: an error, not a partial labelling
+    with pytest.raises(RuntimeError, match="3 rounds"):
+        connected_components_star(df, max_iter=3)
     # the over-cap path of connected_components converges on it too
     over_cap = {r["node"]: r["cluster_id"] for r in
                 connected_components(df, max_driver_edges=0).collect()}

@@ -86,6 +86,7 @@ def test_prefix_family_lazy_pin_is_deterministic(spark):
     from pyspark.sql import functions as F
 
     from redshift_to_pendo_api_data_pipeline_spark.operators.analytics import (
+        global_prefix_max_excl,
         global_prefix_sum,
         global_ranks,
     )
@@ -94,7 +95,7 @@ def test_prefix_family_lazy_pin_is_deterministic(spark):
     up = li.groupBy("l_orderkey").agg(
         F.sum((F.col("l_quantity") * 100).cast("long")).alias("v")
     )
-    seen_r, seen_p = set(), set()
+    seen_r, seen_p, seen_m = set(), set(), set()
     for _ in range(3):
         r = global_ranks(
             up, [F.col("v").desc(), F.col("l_orderkey").asc()],
@@ -113,5 +114,15 @@ def test_prefix_family_lazy_pin_is_deterministic(spark):
         seen_p.add(tuple(
             p.selectExpr("sum(c * l_orderkey)", "max(__total)").collect()[0]
         ))
+        m = global_prefix_max_excl(
+            up, [F.col("v").asc(), F.col("l_orderkey").asc()], "v",
+            out_name="pm",
+        )
+        seen_m.add(tuple(
+            m.selectExpr("sum(pm * l_orderkey)", "count(pm)").collect()[0]
+        ))
     assert len(seen_r) == 1, "global_ranks branches disagreed under lazy pin"
     assert len(seen_p) == 1, "global_prefix_sum branches disagreed under lazy pin"
+    assert len(seen_m) == 1, (
+        "global_prefix_max_excl branches disagreed under lazy pin"
+    )
