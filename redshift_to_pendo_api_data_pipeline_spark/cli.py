@@ -535,9 +535,11 @@ def cmd_reconcile(cfg: dict) -> int:
 
 def cmd_mine(cfg: dict) -> int:
     """Constraint mining over synced parquet tables: candidate keys
-    (single + pair uniqueness, linkage.candidate_keys — one scan per
-    table via a multi-count-distinct agg) and inclusion dependencies
-    (linkage.inclusion_dependencies — mined FKs with containment ppm).
+    (single + pair uniqueness, linkage.candidate_keys — up to three
+    scans per table: the row count, a singles pass and a
+    remaining-pairs pass, each a digest explode + dedup-count) and
+    inclusion dependencies (linkage.inclusion_dependencies — mined
+    FKs with containment ppm).
     The discovery step the reference reads from information_schema
     (tap-redshift/src/discover.py) but a constraint-free warehouse
     cannot provide — so we mine it from the data itself.

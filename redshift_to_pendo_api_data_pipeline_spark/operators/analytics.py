@@ -2262,11 +2262,15 @@ def interval_concurrency_peak(
     Intervals with end <= start are dropped as degenerate (a data bug
     surfaced in n_dropped, not silently counted). Output one row:
     n_intervals, n_dropped, peak_concurrency, first_peak_t."""
+    # performance pin: base feeds the n_intervals count AND (filtered)
+    # both union legs of the endpoint stream — unpinned, the caller's
+    # upstream join/groupBy lineage re-runs per consumer. One narrow
+    # (id, start, end) materialization serves all three.
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(start_col).cast("long").alias("__s"),
         F.col(end_col).cast("long").alias("__e"),
-    )
+    ).localCheckpoint(eager=False)
     valid = base.where(F.col("__e") > F.col("__s"))
     n_all = base.agg(F.count(F.lit(1)).cast("long").alias("n_intervals"))
     n_ok = valid.agg(F.count(F.lit(1)).cast("long").alias("__n_ok"))

@@ -224,7 +224,10 @@ def candidate_keys(
        arrives under-partitioned (a small-file local fixture scans as
        ONE task; the Expand then ran single-threaded — the measured 6x
        cost was this, not the agg). At warehouse scale the scan keeps
-       its natural partitioning.
+       its natural partitioning. The base is not pinned: the row
+       count, the singles pass and (when pairs survive step 3) the
+       remaining-pairs pass each re-read the source — a pin here did
+       not win its A/B.
     2. SINGLES pass: one (gid, md5-digest) explode + two-level
        dedup-count — no multi-countDistinct agg, so no Catalyst
        distinct-rewrite (measured at ~0.2s of DRIVER PLANNING per
