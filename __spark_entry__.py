@@ -25,7 +25,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from redshift_to_pendo_api_data_pipeline_spark.operators import extract as X
 from redshift_to_pendo_api_data_pipeline_spark.functions import transforms as TR
 from redshift_to_pendo_api_data_pipeline_spark.sources.tables import load_table
-from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
+from redshift_to_pendo_api_data_pipeline_spark.staging import (
+    DEFAULT_ROOT,
+    reusable,
+    stage,
+    stage_dir,
+    stage_parquet,
+)
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -680,7 +686,7 @@ def q_neardup_threshold_sensitivity(spark: SparkSession, sf_dir: str) -> DataFra
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup_pairs_staged(
         docs, "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.5,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.5,
     )
     counts = (
         pairs.select(F.floor(F.col("jaccard") * 20).cast("long").alias("bin"))
@@ -710,7 +716,7 @@ def q_cross_source_dup_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup_pairs_staged(
         docs, "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
     )
     src_a = docs.select(F.col("doc_id").alias("id_a"),
                         F.col("source").alias("sa"))
@@ -813,7 +819,7 @@ def q_strip_exact_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     seeds = staged_substr_seeds(
         docs, "text", "doc_id", 4,
-        f"{_stage_dir(sf_dir)}/substr_seeds_k4.parquet",
+        f"{stage_dir(sf_dir)}/substr_seeds_k4.parquet",
     )
     matches = maximal_duplicated_substrings(
         seeds, k=4, min_len=8, max_occurrences=16
@@ -841,11 +847,11 @@ def q_incremental_substr_matches(
     docs = load_table(spark, sf_dir, "documents")
     new_seeds = staged_substr_seeds(
         docs.where(F.col("source") == "src12"), "text", "doc_id", 4,
-        f"{_stage_dir(sf_dir)}/substr_seeds_new_k4.parquet",
+        f"{stage_dir(sf_dir)}/substr_seeds_new_k4.parquet",
     )
     corpus_seeds = staged_substr_seeds(
         docs.where(F.col("source") != "src12"), "text", "doc_id", 4,
-        f"{_stage_dir(sf_dir)}/substr_seeds_corpus_k4.parquet",
+        f"{stage_dir(sf_dir)}/substr_seeds_corpus_k4.parquet",
     )
     m = incremental_substr_matches(
         new_seeds, corpus_seeds, k=4, min_len=8, max_occurrences=16
@@ -918,8 +924,6 @@ def q_tokenizer_compression_compare(
     like bpe_token_counts/unigram_token_counts/wordpiece_token_counts);
     the corpus side is one word explode + three broadcast mapping
     joins."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
         bpe_segment_words,
         bpe_train,
@@ -927,34 +931,30 @@ def q_tokenizer_compression_compare(
         wordpiece_train,
         words,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
 
     docs = load_table(spark, sf_dir, "documents")
-    reuse = _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-    bpe_path = f"{_stage_dir(sf_dir)}/bpe_word_tokens.parquet"
-    if not (reuse and fs_exists(spark, f"{bpe_path}/_SUCCESS")):
-        stage_parquet(
-            bpe_segment_words(docs, "text",
-                              bpe_train(docs, "text", n_merges=20)),
-            bpe_path,
-        )
-    wp_path = f"{_stage_dir(sf_dir)}/wordpiece_word_tokens.parquet"
-    if not (reuse and fs_exists(spark, f"{wp_path}/_SUCCESS")):
-        stage_parquet(
-            wordpiece_segment_words(
-                docs, "text", wordpiece_train(docs, "text", n_merges=20)
-            ),
-            wp_path,
-        )
+    bpe = stage(
+        spark, f"{stage_dir(sf_dir)}/bpe_word_tokens.parquet",
+        lambda: bpe_segment_words(
+            docs, "text", bpe_train(docs, "text", n_merges=20)
+        ),
+    )
+    wordpiece = stage(
+        spark, f"{stage_dir(sf_dir)}/wordpiece_word_tokens.parquet",
+        lambda: wordpiece_segment_words(
+            docs, "text", wordpiece_train(docs, "text", n_merges=20)
+        ),
+    )
     uni_path, _ = _ensure_unigram_stage(spark, sf_dir)
     corpus_words = docs.select(
         F.explode(words(F.col("text"))).alias("word")
     ).where(F.col("word") != "")
     out = None
-    for name, path in (
-        ("bpe", bpe_path), ("unigram", uni_path), ("wordpiece", wp_path)
+    for name, mapping in (
+        ("bpe", bpe),
+        ("unigram", spark.read.parquet(uni_path)),
+        ("wordpiece", wordpiece),
     ):
-        mapping = spark.read.parquet(path)
         per_word = mapping.groupBy("word").agg(
             F.sum("k").alias("__toks")
         )
@@ -981,23 +981,15 @@ def _ensure_unigram_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     table — so every consumer (token histogram, compression compare,
     cross-entropy scoring) certifies against the same trained model.
     Skipped under stage reuse."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
         unigram_segment_words,
         unigram_train,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
 
     docs = load_table(spark, sf_dir, "documents")
-    map_path = f"{_stage_dir(sf_dir)}/unigram_word_tokens.parquet"
-    pieces_path = f"{_stage_dir(sf_dir)}/unigram_pieces.parquet"
-    reuse = _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-    if not (
-        reuse
-        and fs_exists(spark, f"{map_path}/_SUCCESS")
-        and fs_exists(spark, f"{pieces_path}/_SUCCESS")
-    ):
+    map_path = f"{stage_dir(sf_dir)}/unigram_word_tokens.parquet"
+    pieces_path = f"{stage_dir(sf_dir)}/unigram_pieces.parquet"
+    if not reusable(spark, map_path, pieces_path):
         pieces = unigram_train(docs, "text", vocab_size=200, n_em=2)
         stage_parquet(
             unigram_segment_words(docs, "text", pieces), map_path
@@ -1116,23 +1108,12 @@ def q_exact_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     seeds = staged_substr_seeds(
         docs, "text", "doc_id", 4,
-        f"{_stage_dir(sf_dir)}/substr_seeds_k4.parquet",
+        f"{stage_dir(sf_dir)}/substr_seeds_k4.parquet",
     )
     matches = maximal_duplicated_substrings(
         seeds, k=4, min_len=8, max_occurrences=16
     )
     return substr_dedup_doc_stats(matches)
-
-
-def _stage_dir(sf_dir: str) -> str:
-    """Lake staging area for signature/candidate relations, keyed by the
-    scale-factor directory so concurrent runs at different SF never
-    clobber each other. The oracle SQL reads the sf0.01 staging paths
-    under the DEFAULT root — the only SF the correctness gate runs at;
-    SPARK_GRAFT_STAGE_ROOT redirects bench runs to a cold directory."""
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_dir
-
-    return stage_dir(sf_dir)
 
 
 def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1147,7 +1128,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return minhash_dedup_pairs_staged(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
     )
 
 
@@ -1162,7 +1143,7 @@ def q_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sh = staged_simhash_signatures(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        f"{_stage_dir(sf_dir)}/simhash_sigs.parquet",
+        f"{stage_dir(sf_dir)}/simhash_sigs.parquet",
     )
     return simhash_pairs_from_signatures(sh, max_hamming=3)
 
@@ -1184,7 +1165,7 @@ def q_word_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage the SSJoin index once: four plan branches consume it
     return prefix_filtered_jaccard_pairs(
         docs, "text", "doc_id", "source", 0.5,
-        stage_path=f"{_stage_dir(sf_dir)}/ssjoin_words.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/ssjoin_words.parquet",
     )
 
 
@@ -1202,7 +1183,7 @@ def q_word_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return containment_pairs(
         docs, "text", "doc_id", "source", 0.8,
-        stage_path=f"{_stage_dir(sf_dir)}/ssjoin_words.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/ssjoin_words.parquet",
     )
 
 
@@ -1217,7 +1198,7 @@ def q_version_diff_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink write path AND the diff operator in one hash."""
     from redshift_to_pendo_api_data_pipeline_spark.sink import parquet_sink as PS
 
-    path = f"{_stage_dir(sf_dir)}/versioned_customers.parquet"
+    path = f"{stage_dir(sf_dir)}/versioned_customers.parquet"
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
@@ -1295,9 +1276,10 @@ def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     q = _query_vec(spark, sf_dir)
-    path = f"{_stage_dir(sf_dir)}/ann_lsh_cands.parquet"
-    stage_parquet(lsh_candidates(emb, "embedding", "vec_id", q).select("vec_id"), path)
-    staged = spark.read.parquet(path).join(emb, "vec_id")
+    staged = stage(
+        spark, f"{stage_dir(sf_dir)}/ann_lsh_cands.parquet",
+        lambda: lsh_candidates(emb, "embedding", "vec_id", q).select("vec_id"),
+    ).join(emb, "vec_id")
     return brute_force_topk(staged, "embedding", "vec_id", q, k=20)
 
 
@@ -1314,14 +1296,13 @@ def q_embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     q = _query_vec(spark, sf_dir)
-    path = f"{_stage_dir(sf_dir)}/ann_ivf_cands.parquet"
-    stage_parquet(
-        ivf_candidates(emb, "embedding", "vec_id", q, n_list=16, n_probe=4,
-                       cent_path=f"{_stage_dir(sf_dir)}/ivf_cand_centroids.parquet")
-        .select("vec_id"),
-        path,
-    )
-    staged = spark.read.parquet(path).join(emb, "vec_id")
+    staged = stage(
+        spark, f"{stage_dir(sf_dir)}/ann_ivf_cands.parquet",
+        lambda: ivf_candidates(
+            emb, "embedding", "vec_id", q, n_list=16, n_probe=4,
+            cent_path=f"{stage_dir(sf_dir)}/ivf_cand_centroids.parquet",
+        ).select("vec_id"),
+    ).join(emb, "vec_id")
     return brute_force_topk(staged, "embedding", "vec_id", q, k=20)
 
 
@@ -1341,13 +1322,13 @@ def q_embedding_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     q = _query_vec(spark, sf_dir)
-    stage = _stage_dir(sf_dir)
-    index_path = f"{stage}/ivf_index.parquet"
+    root = stage_dir(sf_dir)
+    index_path = f"{root}/ivf_index.parquet"
     centroids = build_ivf_index(emb, "embedding", "vec_id", index_path, n_list=16)
     probes = nearest_lists(centroids, q, n_probe=4)
     stage_parquet(
         spark.createDataFrame([(int(c),) for c in probes], "cluster int"),
-        f"{stage}/ivf_probes.parquet",
+        f"{root}/ivf_probes.parquet",
     )
     return ivf_topk_persisted(
         spark, index_path, centroids, "embedding", "vec_id", q, k=20, n_probe=4
@@ -1377,8 +1358,8 @@ def q_embedding_ann_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = emb.where(F.col("vec_id") % 4 != 0)
     batch = emb.where(F.col("vec_id") % 4 == 0)
-    stage = _stage_dir(sf_dir)
-    index_path = f"{stage}/ivf_index_appended.parquet"
+    root = stage_dir(sf_dir)
+    index_path = f"{root}/ivf_index_appended.parquet"
     centroids = build_ivf_index(base, "embedding", "vec_id", index_path, n_list=16)
     ivf_index_append(batch, "embedding", "vec_id", index_path, centroids,
                      batch_id="quarter-0")
@@ -1389,7 +1370,7 @@ def q_embedding_ann_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = nearest_lists(centroids, q, n_probe=4)
     stage_parquet(
         spark.createDataFrame([(int(c),) for c in probes], "cluster int"),
-        f"{stage}/ivf_appended_probes.parquet",
+        f"{root}/ivf_appended_probes.parquet",
     )
     return ivf_topk_persisted(
         spark, index_path, centroids, "embedding", "vec_id", q, k=20, n_probe=4
@@ -1418,22 +1399,20 @@ def q_embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    stage = _stage_dir(sf_dir)
+    root = stage_dir(sf_dir)
     books = staged_pq_codebooks(emb, "embedding", "vec_id",
-                                f"{stage}/pq_books.parquet",
+                                f"{root}/pq_books.parquet",
                                 m_sub=4, k_codes=16, n_iter=2)
-    stage_parquet(
-        pq_encode(emb, "embedding", "vec_id", books),
-        f"{stage}/pq_codes.parquet",
+    codes = stage(
+        spark, f"{root}/pq_codes.parquet",
+        lambda: pq_encode(emb, "embedding", "vec_id", books),
     )
     q = _query_vec(spark, sf_dir)
-    stage_parquet(
-        spark.createDataFrame(pq_adc_lut(books, q),
-                              "sub int, code int, score_fp long"),
-        f"{stage}/pq_lut.parquet",
+    lut = stage(
+        spark, f"{root}/pq_lut.parquet",
+        lambda: spark.createDataFrame(pq_adc_lut(books, q),
+                                      "sub int, code int, score_fp long"),
     )
-    codes = spark.read.parquet(f"{stage}/pq_codes.parquet")
-    lut = spark.read.parquet(f"{stage}/pq_lut.parquet")
     return pq_adc_topk(codes, lut, "vec_id", k=20)
 
 
@@ -1449,8 +1428,6 @@ def q_embedding_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     Serving is byte-for-byte the PQ ADC path — posexplode + broadcast
     LUT + integer sum over the staged rotated codes, which is exactly
     what the oracle re-derives in SQL."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.similarity import (
         pq_adc_lut,
         pq_adc_topk,
@@ -1460,20 +1437,13 @@ def q_embedding_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_opq_rotation_fp,
         train_pq_codebooks,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    stage = _stage_dir(sf_dir)
-    codes_path = f"{stage}/opq_codes.parquet"
-    lut_path = f"{stage}/opq_lut.parquet"
-    reuse = _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-    if not (
-        reuse
-        and fs_exists(spark, f"{codes_path}/_SUCCESS")
-        and fs_exists(spark, f"{lut_path}/_SUCCESS")
-    ):
+    root = stage_dir(sf_dir)
+    codes_path = f"{root}/opq_codes.parquet"
+    lut_path = f"{root}/opq_lut.parquet"
+    if not reusable(spark, codes_path, lut_path):
         rot, mean = train_opq_rotation_fp(emb, "embedding", m_sub=4)
         rotated = rotate_vectors_fp(emb, "embedding", "vec_id", rot, mean)
         books = train_pq_codebooks(
@@ -1514,48 +1484,45 @@ def _ivfpq_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    stage = _stage_dir(sf_dir)
+    root = stage_dir(sf_dir)
     centroids = staged_ivf_centroids(emb, "embedding", "vec_id",
-                                     f"{stage}/pq_ivf_centroids.parquet",
+                                     f"{root}/pq_ivf_centroids.parquet",
                                      n_list=16, n_iter=3)
-    assigned = ivf_assign(emb, "embedding", centroids)
-    stage_parquet(
-        assigned.select(
+
+    def _residuals() -> DataFrame:
+        assigned = ivf_assign(emb, "embedding", centroids)
+        return assigned.select(
             "vec_id", "__cluster",
             ivf_residuals(assigned, "embedding", centroids).alias("__res"),
-        ),
-        f"{stage}/pq_ivf_residuals.parquet",
-    )
-    res = spark.read.parquet(f"{stage}/pq_ivf_residuals.parquet")
+        )
+
+    res = stage(spark, f"{root}/pq_ivf_residuals.parquet", _residuals)
     books = staged_pq_codebooks(res, "__res", "vec_id",
-                                f"{stage}/pq_ivf_books.parquet",
+                                f"{root}/pq_ivf_books.parquet",
                                 m_sub=4, k_codes=16, n_iter=2)
-    stage_parquet(
-        pq_encode(res, "__res", "vec_id", books, extra_cols=["__cluster"]),
-        f"{stage}/pq_ivf_codes.parquet",
+    codes = stage(
+        spark, f"{root}/pq_ivf_codes.parquet",
+        lambda: pq_encode(res, "__res", "vec_id", books,
+                          extra_cols=["__cluster"]),
         partition_by="__cluster",
     )
     q = _query_vec(spark, sf_dir)
     probes = nearest_lists(centroids, q, n_probe=4)
     stage_parquet(
         spark.createDataFrame([(int(c),) for c in probes], "cluster int"),
-        f"{stage}/pq_ivf_probes.parquet",
+        f"{root}/pq_ivf_probes.parquet",
     )
-    stage_parquet(
-        spark.createDataFrame(pq_adc_lut(books, q),
-                              "sub int, code int, score_fp long"),
-        f"{stage}/pq_ivf_lut.parquet",
+    lut = stage(
+        spark, f"{root}/pq_ivf_lut.parquet",
+        lambda: spark.createDataFrame(pq_adc_lut(books, q),
+                                      "sub int, code int, score_fp long"),
     )
-    stage_parquet(
-        spark.createDataFrame(pq_cluster_offsets(centroids, q),
-                              "cluster int, offset_fp long"),
-        f"{stage}/pq_ivf_offsets.parquet",
+    offsets = stage(
+        spark, f"{root}/pq_ivf_offsets.parquet",
+        lambda: spark.createDataFrame(pq_cluster_offsets(centroids, q),
+                                      "cluster int, offset_fp long"),
     )
-    codes = spark.read.parquet(f"{stage}/pq_ivf_codes.parquet").where(
-        F.col("__cluster").isin([int(c) for c in probes])
-    )
-    lut = spark.read.parquet(f"{stage}/pq_ivf_lut.parquet")
-    offsets = spark.read.parquet(f"{stage}/pq_ivf_offsets.parquet")
+    codes = codes.where(F.col("__cluster").isin([int(c) for c in probes]))
     cand = ivfpq_adc_topk(codes, lut, offsets, "vec_id", k=100).select("vec_id")
     return brute_force_topk(cand.join(emb, "vec_id"), "embedding", "vec_id",
                             q, k=k)
@@ -1604,19 +1571,18 @@ def q_embedding_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = _query_vec(spark, sf_dir)
     k = 20
-    stage = _stage_dir(sf_dir)
+    root = stage_dir(sf_dir)
     exact = brute_force_topk(emb, "embedding", "vec_id", q, k=k).select("vec_id")
 
     out = []
     for algo, topk in (
         ("lsh", lsh_topk(emb, "embedding", "vec_id", q, k=k)),
         ("ivf", ivf_topk(emb, "embedding", "vec_id", q, k=k, n_list=16, n_probe=4,
-                         cent_path=f"{stage}/ivf_cand_centroids.parquet")),
+                         cent_path=f"{root}/ivf_cand_centroids.parquet")),
         ("ivfpq", _ivfpq_topk(spark, sf_dir, k=k)),
     ):
-        path = f"{stage}/ann_{algo}_topk.parquet"
-        stage_parquet(topk.select("vec_id"), path)
-        staged = spark.read.parquet(path)
+        staged = stage(spark, f"{root}/ann_{algo}_topk.parquet",
+                       lambda: topk.select("vec_id"))
         out.append(
             staged.join(exact, "vec_id")
             .agg(F.count(F.lit(1)).alias("n_hits"))
@@ -1640,7 +1606,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = minhash_dedup_pairs_staged(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
     )
     cc = connected_components(pairs, "id_a", "id_b")
     return cc.select(F.col("node").alias("doc_id"), "cluster_id")
@@ -1666,7 +1632,7 @@ def q_cluster_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup_pairs_staged(
         docs, "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
     )
     cc = connected_components(pairs, "id_a", "id_b")
     lab = docs.select("doc_id").join(
@@ -1689,7 +1655,7 @@ def q_embedding_neardup_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return bucketed_neardup_pairs(
         emb, "embedding", "vec_id",
-        stage_path=f"{_stage_dir(sf_dir)}/embedding_buckets.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/embedding_buckets.parquet",
         threshold=0.45,
     )
 
@@ -1755,13 +1721,12 @@ def q_bucketed_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the exact ground truth is deterministic — stage it so a probe/bench
     # rerun under reuse skips the O(N^2) BLAS pass and recounts from
     # parquet (the oracle still re-derives it independently in SQL)
-    exact_path = f"{_stage_dir(sf_dir)}/bucket_recall_exact.parquet"
-    stage_parquet(
-        embedding_neardup_pairs(emb, "embedding", "vec_id", threshold=0.45)
-        .select("id_a", "id_b"),
-        exact_path,
+    exact = stage(
+        spark, f"{stage_dir(sf_dir)}/bucket_recall_exact.parquet",
+        lambda: embedding_neardup_pairs(
+            emb, "embedding", "vec_id", threshold=0.45
+        ).select("id_a", "id_b"),
     )
-    exact = spark.read.parquet(exact_path)
     # stage ONCE at the widest table count; table 0 IS the single-table
     # run (seed + 1000*t convention). r11: ONE table-tagged verification
     # pass serves BOTH variants — n_single is the table-0 verified rows
@@ -1769,10 +1734,10 @@ def q_bucketed_neardup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already pair-unique) and n_multi the distinct verified pair count;
     # the old form ran the BLAS verify twice (once per variant) and took
     # three separate count aggregations over it.
-    stage = f"{_stage_dir(sf_dir)}/bucket_recall_t4.parquet"
+    t4_path = f"{stage_dir(sf_dir)}/bucket_recall_t4.parquet"
     tagged = bucketed_neardup_pairs(
         emb, "embedding", "vec_id",
-        stage_path=stage, threshold=0.45, n_tables=4, keep_table=True,
+        stage_path=t4_path, threshold=0.45, n_tables=4, keep_table=True,
     )
     counts = tagged.agg(
         F.count(F.when(F.col("tbl") == 0, F.lit(1)))
@@ -1969,11 +1934,11 @@ def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = prefix_filtered_jaccard_pairs(
         docs.withColumn("__all", F.lit(1)), "text", "doc_id", "__all",
         threshold=0.8, n=3,
-        stage_path=f"{_stage_dir(sf_dir)}/ssjoin_3grams.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/ssjoin_3grams.parquet",
     )
     lsh = minhash_dedup_pairs_staged(
         docs, "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
     )
     # union + per-pair max flags instead of a FULL OUTER join: full outer
     # has no broadcast strategy in Spark (it would plan a SortMergeJoin);
@@ -2011,7 +1976,7 @@ def q_cluster_representatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_dedup_pairs_staged(
         docs, "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet", threshold=0.8,
     )
     cc = connected_components(pairs, "id_a", "id_b").select(
         F.col("node").alias("doc_id"), "cluster_id"
@@ -2144,7 +2109,7 @@ def q_rollup_refresh_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         refresh_rollup_from_diff,
     )
 
-    path = f"{_stage_dir(sf_dir)}/versioned_orders.parquet"
+    path = f"{stage_dir(sf_dir)}/versioned_orders.parquet"
     v1 = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -2490,15 +2455,11 @@ def q_langid_chargram_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus, grams, ranks, and argmin in SQL from the same staged
     profile relation. The confusion matrix is expected diagonal-heavy
     WITH zh on-diagonal — the capability the stopword form lacks."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
         charngram_lang_id,
         charngram_profiles,
         words,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
-
     docs = load_table(spark, sf_dir, "documents")
     cjk = "".join(chr(0x4E00 + i) for i in range(160))
     w = words(F.col("text"))
@@ -2528,14 +2489,10 @@ def q_langid_chargram_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("lang") == "fr", _suffixed("eur"))
         .otherwise(F.array_join(w, " ")).alias("mtext"),
     )
-    path = f"{_stage_dir(sf_dir)}/charngram_profiles.parquet"
-    reuse = _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-    if not (reuse and fs_exists(spark, f"{path}/_SUCCESS")):
-        stage_parquet(
-            charngram_profiles(corpus, "mtext", "lang", n=3, top_k=200),
-            path,
-        )
-    prof = spark.read.parquet(path)
+    prof = stage(
+        spark, f"{stage_dir(sf_dir)}/charngram_profiles.parquet",
+        lambda: charngram_profiles(corpus, "mtext", "lang", n=3, top_k=200),
+    )
     pred = charngram_lang_id(
         corpus, prof, "mtext", "doc_id", n=3, doc_top=20, top_k=200
     )
@@ -3737,7 +3694,7 @@ def q_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return count_min_sketch(
         ev, "user_id", depth=4, width=256,
-        stage_map_path=f"{_stage_dir(sf_dir)}/cms_map.parquet",
+        stage_map_path=f"{stage_dir(sf_dir)}/cms_map.parquet",
     )
 
 
@@ -3758,7 +3715,7 @@ def q_hll_user_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     return hyperloglog_registers(
         ev, "user_id", ["event_type"], m=256,
-        stage_hash_path=f"{_stage_dir(sf_dir)}/hll_user_hashes.parquet",
+        stage_hash_path=f"{stage_dir(sf_dir)}/hll_user_hashes.parquet",
     )
 
 
@@ -3779,7 +3736,7 @@ def q_kmv_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     sk = kmv_sketches(
         ev, "user_id", "event_type", k=128,
-        stage_hash_path=f"{_stage_dir(sf_dir)}/hll_user_hashes.parquet",
+        stage_hash_path=f"{stage_dir(sf_dir)}/hll_user_hashes.parquet",
     )
     est = kmv_pair_overlap(sk, "event_type", k=128)
 
@@ -3824,13 +3781,13 @@ def q_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    stage = _stage_dir(sf_dir)
+    root = stage_dir(sf_dir)
     return incremental_minhash_neardup(
         docs.where(F.col("source") == "src0"),
         docs.where(F.col("source") != "src0"),
         docs, "text", "doc_id",
-        stage_new=f"{stage}/minhash_sigs_new.parquet",
-        stage_corpus=f"{stage}/minhash_sigs_corpus.parquet",
+        stage_new=f"{root}/minhash_sigs_new.parquet",
+        stage_corpus=f"{root}/minhash_sigs_corpus.parquet",
         threshold=0.8,
     )
 
@@ -3874,7 +3831,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return semantic_dedup(
         emb, "embedding", "vec_id",
-        stage_path=f"{_stage_dir(sf_dir)}/semdedup_assign.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/semdedup_assign.parquet",
         n_list=16, threshold=0.45,
     )
 
@@ -3897,14 +3854,14 @@ def q_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # reuse-aware trainer: a probe/bench rerun loads the staged quantizer
     cents = staged_ivf_centroids(emb, "embedding", "vec_id",
-                                 f"{_stage_dir(sf_dir)}/topic_centroids.parquet",
+                                 f"{stage_dir(sf_dir)}/topic_centroids.parquet",
                                  n_list=8, n_iter=1)
-    assigned = ivf_assign(emb, "embedding", cents).select(
-        "vec_id", F.col("__cluster").alias("cluster")
+    assigned = stage(
+        spark, f"{stage_dir(sf_dir)}/topic_assign.parquet",
+        lambda: ivf_assign(emb, "embedding", cents).select(
+            "vec_id", F.col("__cluster").alias("cluster")
+        ),
     )
-    path = f"{_stage_dir(sf_dir)}/topic_assign.parquet"
-    stage_parquet(assigned, path)
-    assigned = spark.read.parquet(path)
     docs = load_table(spark, sf_dir, "documents")
     joined = docs.join(
         assigned, docs.doc_id == assigned.vec_id
@@ -3927,32 +3884,25 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the learned artifact is auditable, not a black box. Training is
     skipped under stage reuse (driver-coordinated epochs; same contract
     as the quantizer sidecars)."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.classifier import (
         hashed_features,
         score_logreg_fp,
         train_logreg,
         weights_fixed_point,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
-
     docs = load_table(spark, sf_dir, "documents")
-    stage = _stage_dir(sf_dir)
-    feats_path = f"{stage}/clf_features.parquet"
-    w_path = f"{stage}/clf_weights.parquet"
-    if not (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{feats_path}/_SUCCESS")
-        and fs_exists(spark, f"{w_path}/_SUCCESS")
-    ):
-        stage_parquet(hashed_features(docs, "text", "doc_id"), feats_path)
+    root = stage_dir(sf_dir)
+    feats_path = f"{root}/clf_features.parquet"
+    w_path = f"{root}/clf_weights.parquet"
+    if not reusable(spark, feats_path, w_path):
+        feats = stage(spark, feats_path,
+                      lambda: hashed_features(docs, "text", "doc_id"))
         labels = docs.select(
             F.col("doc_id").alias("doc"),
             F.col("source").isin([f"src{i}" for i in range(5)])
             .cast("int").alias("y"),
         )
-        w = train_logreg(spark.read.parquet(feats_path), labels, n_epochs=3)
+        w = train_logreg(feats, labels, n_epochs=3)
         stage_parquet(weights_fixed_point(w), w_path)
     feats = spark.read.parquet(feats_path)
     wfp = spark.read.parquet(w_path)
@@ -3976,9 +3926,9 @@ def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # run (or reuse) the same staging as quality_classifier_scores
     q_quality_classifier_scores(spark, sf_dir)
-    stage = _stage_dir(sf_dir)
-    feats = spark.read.parquet(f"{stage}/clf_features.parquet")
-    wfp = spark.read.parquet(f"{stage}/clf_weights.parquet")
+    root = stage_dir(sf_dir)
+    feats = spark.read.parquet(f"{root}/clf_features.parquet")
+    wfp = spark.read.parquet(f"{root}/clf_weights.parquet")
     docs = load_table(spark, sf_dir, "documents")
     labels = docs.select(
         F.col("doc_id").alias("doc"),
@@ -4136,24 +4086,18 @@ def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-splits the text in SQL and joins the SAME staged mapping, so the
     segmentation artifact is what's certified. Training (20 merges) +
     segmentation are skipped under stage reuse."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
         bpe_encode_counts,
         bpe_segment_words,
         bpe_train,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
-
     docs = load_table(spark, sf_dir, "documents")
-    map_path = f"{_stage_dir(sf_dir)}/bpe_word_tokens.parquet"
-    if not (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{map_path}/_SUCCESS")
-    ):
-        merges = bpe_train(docs, "text", n_merges=20)
-        stage_parquet(bpe_segment_words(docs, "text", merges), map_path)
-    mapping = spark.read.parquet(map_path)
+    mapping = stage(
+        spark, f"{stage_dir(sf_dir)}/bpe_word_tokens.parquet",
+        lambda: bpe_segment_words(
+            docs, "text", bpe_train(docs, "text", n_merges=20)
+        ),
+    )
     return bpe_encode_counts(docs, "text", mapping, top_k=50)
 
 
@@ -4167,24 +4111,18 @@ def q_wordpiece_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the artifact; the oracle re-splits the text in SQL and joins the
     SAME mapping, so segmentation is what's certified. Training (20
     merges) + segmentation are skipped under stage reuse."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
         bpe_encode_counts,
         wordpiece_segment_words,
         wordpiece_train,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
-
     docs = load_table(spark, sf_dir, "documents")
-    map_path = f"{_stage_dir(sf_dir)}/wordpiece_word_tokens.parquet"
-    if not (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{map_path}/_SUCCESS")
-    ):
-        vocab = wordpiece_train(docs, "text", n_merges=20)
-        stage_parquet(wordpiece_segment_words(docs, "text", vocab), map_path)
-    mapping = spark.read.parquet(map_path)
+    mapping = stage(
+        spark, f"{stage_dir(sf_dir)}/wordpiece_word_tokens.parquet",
+        lambda: wordpiece_segment_words(
+            docs, "text", wordpiece_train(docs, "text", n_merges=20)
+        ),
+    )
     return bpe_encode_counts(docs, "text", mapping, top_k=50)
 
 
@@ -4474,16 +4412,13 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from redshift_to_pendo_api_data_pipeline_spark.operators.basket import (
         frequent_item_pairs,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
-    path = f"{_stage_dir(sf_dir)}/copurchase_edges.parquet"
-    li = load_table(spark, sf_dir, "lineitem")
-    edges = frequent_item_pairs(
-        li, "l_orderkey", "l_partkey",
-        min_pair_support=3, min_item_support=2,
+    return stage(
+        spark, f"{stage_dir(sf_dir)}/copurchase_edges.parquet",
+        lambda: frequent_item_pairs(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey",
+            min_pair_support=3, min_item_support=2,
+        ),
     )
-    stage_parquet(edges, path)
-    return spark.read.parquet(path)
 
 
 def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5289,7 +5224,6 @@ def _linkage_pairs_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
         linkage_scores,
     )
 
-    path = f"{_stage_dir(sf_dir)}/linkage_pairs.parquet"
     parts = load_table(spark, sf_dir, "part")
     # r8 s2 candidate tightening (the SCALE.md §10 watch item made
     # concrete): the published threshold (>= 20) is REACHABLE ONLY when
@@ -5378,13 +5312,12 @@ def _linkage_pairs_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("size_near", F.abs(F.col("size_a") - F.col("size_b")) <= 1, 6, -4),
         ],
     )
-    stage_parquet(
-        scored.where(F.col("link_score") >= 20).select(
+    return stage(
+        spark, f"{stage_dir(sf_dir)}/linkage_pairs.parquet",
+        lambda: scored.where(F.col("link_score") >= 20).select(
             "k_a", "k_b", "link_score", "agree_mask"
         ),
-        path,
     )
-    return spark.read.parquet(path)
 
 
 def q_part_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5534,9 +5467,9 @@ def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # run (or reuse) the same staging as quality_classifier_scores
     q_quality_classifier_scores(spark, sf_dir)
-    stage = _stage_dir(sf_dir)
-    feats = spark.read.parquet(f"{stage}/clf_features.parquet")
-    wfp = spark.read.parquet(f"{stage}/clf_weights.parquet")
+    root = stage_dir(sf_dir)
+    feats = spark.read.parquet(f"{root}/clf_features.parquet")
+    wfp = spark.read.parquet(f"{root}/clf_weights.parquet")
     docs = load_table(spark, sf_dir, "documents")
     labels = docs.select(
         F.col("doc_id").alias("doc"),
@@ -5585,7 +5518,7 @@ def q_ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _query_vec(spark, sf_dir)
     k = 20
     weights = _ndcg_weights(k)
-    stage = _stage_dir(sf_dir)
+    root = stage_dir(sf_dir)
     exact = brute_force_topk(emb, "embedding", "vec_id", q, k=k).select(
         "vec_id"
     )
@@ -5597,15 +5530,15 @@ def q_ann_ranking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("lsh", lsh_topk(emb, "embedding", "vec_id", q, k=k)),
         ("ivf", ivf_topk(emb, "embedding", "vec_id", q, k=k, n_list=16,
                          n_probe=4,
-                         cent_path=f"{stage}/ivf_rank_centroids.parquet")),
+                         cent_path=f"{root}/ivf_rank_centroids.parquet")),
         ("ivfpq", _ivfpq_topk(spark, sf_dir, k=k)),
     ):
-        ranked = topk.withColumn(
-            "rank", F.row_number().over(w_rank).cast("long")
-        ).select("vec_id", "rank")
-        path = f"{stage}/ann_{algo}_rank.parquet"
-        stage_parquet(ranked, path)
-        staged = spark.read.parquet(path)
+        staged = stage(
+            spark, f"{root}/ann_{algo}_rank.parquet",
+            lambda: topk.withColumn(
+                "rank", F.row_number().over(w_rank).cast("long")
+            ).select("vec_id", "rank"),
+        )
         out.append(
             ranking_metrics(staged, exact, "vec_id", "rank", weights)
             .select(
@@ -5695,25 +5628,17 @@ def q_embedding_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle re-derives every projection from the staged components
     and the raw embeddings with the identical round-half-away fixed-
     pointing — the trained artifact is auditable, not a black box."""
-    import os as _os
-
     from redshift_to_pendo_api_data_pipeline_spark.operators.similarity import (
         pca_project_fp,
         train_pca_fp,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    stage = _stage_dir(sf_dir)
-    comp_path = f"{stage}/pca_components.parquet"
-    mean_path = f"{stage}/pca_mean.parquet"
-    if not (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{comp_path}/_SUCCESS")
-        and fs_exists(spark, f"{mean_path}/_SUCCESS")
-    ):
+    root = stage_dir(sf_dir)
+    comp_path = f"{root}/pca_components.parquet"
+    mean_path = f"{root}/pca_mean.parquet"
+    if not reusable(spark, comp_path, mean_path):
         comps, mean = train_pca_fp(emb, "embedding", k=3)
         stage_parquet(
             spark.createDataFrame(
@@ -5760,7 +5685,7 @@ def q_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     stats = compression_stats_staged(
         docs, "text", "doc_id",
-        f"{_stage_dir(sf_dir)}/compress_stats.parquet",
+        f"{stage_dir(sf_dir)}/compress_stats.parquet",
     )
     return compression_quality(stats, docs, "doc_id", "source")
 
@@ -5918,7 +5843,7 @@ def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = minhash_dedup_pairs_staged(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/minhash_sigs.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/minhash_sigs.parquet",
         threshold=0.8,
     )
     cc = connected_components_star(pairs, "id_a", "id_b")
@@ -6607,7 +6532,7 @@ def q_hll_union_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     regs = hyperloglog_registers(
         ev, "user_id", ["event_type"], m=256,
-        stage_hash_path=f"{_stage_dir(sf_dir)}/hll_user_hashes.parquet",
+        stage_hash_path=f"{stage_dir(sf_dir)}/hll_user_hashes.parquet",
     )
     est = hll_merge_estimate(regs, merge_over=["event_type"], m=256)
     exact = ev.agg(
@@ -6628,7 +6553,6 @@ def q_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     unions — old rows never re-join. Output re-aggregates per nation,
     and the oracle recomputes the FULL join from source, certifying
     staged + delta == full."""
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
     from redshift_to_pendo_api_data_pipeline_spark.streaming.continuous_agg import (
         append_join_view,
     )
@@ -6643,18 +6567,14 @@ def q_join_view_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_custkey").alias("o_custkey"), "c_nationkey"
     )
     cut = F.lit("1996-01-01").cast("date")
-    path = f"{_stage_dir(sf_dir)}/joinview_orders_v1.parquet"
-    v1 = o.where(F.col("od") < cut).join(c, ["o_custkey"]).select(
-        "o_orderkey", "c_nationkey", "val"
+    v1 = stage(
+        spark, f"{stage_dir(sf_dir)}/joinview_orders_v1.parquet",
+        lambda: o.where(F.col("od") < cut).join(c, ["o_custkey"]).select(
+            "o_orderkey", "c_nationkey", "val"
+        ),
     )
-    stage_parquet(v1, path)
     delta = o.where(F.col("od") >= cut).select("o_orderkey", "o_custkey", "val")
-    refreshed = append_join_view(
-        spark.read.parquet(path),
-        delta,
-        c,
-        ["o_custkey"],
-    )
+    refreshed = append_join_view(v1, delta, c, ["o_custkey"])
     return refreshed.groupBy(
         F.col("c_nationkey").cast("long").alias("nation")
     ).agg(
@@ -6751,16 +6671,16 @@ def q_bootstrap_doclen_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         bootstrap_mean_ci,
         poisson_bootstrap_weights,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("len_v")
     )
     n_reps = 64
-    w = poisson_bootstrap_weights(docs, "doc_id", n_reps=n_reps, seed=41)
-    path = f"{_stage_dir(sf_dir)}/bootstrap_doclen_w64.parquet"
-    stage_parquet(w, path)
-    staged = spark.read.parquet(path)
+    staged = stage(
+        spark, f"{stage_dir(sf_dir)}/bootstrap_doclen_w64.parquet",
+        lambda: poisson_bootstrap_weights(
+            docs, "doc_id", n_reps=n_reps, seed=41
+        ),
+    )
     return bootstrap_mean_ci(
         docs, staged, "doc_id", "len_v", n_reps=n_reps
     )
@@ -6812,19 +6732,19 @@ def q_feature_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
         normalize_text,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
     dim = 64
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(F.split(normalize_text(F.col("text")), " ")).alias("tok")
     ).where(F.col("tok") != "").distinct()
-    tok_feat = toks.select(
-        "tok", F.pmod(F.xxhash64("tok"), F.lit(dim)).cast("int").alias("feat")
+    tok_feat = stage(
+        spark, f"{stage_dir(sf_dir)}/feature_hash_tokfeat_d64.parquet",
+        lambda: toks.select(
+            "tok",
+            F.pmod(F.xxhash64("tok"), F.lit(dim)).cast("int").alias("feat"),
+        ),
     )
-    path = f"{_stage_dir(sf_dir)}/feature_hash_tokfeat_d64.parquet"
-    stage_parquet(tok_feat, path)
-    return feature_hash_collision_audit(spark.read.parquet(path), dim=dim)
+    return feature_hash_collision_audit(tok_feat, dim=dim)
 
 
 def q_event_lateness_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6990,7 +6910,7 @@ def q_pettitt_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pettitt_changepoint(daily, "event_type", "day_n", "n_ev")
 
 
-def _ensure_loo_brand_stage(spark: SparkSession, sf_dir: str) -> str:
+def _loo_brand_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stage the LOO brand-encoding scored relation ONCE for its three
     consumers (target_encode_brand_returns, lift_table_brand_score,
     qini_discount_uplift): (line_uid, treated, category, y, enc_fp).
@@ -7007,9 +6927,7 @@ def _ensure_loo_brand_stage(spark: SparkSession, sf_dir: str) -> str:
     from redshift_to_pendo_api_data_pipeline_spark.operators.classifier import (
         target_encode_loo,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
 
-    path = f"{_stage_dir(sf_dir)}/loo_brand_scored.parquet"
     li = load_table(spark, sf_dir, "lineitem")
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("l_partkey"), "p_brand"
@@ -7021,14 +6939,13 @@ def _ensure_loo_brand_stage(spark: SparkSession, sf_dir: str) -> str:
         .cast("long").alias("treated"),
         (F.col("l_returnflag") == "R").cast("long").alias("returned"),
     ).join(F.broadcast(part), "l_partkey")
-    stage_parquet(
-        target_encode_loo(
+    return stage(
+        spark, f"{stage_dir(sf_dir)}/loo_brand_scored.parquet",
+        lambda: target_encode_loo(
             base.select("line_uid", "treated", "p_brand", "returned"),
             "p_brand", "returned", ["line_uid", "treated"],
         ),
-        path,
     )
-    return path
 
 
 def q_target_encode_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7037,10 +6954,9 @@ def q_target_encode_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     feature transform: each lineitem's brand becomes the return rate
     of OTHER lines of that brand, exact integer arithmetic, singleton
     categories falling back to the LOO global mean. Reads the shared
-    staged encode (_ensure_loo_brand_stage); the oracle re-derives it
+    staged encode (_loo_brand_scored); the oracle re-derives it
     from the raw tables."""
-    path = _ensure_loo_brand_stage(spark, sf_dir)
-    return spark.read.parquet(path).select(
+    return _loo_brand_scored(spark, sf_dir).select(
         "line_uid", "category", "y", "enc_fp"
     )
 
@@ -7188,15 +7104,14 @@ def q_lift_table_brand_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     report for any propensity score: per-decile response rate +
     cumulative lift over base rate, distributed ntile (no
     single-reducer window), exact integers. Ranks the shared staged
-    encode (_ensure_loo_brand_stage) — the r10 bottleneck was paying
+    encode (_loo_brand_scored) — the r10 bottleneck was paying
     the full encode materialization per ranking query; the oracle
     still re-derives encode + ranking from the raw tables."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.classifier import (
         lift_table,
     )
 
-    path = _ensure_loo_brand_stage(spark, sf_dir)
-    scored = spark.read.parquet(path)
+    scored = _loo_brand_scored(spark, sf_dir)
     return lift_table(scored, "enc_fp", "y", "line_uid", n_buckets=10)
 
 
@@ -7244,8 +7159,6 @@ def q_phonetic_linkage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
         editdist_pairs_from_dict,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
     part = load_table(spark, sf_dir, "part")
     dic = part.groupBy(F.col("p_name").alias("name")).agg(
         F.count(F.lit(1)).alias("n")
@@ -7254,9 +7167,10 @@ def q_phonetic_linkage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.soundex(F.element_at(F.split(F.col("name"), " "), 1))
         .alias("__blk"),
     )
-    path = f"{_stage_dir(sf_dir)}/phonetic_name_blocks.parquet"
-    stage_parquet(dic, path)
-    return editdist_pairs_from_dict(spark.read.parquet(path), max_dist=3)
+    blocks = stage(
+        spark, f"{stage_dir(sf_dir)}/phonetic_name_blocks.parquet", lambda: dic
+    )
+    return editdist_pairs_from_dict(blocks, max_dist=3)
 
 
 def q_file_row_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7270,14 +7184,13 @@ def q_file_row_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     from redshift_to_pendo_api_data_pipeline_spark.operators.layout import (
         file_row_skew,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber"
     )
-    path = f"{_stage_dir(sf_dir)}/lineitem_skewed_files.parquet"
-    stage_parquet(li.repartitionByRange(4, "l_linenumber"), path)
-    return file_row_skew(spark.read.parquet(path))
+    return file_row_skew(stage(
+        spark, f"{stage_dir(sf_dir)}/lineitem_skewed_files.parquet",
+        lambda: li.repartitionByRange(4, "l_linenumber"),
+    ))
 
 
 def q_eb_shrunk_brand_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7331,7 +7244,7 @@ def q_oph_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return oph_dedup_pairs_staged(
         load_table(spark, sf_dir, "documents"), "text", "doc_id",
-        stage_path=f"{_stage_dir(sf_dir)}/oph_minhash_sigs.parquet",
+        stage_path=f"{stage_dir(sf_dir)}/oph_minhash_sigs.parquet",
         threshold=0.8,
     )
 
@@ -7527,15 +7440,14 @@ def q_qini_discount_uplift(spark: SparkSession, sf_dir: str) -> DataFrame:
     outcome = return flag, score = the LOO brand encoding — at each
     cumulative decile, treated responders minus volume-scaled control
     responders; exact fixed point, windows over the 10-row bucket
-    relation. Ranks the shared staged encode (_ensure_loo_brand_stage,
+    relation. Ranks the shared staged encode (_loo_brand_scored,
     where `treated` rides through as an id column); the oracle still
     re-derives encode + curve from the raw tables."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.stats import (
         qini_curve,
     )
 
-    path = _ensure_loo_brand_stage(spark, sf_dir)
-    scored = spark.read.parquet(path)
+    scored = _loo_brand_scored(spark, sf_dir)
     return qini_curve(
         scored, "enc_fp", "treated", "y", "line_uid", n_buckets=10
     )
@@ -8057,7 +7969,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # Staging area the signature/ANN queries write to at sf0.01 — the only SF
 # the correctness gate runs at (other SFs stage under their own basename,
 # so a bench run never clobbers the oracle's inputs).
-_STAGE = "/tmp/spark_graft_stage/sf0.01"
+_STAGE = f"{DEFAULT_ROOT}/sf0.01"
 _CJK160 = "".join(chr(0x4E00 + i) for i in range(160))
 _NDCG_VALUES = ", ".join(
     f"({r}, {w})" for r, w in enumerate(_ndcg_weights(20), start=1)

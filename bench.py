@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from redshift_to_pendo_api_data_pipeline_spark.session import get_spark, sf_dir
+from redshift_to_pendo_api_data_pipeline_spark.staging import complete_stages
 
 
 def _extract_throughput(spark, data_dir: str) -> dict:
@@ -245,7 +246,6 @@ def main() -> None:
     # these operators are designed around. The cold-vs-probe split is
     # additionally measured explicitly below (the `staged` key), so the
     # staging write cost is REPORTED, not hidden in the headline total.
-    import inspect
     import shutil
 
     # Staged queries (stage-once/probe-many pipelines) pay their cold
@@ -256,10 +256,10 @@ def main() -> None:
     # timed sample #1). The cold run still counts toward
     # wall_clock_once_sec — the honest single-pass figure keeps paying
     # staging — and the explicit cold/probe split below reports it
-    # per-query.
-    staged_names = {
-        n for n, fn in qs.items() if "_stage_dir" in inspect.getsource(fn)
-    }
+    # per-query. A query is staged when its first run wrote one: the
+    # count of complete staged copies under the run-unique root grew,
+    # whether it stages directly or through a shared helper.
+    staged_names: list[str] = []
     loop_stage_root = f"/tmp/spark_graft_stage_bench_loop_{os.getpid()}"
     os.environ["SPARK_GRAFT_STAGE_ROOT"] = loop_stage_root
     os.environ["SPARK_GRAFT_STAGE_REUSE"] = "1"
@@ -282,6 +282,12 @@ def main() -> None:
     )
     inloop_jvm: list[float] = []
     inloop_py: list[float] = []
+
+    def _timed(fn) -> float:
+        t0 = time.perf_counter()
+        fn(spark, data_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
     for qi, (name, fn) in enumerate(qs.items()):
         if qi % 25 == 0:
             t0 = time.perf_counter()
@@ -290,14 +296,13 @@ def main() -> None:
             t0 = time.perf_counter()
             py_probe_df.write.format("noop").mode("overwrite").save()
             inloop_py.append(time.perf_counter() - t0)
-        samples = []
-        n_runs = 4 if name in staged_names else 3
-        for i in range(n_runs):
-            t0 = time.perf_counter()
-            fn(spark, data_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
+        n_stages = complete_stages(loop_stage_root)
+        samples = [_timed(fn)]
         first_runs[name] = samples[0]
-        samples = samples[1:] if name in staged_names else samples
+        if complete_stages(loop_stage_root) > n_stages:
+            staged_names.append(name)
+            samples = []
+        samples += [_timed(fn) for _ in range(3 - len(samples))]
         timings[name] = round(sorted(samples)[1], 4)  # median of 3
         spreads[name] = round(max(samples) - min(samples), 4)
     total = round(sum(timings.values()), 4)
@@ -317,12 +322,8 @@ def main() -> None:
     staged_probe: dict[str, float] = {}
     try:
         for n in staged_names:
-            t0 = time.perf_counter()
-            qs[n](spark, data_dir).write.format("noop").mode("overwrite").save()
-            staged_cold[n] = round(time.perf_counter() - t0, 4)
-            t0 = time.perf_counter()
-            qs[n](spark, data_dir).write.format("noop").mode("overwrite").save()
-            staged_probe[n] = round(time.perf_counter() - t0, 4)
+            staged_cold[n] = round(_timed(qs[n]), 4)
+            staged_probe[n] = round(_timed(qs[n]), 4)
     finally:
         os.environ.pop("SPARK_GRAFT_STAGE_ROOT", None)
         os.environ.pop("SPARK_GRAFT_STAGE_REUSE", None)

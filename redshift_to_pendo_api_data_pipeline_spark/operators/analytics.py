@@ -16,7 +16,7 @@ import math
 from pyspark.sql import DataFrame, Window, functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.functions.transforms import fixed_point
-from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
+from redshift_to_pendo_api_data_pipeline_spark.staging import stage
 
 
 def grouped_stats(df: DataFrame, key: str, value: str, ts: str) -> DataFrame:
@@ -519,8 +519,7 @@ def count_min_sketch(
         key_col, "c.i", "c.bucket"
     )
     if stage_map_path is not None:
-        stage_parquet(mapping, stage_map_path)
-        mapping = df.sparkSession.read.parquet(stage_map_path)
+        mapping = stage(df.sparkSession, stage_map_path, lambda: mapping)
     return (
         mapping.join(F.broadcast(counters), ["i", "bucket"])
         .groupBy(key_col)
@@ -571,10 +570,7 @@ def hyperloglog_registers(
     w = F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(1 << 48))
     hashed = df.select(*groups, w.alias("w"))
     if stage_hash_path is not None:
-        from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
-        stage_parquet(hashed.distinct(), stage_hash_path)
-        hashed = df.sparkSession.read.parquet(stage_hash_path)
+        hashed = stage(df.sparkSession, stage_hash_path, hashed.distinct)
     v = F.expr(f"w div {m}")
     rank = F.when(v == F.lit(0), F.lit(vbits + 1)).otherwise(
         F.lit(vbits + 1) - F.length(F.bin(v))
@@ -618,10 +614,7 @@ def kmv_sketches(
     # so one staged word relation serves both sketch families
     hashed = df.select(F.col(group_col), w.alias("w")).distinct()
     if stage_hash_path is not None:
-        from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
-        stage_parquet(hashed, stage_hash_path)
-        hashed = df.sparkSession.read.parquet(stage_hash_path)
+        hashed = stage(df.sparkSession, stage_hash_path, lambda: hashed)
     rn = F.row_number().over(Window.partitionBy(group_col).orderBy("w"))
     return (
         hashed.withColumn("__rn", rn)

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql import types as T
 
 from redshift_to_pendo_api_data_pipeline_spark.operators.basket import mirror, undirected_edges
-from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
+from redshift_to_pendo_api_data_pipeline_spark.staging import stage
 
 
 # ------------------------------------------------------------------ exact
@@ -141,8 +141,8 @@ def staged_minhash_signatures(
     file is deterministic relational algebra any engine can replicate
     (band equality == signature-slice equality), so the DuckDB oracle can
     re-derive the same near-dup pairs independently."""
-    stage_parquet(minhash_signatures(df, text_col, id_col, n=n, k=k), path)
-    return df.sparkSession.read.parquet(path)
+    return stage(df.sparkSession, path,
+                 lambda: minhash_signatures(df, text_col, id_col, n=n, k=k))
 
 
 def candidates_from_signatures(
@@ -322,8 +322,8 @@ def staged_simhash_signatures(
     downstream is pure integer algebra (shifts, xor, popcount) any engine
     can replicate over the staged file — which makes the pandas-UDF
     signature computation itself the only engine-specific stage."""
-    stage_parquet(simhash_signatures_jvm(df, text_col, id_col), path)
-    return df.sparkSession.read.parquet(path)
+    return stage(df.sparkSession, path,
+                 lambda: simhash_signatures_jvm(df, text_col, id_col))
 
 
 def simhash_pairs_from_signatures(
@@ -905,12 +905,9 @@ def _ssjoin_index(
             F.size("ws").alias("n"),
         )
     )
-    if stage_path is not None:
-        from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
-        stage_parquet(per_doc, stage_path)
-        per_doc = df.sparkSession.read.parquet(stage_path)
-    return per_doc
+    if stage_path is None:
+        return per_doc
+    return stage(df.sparkSession, stage_path, lambda: per_doc)
 
 
 def containment_pairs(
@@ -1332,10 +1329,10 @@ def oph_dedup_pairs_staged(
     `candidates_from_signatures`, verify with exact n-gram Jaccard —
     only the signature builder changed, everything downstream
     (banding algebra, verify, oracle trust model) is shared."""
-    stage_parquet(
-        oph_minhash_signatures(df, text_col, id_col, n=n, k=k), stage_path
+    sigs = stage(
+        df.sparkSession, stage_path,
+        lambda: oph_minhash_signatures(df, text_col, id_col, n=n, k=k),
     )
-    sigs = df.sparkSession.read.parquet(stage_path)
     cands = candidates_from_signatures(sigs, k=k, bands=bands)
     verified = ngram_jaccard(cands, df, text_col, id_col, n=n)
     return verified.where(F.col("jaccard") >= threshold)

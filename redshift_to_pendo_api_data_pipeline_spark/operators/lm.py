@@ -106,12 +106,9 @@ def bigram_surprisal(
     if fold_singletons:
         counts = counts.where(F.col("c") >= 2)
     if stage_path is not None:
-        from redshift_to_pendo_api_data_pipeline_spark.staging import (
-            stage_parquet,
-        )
+        from redshift_to_pendo_api_data_pipeline_spark.staging import stage
 
-        stage_parquet(counts, stage_path)
-        counts = df.sparkSession.read.parquet(stage_path)
+        counts = stage(df.sparkSession, stage_path, lambda: counts)
     if fold_singletons:
         bits = F.coalesce(F.length(F.conv(F.col("c"), 10, 2)), F.lit(1))
         joined = doc_bigs.join(counts, "big", "left")

@@ -27,6 +27,14 @@ from pyspark.sql import types as T
 from redshift_to_pendo_api_data_pipeline_spark.operators.routing import (
     local_df as _local_df,
 )
+from redshift_to_pendo_api_data_pipeline_spark.staging import (
+    fs_delete,
+    fs_exists,
+    fs_touch,
+    reusable,
+    stage,
+    stage_parquet,
+)
 
 
 def _dot(x, y):
@@ -464,19 +472,9 @@ def build_ivf_index(
     (`<index_path>__centroids`) so a reuse run (SPARK_GRAFT_STAGE_REUSE=1,
     index already built) loads them back instead of re-training — probes
     against a built index pay zero training cost."""
-    import os as _os
-
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists, stage_parquet
-
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_delete
-
     spark = df.sparkSession
     cent_path = f"{index_path}__centroids"
-    if (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{index_path}/_SUCCESS")
-        and fs_exists(spark, f"{cent_path}/_SUCCESS")
-    ):
+    if reusable(spark, index_path, cent_path):
         cents = load_ivf_centroids(spark, cent_path)
         if cents.shape[0] == n_list:
             return cents
@@ -555,8 +553,6 @@ def ivf_index_append(
     Returns True if data was appended, False on a deduped replay.
     """
     import hashlib as _hashlib
-
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists, fs_touch
 
     spark = new_df.sparkSession
     marker = None
@@ -751,19 +747,8 @@ def staged_ivf_centroids(
     full index (build_ivf_index already does this for index+centroids
     together). Training is deterministic, so a staged copy is
     exact, not an approximation."""
-    import os as _os
-
-    from redshift_to_pendo_api_data_pipeline_spark.staging import (
-        fs_delete,
-        fs_exists,
-        stage_parquet,
-    )
-
     spark = df.sparkSession
-    if (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{path}/_SUCCESS")
-    ):
+    if reusable(spark, path):
         staged = load_ivf_centroids(spark, path)
         if staged.shape[0] == n_list:
             return staged
@@ -793,19 +778,8 @@ def staged_pq_codebooks(
     staged_ivf_centroids): m_sub x n_iter training passes run once per
     corpus version; a probe/bench rerun under reuse loads the staged
     (sub, code, centroid) table instead."""
-    import os as _os
-
-    from redshift_to_pendo_api_data_pipeline_spark.staging import (
-        fs_delete,
-        fs_exists,
-        stage_parquet,
-    )
-
     spark = df.sparkSession
-    if (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{path}/_SUCCESS")
-    ):
+    if reusable(spark, path):
         rows = spark.read.parquet(path).orderBy("sub", "code").collect()
         m = max(r["sub"] for r in rows) + 1
         k = max(r["code"] for r in rows) + 1
@@ -922,7 +896,7 @@ def ivf_index_compact(
     in-place), an at-least-once replay of an already-applied batch is
     still a no-op against the compacted index. Returns
     {files_in, files_out, rows} for the maintenance log."""
-    from redshift_to_pendo_api_data_pipeline_spark.staging import _hadoop_fs, fs_touch
+    from redshift_to_pendo_api_data_pipeline_spark.staging import _hadoop_fs
 
     fs, p = _hadoop_fs(spark, index_path)
 
@@ -1008,29 +982,19 @@ def semantic_dedup(
     staged assignment — the DuckDB oracle re-derives kept/dropped from
     the staged parquet independently (cosine rounded to 6dp on both
     engines, same margin discipline as embedding_neardup)."""
-    import os as _os
-
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_exists, stage_parquet
-
     spark = df.sparkSession
     # One Lloyd iteration by default: the quantizer only PARTITIONS the
     # space — SemDeDup's dedup decisions are exact within whatever
     # partition it lands on, so converged centroids buy balance, not
     # correctness. Each extra iteration is a full-data BLAS pass.
-    # Reuse-aware END TO END: training is driver-coordinated work that a
-    # skipped stage write never saved — when the staged assignment exists
-    # under reuse, skip the k-means + assign entirely, not just the write.
-    if not (
-        _os.environ.get("SPARK_GRAFT_STAGE_REUSE") == "1"
-        and fs_exists(spark, f"{stage_path}/_SUCCESS")
-    ):
+    def _assign() -> DataFrame:
         cents = train_ivf_centroids(df, vec_col, id_col, n_list=n_list,
                                     n_iter=n_iter)
-        assigned = ivf_assign(df, vec_col, cents).select(
+        return ivf_assign(df, vec_col, cents).select(
             F.col(id_col), F.col(vec_col), F.col("__cluster").alias("cluster")
         )
-        stage_parquet(assigned, stage_path)
-    st = spark.read.parquet(stage_path)
+
+    st = stage(spark, stage_path, _assign)
 
     # Within-cluster scoring is one BLAS gram matrix per cluster group
     # (applyInPandas), NOT a row-pair equi-join: an interpreted zip_with
@@ -1182,8 +1146,6 @@ def bucketed_neardup_pairs(
     count (n_planes=6 here fits the test corpus; a 10^9-vector corpus
     wants ~20 planes -> 10^6 buckets of ~10^3 rows, and AQE's skew-join
     split handles the residual heavy buckets)."""
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
-
     first = df.select(F.size(vec_col)).first()
     if first is None or first[0] is None:
         raise ValueError(

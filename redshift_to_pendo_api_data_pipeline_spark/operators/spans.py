@@ -248,11 +248,10 @@ def staged_substr_seeds(
     oracle re-derives pairing + run-merge from the SAME parquet, so
     only the gram hashing itself is engine-specific (the simhash
     staging argument)."""
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
+    from redshift_to_pendo_api_data_pipeline_spark.staging import stage
 
-    seeds = substr_seed_grams(df, text_col, id_col, k)
-    stage_parquet(seeds, stage_path)
-    return df.sparkSession.read.parquet(stage_path)
+    return stage(df.sparkSession, stage_path,
+                 lambda: substr_seed_grams(df, text_col, id_col, k))
 
 
 def maximal_duplicated_substrings(

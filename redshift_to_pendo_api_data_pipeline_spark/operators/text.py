@@ -1544,13 +1544,14 @@ def compression_stats_staged(
                 "n_comp": [len(zlib.compress(b, lvl)) for b in raw],
             })
 
-    from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
+    from redshift_to_pendo_api_data_pipeline_spark.staging import stage
 
-    stats = df.select(F.col(id_col), F.col(text_col)).mapInPandas(
-        _compress, schema="doc long, n_raw long, n_comp long"
+    return stage(
+        df.sparkSession, path,
+        lambda: df.select(F.col(id_col), F.col(text_col)).mapInPandas(
+            _compress, schema="doc long, n_raw long, n_comp long"
+        ),
     )
-    stage_parquet(stats, path)
-    return df.sparkSession.read.parquet(path)
 
 
 def compression_quality(

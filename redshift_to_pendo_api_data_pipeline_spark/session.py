@@ -14,6 +14,14 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_heap() -> str:
+    """A quarter of physical memory (the JVM's own default max heap),
+    capped at 24g: two sessions on one host, such as tier-1 beside an
+    oracle sweep, must both fit with room left for Python workers."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(24 * 1024, phys_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "redshift_to_pendo_api_data_pipeline_spark",
     master: str | None = None,
@@ -68,10 +76,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local[N] puts driver + all N executor threads in ONE JVM: size the
         # heap for N concurrent tasks' shuffle/broadcast/write buffers, not
-        # for a lone driver (8g thrashed GC late in an 87-query loop; the
-        # per-query cost showed up as 3-5x tail inflation). On a real
-        # cluster this maps to spark.executor.memory per executor instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # for a lone driver (8g thrashed GC late in an 87-query loop on 32
+        # cores; the per-query cost showed up as 3-5x tail inflation). On a
+        # real cluster this maps to spark.executor.memory per executor.
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_heap()))
         # The generated-class cache defaults to 100 entries; a session
         # running the full 112-query registry cycles past it, so every
         # re-run re-pays Janino compilation (measured: the bench total

@@ -27,6 +27,13 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from redshift_to_pendo_api_data_pipeline_spark.staging import (
+    _hadoop_fs,
+    fs_exists,
+    fs_read_text,
+    fs_touch,
+)
+
 _ACTIVE_FILE = "_ACTIVE_VERSION"
 
 
@@ -53,8 +60,6 @@ def _fs(path: str):
     spark = SparkSession.getActiveSession()
     if spark is None:
         return None, None
-    from redshift_to_pendo_api_data_pipeline_spark.staging import _hadoop_fs
-
     return _hadoop_fs(spark, path)
 
 
@@ -72,8 +77,6 @@ def activate(path: str, version: int) -> None:
     fs, _ = _fs(path)
     body = json.dumps({"version": version})
     if fs is not None:
-        from redshift_to_pendo_api_data_pipeline_spark.staging import fs_touch
-
         spark = SparkSession.getActiveSession()
         jvm = spark._jvm
         tmp_name = f"{path}/{_ACTIVE_FILE}.tmp.{version}"
@@ -102,28 +105,19 @@ def active_version(path: str, retries: int = 5) -> int | None:
     absent after the retry budget."""
     import time
 
-    fs, _ = _fs(path)
+    spark = SparkSession.getActiveSession()
+    ptr = f"{path}/{_ACTIVE_FILE}"
     last_err: Exception | None = None
     for attempt in range(retries):
         if attempt:
             time.sleep(0.05 * attempt)
         try:
-            if fs is not None:
-                spark = SparkSession.getActiveSession()
-                jvm = spark._jvm
-                ptr = jvm.org.apache.hadoop.fs.Path(f"{path}/{_ACTIVE_FILE}")
-                pfs = ptr.getFileSystem(spark._jsc.hadoopConfiguration())
-                if not pfs.exists(ptr):
+            if spark is not None:
+                if not fs_exists(spark, ptr):
                     if last_err is None:
                         return None  # genuinely absent, not mid-swap
                     continue  # vanished inside a delete+rename window
-                stream = pfs.open(ptr)
-                try:
-                    text = jvm.org.apache.commons.io.IOUtils.toString(
-                        stream, "UTF-8"
-                    )
-                finally:
-                    stream.close()
+                text = fs_read_text(spark, ptr)
             else:
                 p = Path(path) / _ACTIVE_FILE
                 if not p.exists():

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
     incremental_editdist_pairs,
 )
-from redshift_to_pendo_api_data_pipeline_spark.staging import stage_parquet
+from redshift_to_pendo_api_data_pipeline_spark.staging import stage
 
 
 def stage_name_dictionary(
@@ -43,11 +43,12 @@ def stage_name_dictionary(
     n_corpus) and stage it. The bridge probes this relation every
     trigger; re-stage on corpus version changes (same contract as the
     MinHash signature staging)."""
-    dic = corpus_df.groupBy(F.col(col).alias("name")).agg(
-        F.count(F.lit(1)).cast("long").alias("__n")
+    return stage(
+        corpus_df.sparkSession, path,
+        lambda: corpus_df.groupBy(F.col(col).alias("name")).agg(
+            F.count(F.lit(1)).cast("long").alias("__n")
+        ),
     )
-    stage_parquet(dic, path)
-    return corpus_df.sparkSession.read.parquet(path)
 
 
 def streaming_linkage_against_corpus(

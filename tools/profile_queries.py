@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from redshift_to_pendo_api_data_pipeline_spark.session import get_spark, sf_dir
+from redshift_to_pendo_api_data_pipeline_spark.staging import complete_stages
 
 
 def _rest(app_port: int, path: str):
@@ -43,12 +44,8 @@ def main(*names: str) -> None:
         qs = {k: v for k, v in qs.items() if k in names}
 
     # staged queries reuse a run-unique root, mirroring bench.py
-    import inspect
     import shutil
 
-    staged_names = {
-        n for n, fn in qs.items() if "_stage_dir" in inspect.getsource(fn)
-    }
     stage_root = f"/tmp/spark_graft_stage_prof_{os.getpid()}"
     os.environ["SPARK_GRAFT_STAGE_ROOT"] = stage_root
     os.environ["SPARK_GRAFT_STAGE_REUSE"] = "1"
@@ -61,18 +58,23 @@ def main(*names: str) -> None:
         except Exception:
             pass
 
+    def _timed(fn) -> float:
+        t0 = time.perf_counter()
+        fn(spark, data_dir).write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0
+
     out = {}
     for name, fn in qs.items():
         jobs_before = {j["jobId"] for j in _rest(port, f"applications/{app_id}/jobs")}
-        samples = []
-        n_runs = 4 if name in staged_names else 3
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        for i in range(n_runs):
-            t0 = time.perf_counter()
-            fn(spark, data_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.perf_counter() - t0)
+        # staged when the first run wrote a stage (mirrors bench.py): the
+        # cold run then stays out of the median
+        n_stages = complete_stages(stage_root)
+        samples = [_timed(fn)]
+        staged = complete_stages(stage_root) > n_stages
+        samples += [_timed(fn) for _ in range(3 if staged else 2)]
         spark.sparkContext.setJobDescription(None)
-        timed = samples[1:] if name in staged_names else samples
+        timed = samples[1:] if staged else samples
         median = sorted(timed)[len(timed) // 2]
 
         jobs = [
