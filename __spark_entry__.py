@@ -945,14 +945,14 @@ def q_tokenizer_compression_compare(
             docs, "text", wordpiece_train(docs, "text", n_merges=20)
         ),
     )
-    uni_path, _ = _ensure_unigram_stage(spark, sf_dir)
+    unigram, _ = _unigram_stage(spark, sf_dir)
     corpus_words = docs.select(
         F.explode(words(F.col("text"))).alias("word")
     ).where(F.col("word") != "")
     out = None
     for name, mapping in (
         ("bpe", bpe),
-        ("unigram", spark.read.parquet(uni_path)),
+        ("unigram", unigram),
         ("wordpiece", wordpiece),
     ):
         per_word = mapping.groupBy("word").agg(
@@ -975,33 +975,32 @@ def q_tokenizer_compression_compare(
     return out
 
 
-def _ensure_unigram_stage(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _unigram_stage(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
     """Train the unigram tokenizer ONCE and stage BOTH artifacts — the
     (word, token, k) segmentation mapping and the (piece, cost_fp)
     table — so every consumer (token histogram, compression compare,
     cross-entropy scoring) certifies against the same trained model.
-    Skipped under stage reuse."""
+    Returns the staged (mapping, pieces). Skipped under stage reuse."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
         unigram_segment_words,
         unigram_train,
     )
 
-    docs = load_table(spark, sf_dir, "documents")
     map_path = f"{stage_dir(sf_dir)}/unigram_word_tokens.parquet"
     pieces_path = f"{stage_dir(sf_dir)}/unigram_pieces.parquet"
-    if not reusable(spark, map_path, pieces_path):
-        pieces = unigram_train(docs, "text", vocab_size=200, n_em=2)
-        stage_parquet(
-            unigram_segment_words(docs, "text", pieces), map_path
-        )
-        stage_parquet(
-            spark.createDataFrame(
-                [(p, int(c)) for p, c in pieces],
-                "piece string, cost_fp long",
-            ),
-            pieces_path,
-        )
-    return map_path, pieces_path
+    if reusable(spark, map_path, pieces_path):
+        return spark.read.parquet(map_path), spark.read.parquet(pieces_path)
+    docs = load_table(spark, sf_dir, "documents")
+    pieces = unigram_train(docs, "text", vocab_size=200, n_em=2)
+    return (
+        stage(spark, map_path,
+              lambda: unigram_segment_words(docs, "text", pieces)),
+        stage(spark, pieces_path, lambda: spark.createDataFrame(
+            [(p, int(c)) for p, c in pieces], "piece string, cost_fp long"
+        )),
+    )
 
 
 def q_tokenizer_fertility_by_source(
@@ -1017,10 +1016,9 @@ def q_tokenizer_fertility_by_source(
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import words
 
     docs = load_table(spark, sf_dir, "documents")
-    map_path, _ = _ensure_unigram_stage(spark, sf_dir)
+    mapping, _ = _unigram_stage(spark, sf_dir)
     per_word = (
-        spark.read.parquet(map_path)
-        .groupBy("word")
+        mapping.groupBy("word")
         .agg(F.sum("k").cast("long").alias("__toks"))
     )
     corpus = docs.select(
@@ -1058,8 +1056,7 @@ def q_unigram_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    map_path, _ = _ensure_unigram_stage(spark, sf_dir)
-    mapping = spark.read.parquet(map_path)
+    mapping, _ = _unigram_stage(spark, sf_dir)
     return bpe_encode_counts(docs, "text", mapping, top_k=50)
 
 
@@ -1070,7 +1067,7 @@ def q_unigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     model — the perplexity filter tier of corpus curation (Wenzek et
     al. 2020), complementing the hashed-BoW classifier. Both staged
     artifacts (segmentation mapping + piece cost table) come from ONE
-    training run (_ensure_unigram_stage); the oracle re-derives every
+    training run (_unigram_stage); the oracle re-derives every
     doc's score from the same two parquets, so the integer join+agg
     arithmetic is what's certified."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.text import (
@@ -1078,12 +1075,8 @@ def q_unigram_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    map_path, pieces_path = _ensure_unigram_stage(spark, sf_dir)
-    return unigram_doc_cross_entropy(
-        docs, "text", "doc_id",
-        spark.read.parquet(map_path),
-        spark.read.parquet(pieces_path),
-    )
+    mapping, pieces = _unigram_stage(spark, sf_dir)
+    return unigram_doc_cross_entropy(docs, "text", "doc_id", mapping, pieces)
 
 
 def q_exact_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1443,23 +1436,20 @@ def q_embedding_ann_opq(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = stage_dir(sf_dir)
     codes_path = f"{root}/opq_codes.parquet"
     lut_path = f"{root}/opq_lut.parquet"
-    if not reusable(spark, codes_path, lut_path):
+    if reusable(spark, codes_path, lut_path):
+        codes, lut = spark.read.parquet(codes_path), spark.read.parquet(lut_path)
+    else:
         rot, mean = train_opq_rotation_fp(emb, "embedding", m_sub=4)
         rotated = rotate_vectors_fp(emb, "embedding", "vec_id", rot, mean)
         books = train_pq_codebooks(
             rotated, "rvec", "vec_id", m_sub=4, k_codes=16, n_iter=2
         )
-        stage_parquet(
-            pq_encode(rotated, "rvec", "vec_id", books), codes_path
-        )
+        codes = stage(spark, codes_path,
+                      lambda: pq_encode(rotated, "rvec", "vec_id", books))
         rq = rotate_query_fp(_query_vec(spark, sf_dir), rot, mean)
-        stage_parquet(
-            spark.createDataFrame(pq_adc_lut(books, rq),
-                                  "sub int, code int, score_fp long"),
-            lut_path,
-        )
-    codes = spark.read.parquet(codes_path)
-    lut = spark.read.parquet(lut_path)
+        lut = stage(spark, lut_path, lambda: spark.createDataFrame(
+            pq_adc_lut(books, rq), "sub int, code int, score_fp long"
+        ))
     return pq_adc_topk(codes, lut, "vec_id", k=20)
 
 
@@ -2383,12 +2373,8 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    map_path, pieces_path = _ensure_unigram_stage(spark, sf_dir)
-    scores = unigram_doc_cross_entropy(
-        docs, "text", "doc_id",
-        spark.read.parquet(map_path),
-        spark.read.parquet(pieces_path),
-    )
+    mapping, pieces = _unigram_stage(spark, sf_dir)
+    scores = unigram_doc_cross_entropy(docs, "text", "doc_id", mapping, pieces)
     ranked = global_ranks(
         scores.select("doc_id", "xent_fp"),
         [F.col("xent_fp").asc(), F.col("doc_id").asc()],
@@ -3871,6 +3857,35 @@ def q_topic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _classifier_stage(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """Stage the hashed feature relation and the trained fixed-point
+    weight table ONCE for every classifier query; returns the staged
+    (features, weights). Training is skipped under stage reuse."""
+    from redshift_to_pendo_api_data_pipeline_spark.operators.classifier import (
+        hashed_features,
+        train_logreg,
+        weights_fixed_point,
+    )
+
+    root = stage_dir(sf_dir)
+    feats_path = f"{root}/clf_features.parquet"
+    w_path = f"{root}/clf_weights.parquet"
+    if reusable(spark, feats_path, w_path):
+        return spark.read.parquet(feats_path), spark.read.parquet(w_path)
+    docs = load_table(spark, sf_dir, "documents")
+    feats = stage(spark, feats_path,
+                  lambda: hashed_features(docs, "text", "doc_id"))
+    labels = docs.select(
+        F.col("doc_id").alias("doc"),
+        F.col("source").isin([f"src{i}" for i in range(5)])
+        .cast("int").alias("y"),
+    )
+    w = train_logreg(feats, labels, n_epochs=3)
+    return feats, stage(spark, w_path, lambda: weights_fixed_point(w))
+
+
 def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Learned quality filter (fasttext/CCNet family, DSIR's parametric
     sibling): a logistic-regression domain discriminator over hashed
@@ -3885,27 +3900,10 @@ def q_quality_classifier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipped under stage reuse (driver-coordinated epochs; same contract
     as the quantizer sidecars)."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.classifier import (
-        hashed_features,
         score_logreg_fp,
-        train_logreg,
-        weights_fixed_point,
     )
-    docs = load_table(spark, sf_dir, "documents")
-    root = stage_dir(sf_dir)
-    feats_path = f"{root}/clf_features.parquet"
-    w_path = f"{root}/clf_weights.parquet"
-    if not reusable(spark, feats_path, w_path):
-        feats = stage(spark, feats_path,
-                      lambda: hashed_features(docs, "text", "doc_id"))
-        labels = docs.select(
-            F.col("doc_id").alias("doc"),
-            F.col("source").isin([f"src{i}" for i in range(5)])
-            .cast("int").alias("y"),
-        )
-        w = train_logreg(feats, labels, n_epochs=3)
-        stage_parquet(weights_fixed_point(w), w_path)
-    feats = spark.read.parquet(feats_path)
-    wfp = spark.read.parquet(w_path)
+
+    feats, wfp = _classifier_stage(spark, sf_dir)
     return score_logreg_fp(feats, wfp).select(
         F.col("doc").alias("doc_id"), "logit_fp"
     )
@@ -3924,11 +3922,7 @@ def q_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_logreg_fp,
     )
 
-    # run (or reuse) the same staging as quality_classifier_scores
-    q_quality_classifier_scores(spark, sf_dir)
-    root = stage_dir(sf_dir)
-    feats = spark.read.parquet(f"{root}/clf_features.parquet")
-    wfp = spark.read.parquet(f"{root}/clf_weights.parquet")
+    feats, wfp = _classifier_stage(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     labels = docs.select(
         F.col("doc_id").alias("doc"),
@@ -5465,11 +5459,7 @@ def q_classifier_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         score_logreg_fp,
     )
 
-    # run (or reuse) the same staging as quality_classifier_scores
-    q_quality_classifier_scores(spark, sf_dir)
-    root = stage_dir(sf_dir)
-    feats = spark.read.parquet(f"{root}/clf_features.parquet")
-    wfp = spark.read.parquet(f"{root}/clf_weights.parquet")
+    feats, wfp = _classifier_stage(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     labels = docs.select(
         F.col("doc_id").alias("doc"),
@@ -5638,7 +5628,20 @@ def q_embedding_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = stage_dir(sf_dir)
     comp_path = f"{root}/pca_components.parquet"
     mean_path = f"{root}/pca_mean.parquet"
-    if not reusable(spark, comp_path, mean_path):
+    if reusable(spark, comp_path, mean_path):
+        comp_rows = spark.read.parquet(comp_path).collect()
+        mean_rows = spark.read.parquet(mean_path).collect()
+        k = 1 + max(r["pc"] for r in comp_rows)
+        dim = len(mean_rows)
+        comps = [[0] * dim for _ in range(k)]
+        for r in comp_rows:
+            comps[r["pc"]][r["d"]] = int(r["comp_fp"])
+        mean = [0] * dim
+        for r in mean_rows:
+            mean[r["d"]] = int(r["mean_fp"])
+    else:
+        # the trained ints are what the staged copy holds, so the
+        # projection uses them directly; the oracle reads the copy
         comps, mean = train_pca_fp(emb, "embedding", k=3)
         stage_parquet(
             spark.createDataFrame(
@@ -5655,16 +5658,6 @@ def q_embedding_pca_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             mean_path,
         )
-    comp_rows = spark.read.parquet(comp_path).collect()
-    mean_rows = spark.read.parquet(mean_path).collect()
-    k = 1 + max(r["pc"] for r in comp_rows)
-    dim = len(mean_rows)
-    comps = [[0] * dim for _ in range(k)]
-    for r in comp_rows:
-        comps[r["pc"]][r["d"]] = int(r["comp_fp"])
-    mean = [0] * dim
-    for r in mean_rows:
-        mean[r["d"]] = int(r["mean_fp"])
     return pca_project_fp(emb, "embedding", "vec_id", comps, mean)
 
 
