@@ -10849,7 +10849,7 @@ def oracle_sql() -> dict[str, str]:
             FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
             WHERE o.o_custkey IN (SELECT c_custkey FROM subs)
         """,
-        "bm25_ranking": """
+        "bm25_ranking": r"""
             WITH t AS (
               SELECT doc_id AS doc,
                      unnest(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) AS term
@@ -10924,7 +10924,7 @@ def oracle_sql() -> dict[str, str]:
                            // 1000000) AS BIGINT) AS adjusted_post_ppm
             FROM a, gg
         """,
-        "nb_source_classify": """
+        "nb_source_classify": r"""
             WITH train AS (SELECT * FROM documents WHERE doc_id % 5 <> 0),
             sc AS (SELECT * FROM documents WHERE doc_id % 5 = 0),
             ttok AS (
@@ -14549,15 +14549,15 @@ def oracle_sql() -> dict[str, str]:
             n1 AS (
               SELECT *,
                 lower(regexp_extract(url,
-                    '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) AS scheme,
+                    '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
                 regexp_extract(regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
+                    '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
                     '([^@]*)$', 1) AS hostport,
                 regexp_replace(regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1),
+                    '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1),
                     '/+$', '') AS path0,
                 regexp_extract(regexp_extract(url, '^([^#]*)', 1),
-                    '\?(.*)$', 1) AS qraw
+                    '\\?(.*)$', 1) AS qraw
               FROM raw),
             n2 AS (
               SELECT *,
@@ -14570,8 +14570,8 @@ def oracle_sql() -> dict[str, str]:
                          ':([0-9]+)$', 1) AS INTEGER), 1073741824) > 65535)
                 ) AS bad_port,
                 (regexp_matches(regexp_extract(url,
-                     '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
-                     '[\[\]]')
+                     '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
+                     '[\\[\\]]')
                  OR regexp_matches(url, '[\t\r\n]')) AS bad_host,
                 CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
                 array_to_string(list_filter(string_split(qraw, '&'),
@@ -14594,8 +14594,8 @@ def oracle_sql() -> dict[str, str]:
               SELECT *,
                 regexp_extract(
                     regexp_extract(url_norm,
-                        '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
-                    '([^.:]+\.[^.:]+)(:[0-9]+)?$', 1) AS domain
+                        '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
+                    '([^.:]+\\.[^.:]+)(:[0-9]+)?$', 1) AS domain
               FROM n3)
             SELECT doc_id, url_norm, domain
             FROM n4 ORDER BY doc_id
@@ -14629,15 +14629,15 @@ def oracle_sql() -> dict[str, str]:
             n1 AS (
               SELECT *,
                 lower(regexp_extract(url,
-                    '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) AS scheme,
+                    '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
                 regexp_extract(regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
+                    '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
                     '([^@]*)$', 1) AS hostport,
                 regexp_replace(regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1),
+                    '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1),
                     '/+$', '') AS path0,
                 regexp_extract(regexp_extract(url, '^([^#]*)', 1),
-                    '\?(.*)$', 1) AS qraw
+                    '\\?(.*)$', 1) AS qraw
               FROM raw),
             n2 AS (
               SELECT *,
@@ -14650,8 +14650,8 @@ def oracle_sql() -> dict[str, str]:
                          ':([0-9]+)$', 1) AS INTEGER), 1073741824) > 65535)
                 ) AS bad_port,
                 (regexp_matches(regexp_extract(url,
-                     '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
-                     '[\[\]]')
+                     '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
+                     '[\\[\\]]')
                  OR regexp_matches(url, '[\t\r\n]')) AS bad_host,
                 CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
                 array_to_string(list_filter(string_split(qraw, '&'),
@@ -14674,8 +14674,8 @@ def oracle_sql() -> dict[str, str]:
               SELECT *,
                 regexp_extract(
                     regexp_extract(url_norm,
-                        '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
-                    '([^.:]+\.[^.:]+)(:[0-9]+)?$', 1) AS domain
+                        '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
+                    '([^.:]+\\.[^.:]+)(:[0-9]+)?$', 1) AS domain
               FROM n3)
             SELECT source, count(*) AS n_kept
             FROM n4
@@ -14711,15 +14711,15 @@ def oracle_sql() -> dict[str, str]:
             n1 AS (
               SELECT *,
                 lower(regexp_extract(url,
-                    '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) AS scheme,
+                    '^([A-Za-z][A-Za-z0-9+.\\-]*)://', 1)) AS scheme,
                 regexp_extract(regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
+                    '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
                     '([^@]*)$', 1) AS hostport,
                 regexp_replace(regexp_extract(url,
-                    '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1),
+                    '^[A-Za-z][A-Za-z0-9+.\\-]*://[^/?#]*([^?#]*)', 1),
                     '/+$', '') AS path0,
                 regexp_extract(regexp_extract(url, '^([^#]*)', 1),
-                    '\?(.*)$', 1) AS qraw
+                    '\\?(.*)$', 1) AS qraw
               FROM raw),
             n2 AS (
               SELECT *,
@@ -14732,8 +14732,8 @@ def oracle_sql() -> dict[str, str]:
                          ':([0-9]+)$', 1) AS INTEGER), 1073741824) > 65535)
                 ) AS bad_port,
                 (regexp_matches(regexp_extract(url,
-                     '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
-                     '[\[\]]')
+                     '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
+                     '[\\[\\]]')
                  OR regexp_matches(url, '[\t\r\n]')) AS bad_host,
                 CASE WHEN path0 = '' THEN '/' ELSE path0 END AS path,
                 array_to_string(list_filter(string_split(qraw, '&'),
@@ -14756,8 +14756,8 @@ def oracle_sql() -> dict[str, str]:
               SELECT *,
                 regexp_extract(
                     regexp_extract(url_norm,
-                        '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)', 1),
-                    '([^.:]+\.[^.:]+)(:[0-9]+)?$', 1) AS domain
+                        '^[A-Za-z][A-Za-z0-9+.\\-]*://([^/?#]*)', 1),
+                    '([^.:]+\\.[^.:]+)(:[0-9]+)?$', 1) AS domain
               FROM n3)
             , ranked AS (
               SELECT doc_id, url_norm, n_chars,

@@ -50,7 +50,7 @@ def cmd_discover(cfg: dict) -> int:
     return 0
 
 
-def _make_sink(cfg: dict, stream: StreamSpec, version: int, state: State):
+def _make_sink(cfg: dict, stream: StreamSpec, state: State):
     sink_cfg = cfg.get("sink", {"kind": "noop"})
     kind = sink_cfg.get("kind", "noop")
     if kind == "noop":
@@ -64,7 +64,7 @@ def _make_sink(cfg: dict, stream: StreamSpec, version: int, state: State):
             return write_message_file(
                 flat,
                 stream.name,
-                version,
+                state.get_bookmark(stream.name, "version"),  # run_sync's stamp
                 [stream.field_mappings.get(stream.primary_key, stream.primary_key)],
                 state.to_dict(),
                 f"{sink_cfg['out_dir']}/{stream.name}",
@@ -114,9 +114,7 @@ def cmd_sync(cfg: dict, state_path: str | None) -> int:
             from redshift_to_pendo_api_data_pipeline_spark.sources.jdbc import JdbcConfig, read_table
             jc = JdbcConfig(**{k: v for k, v in src.items() if k != "kind"})
             df = read_table(spark, jc, stream.name)
-        from redshift_to_pendo_api_data_pipeline_spark.plans.state import now_version
-        version = state.get_bookmark(stream.name, "version") or now_version()
-        sink = _make_sink(cfg, stream, version, state)
+        sink = _make_sink(cfg, stream, state)
         res = run_sync(spark, df, stream, state, sink)
         print(
             f"stream={res.stream} records={res.record_count} "

@@ -99,6 +99,7 @@ def run_sync(
     1. read bookmark from state (INCREMENTAL only)
     2. build plan, stamp a version (FULL_TABLE mints a new one =
        ACTIVATE_VERSION swap; INCREMENTAL reuses, sync.py:114-121,199-204)
+       and write it to state, where a message-stamping sink reads it
     3. sink the data (idempotent writer, task retries safe)
     4. only then advance the bookmark to max(rk) over the sunk rows and
        clear ``currently_syncing`` — the target-echoes-state contract
@@ -112,6 +113,7 @@ def run_sync(
         version = now_version()
 
     state.currently_syncing = stream.name
+    state.write_bookmark(stream.name, "version", version)
     shaped = sync_plan(df, stream, bookmark=bookmark, allowlist=allowlist, limit=limit)
     # A2: record-counter metric riding the existing action (the reference
     # increments a per-row counter tagged db/table, sync.py:178-183; here
@@ -149,7 +151,6 @@ def run_sync(
             if new_bm is not None:
                 state.write_bookmark(stream.name, "replication_key_value", new_bm)
             state.write_bookmark(stream.name, "replication_key", stream.replication_key)
-        state.write_bookmark(stream.name, "version", version)
         state.currently_syncing = None
         bm = state.get_bookmark(stream.name, "replication_key_value")
         try:

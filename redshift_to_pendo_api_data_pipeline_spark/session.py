@@ -70,9 +70,9 @@ def get_spark(
         # Timestamps in testdata are TIMESTAMP (no tz); keep session UTC so
         # results are stable across environments and match the oracle.
         .config("spark.sql.session.timeZone", "UTC")
-        # The synthetic events table stores TIMESTAMP(NANOS) parquet, which
-        # Spark has no native type for (SPARK-40819); read as long nanos and
-        # convert in the loader (sources/tables.py).
+        # Guard for nanos-encoded sources: parquet TIMESTAMP(NANOS) has no
+        # Spark type (SPARK-40819); read as long nanos, convert in the
+        # loader (sources/tables.py). The fixtures' events.ts is micros.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local[N] puts driver + all N executor threads in ONE JVM: size the
         # heap for N concurrent tasks' shuffle/broadcast/write buffers, not

@@ -26,8 +26,8 @@ TABLES = (
 )
 
 
-# Columns stored as parquet TIMESTAMP(NANOS), which Spark reads as long
-# nanos under spark.sql.legacy.parquet.nanosAsLong (no native nanos type).
+# Guard for nanos-encoded sources: TIMESTAMP(NANOS) columns read as long
+# under spark.sql.legacy.parquet.nanosAsLong. The fixtures store micros.
 _NANOS_TS_COLS = {"events": ("ts",)}
 
 

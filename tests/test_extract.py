@@ -29,7 +29,8 @@ def test_incremental_filter_pushdown(spark, sf_dir):
     assert out.count() == orders.filter(F.col("o_orderdate") > F.lit(bm)).count()
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThan(o_orderdate" in plan
-    # events.ts (nanos->converted) still filters correctly
+    # events.ts (micros in the fixtures; nanos sources are converted by
+    # the loader) still filters correctly
     ev = load_table(spark, sf_dir, "events")
     bm2 = datetime(2024, 1, 15)
     n = incremental_filter(ev, "ts", bm2).count()

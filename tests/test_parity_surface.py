@@ -273,6 +273,35 @@ def test_cli_sync_singer_end_to_end(tmp_path):
     assert json.loads(first[1])["type"] == "SCHEMA"
 
 
+def test_cli_sync_full_table_stamps_messages_with_state_version(spark, tmp_path):
+    """A FULL_TABLE sync mints one new version: the message file's
+    ACTIVATE_VERSION and RECORD lines carry the version the state records,
+    not the prior run's stamp."""
+    from redshift_to_pendo_api_data_pipeline_spark import cli
+
+    cfg = {
+        "source": {"kind": "parquet", "dir": "/root/testdata/sf0.001"},
+        "streams": [{"name": "customer", "primary_key": "c_custkey",
+                     "replication_method": "FULL_TABLE"}],
+        "sink": {"kind": "singer", "out_dir": str(tmp_path / "out")},
+    }
+    cfg_path = tmp_path / "cfg.json"
+    cfg_path.write_text(json.dumps(cfg))
+    state_path = tmp_path / "state.json"
+    state_path.write_text(json.dumps({"bookmarks": {"customer": {"version": 5}}}))
+
+    assert cli.main(["sync", "-c", str(cfg_path), "-s", str(state_path)]) == 0
+    version = json.loads(state_path.read_text())["bookmarks"]["customer"]["version"]
+    assert version != 5
+    msgs = [json.loads(line)
+            for f in sorted((tmp_path / "out" / "customer").glob("*.txt"))
+            for line in f.read_text().splitlines() if line.strip()]
+    activate = [m for m in msgs if m["type"] == "ACTIVATE_VERSION"]
+    assert [m["version"] for m in activate] == [version]
+    records = [m for m in msgs if m["type"] == "RECORD"]
+    assert records and {m["version"] for m in records} == {version}
+
+
 def test_singer_conformance_runner_clean_stream(spark, sf_dir):
     """singer-check-tap parity: the full ordered message file our writer
     emits must pass the conformance validator with zero violations."""

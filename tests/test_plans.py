@@ -8,8 +8,10 @@
 - aggregations partial-aggregate map-side before the shuffle
 - JVM-only paths contain no Python eval nodes
 - narrow pipelines introduce no Exchange at all
+- every registry query's plan counts equal the committed PLANS.json
 """
 
+import json
 import os
 import sys
 
@@ -18,6 +20,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
+from tools.dump_plans import PLANS_JSON, plan_stats
 
 SF = "/root/testdata/sf0.001"
 
@@ -239,7 +242,12 @@ def test_global_plan_audit_no_smj_python_only_at_declared_edges(spark):
     Python eval nodes appear ONLY in the declared Arrow-batched edges
     (BLAS cosine / k-means assignment / media codecs). Staged pipelines
     materialize their signature writes during plan construction, so
-    their probe plans are pure JVM by design."""
+    their probe plans are pure JVM by design.
+
+    The same loop recomputes each query's formatted-plan counts with
+    tools/dump_plans.plan_stats and asserts them equal to the committed
+    PLANS.json, with zero SortMergeJoin, CartesianProduct and
+    BatchEvalPython everywhere."""
     PYTHON_EDGE_QUERIES = {
         "semantic_dedup",        # IVF assign pandas_udf
         "media_decode_stats",    # mapInPandas codec
@@ -253,17 +261,38 @@ def test_global_plan_audit_no_smj_python_only_at_declared_edges(spark):
         "bucketed_neardup_recall",  # exact ground-truth side = same BLAS edge
         "embedding_neardup_bucketed",  # same declared BLAS gram-matrix edge
     }
-    py_offenders, smj_offenders = [], []
+    with open(PLANS_JSON) as fh:
+        committed = json.load(fh)
+    assert committed["sf"] == os.path.basename(SF)
+    committed = committed["queries"]
+    py_offenders, smj_offenders, forbidden, drift = [], [], {}, []
     for name, fn in entry.queries().items():
-        p = fn(spark, SF)._jdf.queryExecution().executedPlan().toString()
+        df = fn(spark, SF)
+        p = df._jdf.queryExecution().executedPlan().toString()
         if "SortMergeJoin" in p:
             smj_offenders.append(name)
         has_py = ("EvalPython" in p or "MapInPandas" in p
                   or "FlatMapGroupsInPandas" in p)
         if has_py and name not in PYTHON_EDGE_QUERIES:
             py_offenders.append(name)
+        stats = plan_stats(df)
+        bad = {k: stats[k] for k in ("smj", "cartesian", "batch_eval_python") if stats[k]}
+        if bad:
+            forbidden[name] = bad
+        old = committed.get(name, {})
+        if stats != old:
+            drift.append(f"{name}: " + ", ".join(
+                f"{k} {old.get(k)} -> {v}" for k, v in stats.items() if old.get(k) != v))
     assert smj_offenders == [], smj_offenders
     assert py_offenders == [], py_offenders
+    assert forbidden == {}, forbidden
+    assert set(committed) == set(entry.queries()), (
+        sorted(set(committed) ^ set(entry.queries())))
+    assert drift == [], (
+        "plan counts differ from the committed PLANS.json; rerun "
+        "`SPARK_GRAFT_CPUS=4 python tools/dump_plans.py` and record why "
+        "in CHANGES.md:\n"
+        + "\n".join(drift))
 
 
 def test_retention_cohorts_single_scan(spark):
@@ -289,18 +318,13 @@ def test_ivfpq_probe_partition_pruned_and_jvm(spark):
 
 
 def test_explains_md_covers_every_registry_query():
-    """EXPLAINS.md (tools/dump_plans.py output) must carry exactly one
-    plan section AND one plan-stat table row per registry query — a
-    stale artifact silently under-documents new queries."""
-    import re
-
-    with open("/root/repo/EXPLAINS.md") as fh:
-        text = fh.read()
-    sections = set(re.findall(r"^## (.+)$", text, re.M))
-    sections.discard(
-        "Plan-statistics summary (mechanical counts over the plans below)"
-    )
-    table_rows = set(re.findall(r"^\| ([a-z0-9_]+) \| \d", text, re.M))
+    """PLANS.json (tools/dump_plans.py output) must carry exactly one
+    plan-count entry per registry query, and no entry for a query the
+    registry no longer has — a stale artifact silently under-documents
+    new queries. The counts themselves are checked by the registry sweep
+    above."""
+    with open(PLANS_JSON) as fh:
+        planned = set(json.load(fh)["queries"])
     registry = set(entry.queries())
-    assert sections == registry
-    assert table_rows == registry
+    assert registry - planned == set()
+    assert planned - registry == set()

@@ -436,7 +436,7 @@ def test_cli_http_sink_posts_each_batch_once(spark, mock_api):
     base_url, api = mock_api
     cfg = {"sink": {"kind": "http", "base_url": base_url, "batch_records": 10}}
     stream = StreamSpec(name="visitors", primary_key="id")
-    sink = _make_sink(cfg, stream, 1, State())
+    sink = _make_sink(cfg, stream, State())
     shaped = spark.range(45).select(
         "id", F.struct((F.col("id") * 2).alias("score")).alias("values")
     )

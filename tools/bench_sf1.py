@@ -90,7 +90,7 @@ def main(all_queries: bool = False, sf3: bool = False) -> int:
     os.environ["SPARK_GRAFT_STAGE_REUSE"] = "1"
     os.environ["SPARK_GRAFT_STAGE_ROOT"] = f"/tmp/sf1_bench_stage_{os.getpid()}"
 
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     qs = entry.queries()
 

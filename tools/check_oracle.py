@@ -76,7 +76,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", *only: str) -> int:
         if a.startswith("--json="):
             json_out = a.split("=", 1)[1]
     only = tuple(a for a in only if not a.startswith("--json="))
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(

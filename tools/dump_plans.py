@@ -1,97 +1,96 @@
-"""Regenerate EXPLAINS.md: the formatted physical plan of every driver
-query at sf0.01 — the evidence behind SCALE.md's claims (pushdown reaches
-the scan, joins broadcast where intended, aggregations partial-combine,
-Python appears only at the declared edges).
+"""Regenerate PLANS.json: the mechanical counts over every registry
+query's formatted physical plan at sf0.001 — the evidence behind
+SCALE.md's claims (pushdown reaches the scan, joins broadcast where
+intended, aggregations partial-combine, Python appears only at the
+declared edges).
 
-    python tools/dump_plans.py
+    SPARK_GRAFT_CPUS=4 python tools/dump_plans.py
+
+``tests/test_plans.py``'s registry sweep recomputes every count with the
+same ``plan_stats`` helper, in its ``local[4]`` session, and fails on any
+difference from the committed file, so a plan change lands together with
+a rerun of this script and a CHANGES.md line saying why. Run it at 4
+cores: ``lpa_copurchase_communities`` picks its broadcast build side
+from staged-file size estimates, which vary with the core count.
+
+What to look for in a query's plan (``df.explain("formatted")``):
+``PushedFilters``/``ReadSchema`` on scans (pushdown + pruning),
+``BroadcastHashJoin`` on dimension joins, ``partial_*`` aggregate modes
+before each ``Exchange``, ``TakeOrderedAndProject`` for top-k, and
+``ArrowEvalPython``/``MapInPandas`` appearing ONLY in the declared
+Python-edge operators. Plans are the *initial* AQE plans
+(``isFinalPlan=false``); AQE may further coalesce partitions or convert
+to broadcast at runtime. Staged pipelines show their PROBE-phase plan:
+the stage-build plans execute eagerly before the frame is returned.
 """
 
 from __future__ import annotations
 
 import io
+import json
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod
 from redshift_to_pendo_api_data_pipeline_spark.session import get_spark
 
-SF_DIR = "/root/testdata/sf0.01"
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "EXPLAINS.md")
+SF_DIR = "/root/testdata/sf0.001"
+PLANS_JSON = os.path.join(ROOT, "PLANS.json")
 
-HEADER = """# EXPLAINS — physical plans of every driver query (sf0.01)
-
-Generated by `python tools/dump_plans.py`. What to look for per SCALE.md:
-`PushedFilters`/`ReadSchema` on scans (pushdown + pruning),
-`BroadcastHashJoin` on dimension joins, `partial_*` aggregate modes before
-each `Exchange`, `TakeOrderedAndProject` for top-k, and
-`ArrowEvalPython`/`MapInPandas` appearing ONLY in the declared
-Python-edge operators.
-
-Plans are the *initial* AQE plans (`isFinalPlan=false`); AQE may further
-coalesce partitions or convert to broadcast at runtime.
-"""
+# pandas/Arrow exec nodes: ArrowEvalPython, BatchEvalPython, MapInPandas,
+# MapInArrow, FlatMapGroupsInPandas, FlatMapCoGroupsInArrow, ...
+_PY_NODE = r"\w*(?:Python|InPandas|InArrow)\w*"
 
 
 def _plan_stats(plan: str) -> dict:
     """Mechanical counts over one formatted plan — the per-query scale
     profile SCALE.md's prose claims, in machine-checkable form."""
-    import re as _re
 
     def count(node: str) -> int:
         # formatted-mode detail headers: "(13) Exchange" — one per node
         # (the tree spells the same node "Exchange (13)", so matching the
         # header form avoids double counting)
-        return len(_re.findall(rf"^\(\d+\) {node}\b", plan, _re.M))
+        return len(re.findall(rf"^\(\d+\) {node}\b", plan, re.M))
 
     return {
         "exchanges": count("Exchange"),
         "bcast_joins": count("BroadcastHashJoin") + count("BroadcastNestedLoopJoin"),
+        "bnlj": count("BroadcastNestedLoopJoin"),
         "shj": count("ShuffledHashJoin"),
         "smj": count("SortMergeJoin"),
+        "cartesian": count("CartesianProduct"),
+        "sort_aggregate": count("SortAggregate"),
         "scans": count("Scan parquet"),
-        "py_edges": (
-            count("ArrowEvalPython") + count("MapInPandas")
-            + count("BatchEvalPython") + count("FlatMapGroupsInPandas")
-        ),
+        "py_edges": count(_PY_NODE),
+        "batch_eval_python": count("BatchEvalPython"),
     }
 
 
+def plan_stats(df) -> dict:
+    """``_plan_stats`` of the text ``df.explain("formatted")`` prints."""
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return _plan_stats(buf.getvalue())
+
+
 def main() -> None:
-    spark = get_spark(app_name="dump-plans", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="dump-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    sections = [HEADER]
-    rows = []
-    for name, fn in entrymod.queries().items():
-        df = fn(spark, SF_DIR)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue().rstrip()
-        rows.append((name, _plan_stats(plan)))
-        sections.append(f"\n## {name}\n\n```\n{plan}\n```\n")
-    summary = [
-        "\n## Plan-statistics summary (mechanical counts over the plans below)\n",
-        "\nSMJ is 0 everywhere by design (machine-asserted in "
-        "tests/test_plans.py); `py` counts Python eval nodes, which the "
-        "same audit restricts to the declared Arrow edges. Staged "
-        "pipelines show their PROBE-phase plan (the stage-build plans "
-        "execute eagerly before explain).\n",
-        "\n| query | exchanges | bcast | shj | smj | scans | py |\n",
-        "|---|---|---|---|---|---|---|\n",
-    ]
-    for name, s in rows:
-        summary.append(
-            f"| {name} | {s['exchanges']} | {s['bcast_joins']} | {s['shj']} "
-            f"| {s['smj']} | {s['scans']} | {s['py_edges']} |\n"
-        )
-    sections.insert(1, "".join(summary))
-    with open(OUT, "w") as f:
-        f.write("".join(sections))
-    print(f"wrote {OUT} ({len(entrymod.queries())} plans)")
+    stats = {name: plan_stats(fn(spark, SF_DIR))
+             for name, fn in entrymod.queries().items()}
+    # sorted, one query per line: a plan change is a one-line diff
+    rows = ",\n".join(f"    {json.dumps(n)}: {json.dumps(stats[n], sort_keys=True)}"
+                      for n in sorted(stats))
+    with open(PLANS_JSON, "w") as f:
+        f.write(f'{{\n  "queries": {{\n{rows}\n  }},\n'
+                f'  "sf": {json.dumps(os.path.basename(SF_DIR))}\n}}\n')
+    print(f"wrote {PLANS_JSON} ({len(stats)} queries)")
 
 
 if __name__ == "__main__":
