@@ -24,6 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from redshift_to_pendo_api_data_pipeline_spark.schema import ColumnSpec, StreamSpec
+from redshift_to_pendo_api_data_pipeline_spark.sources.tables import table_schema
 
 LOGGER = logging.getLogger(__name__)
 
@@ -165,12 +166,10 @@ def discover_parquet_catalog(
 ) -> list[CatalogEntry]:
     """Discovery for file sources: schema comes from the parquet footer
     (zero data read), the moral equivalent of the reference's three
-    INFORMATION_SCHEMA queries (discover.py:20-54)."""
-    entries = []
-    for t in tables:
-        schema = spark.read.parquet(f"{sf_dir}/{t}.parquet").schema
-        entries.append(CatalogEntry(stream=t, columns=[f.name for f in schema.fields]))
-    return entries
+    INFORMATION_SCHEMA queries (discover.py:20-54). It is the schema
+    ``load_table`` pins, so a sync after discovery infers nothing again."""
+    return [CatalogEntry(stream=t, columns=table_schema(spark, sf_dir, t).names)
+            for t in tables]
 
 
 def resolve_columns(

@@ -5,12 +5,27 @@ The reference's eager relation scan (``tap-redshift/src/connect.py:8-14``
 table is a lazy DataFrame whose projection/filters Catalyst pushes into the
 parquet scan (column pruning + predicate pushdown + partition pruning come
 free — see SURVEY.md §4).
+
+Schemas come from one place: ``_pinned`` infers a table's schema with
+Spark's own parquet inference (a footer-reading job) and pins it, with the
+load-time fix-ups (nanos longs to timestamps, TIMESTAMP_NTZ to TIMESTAMP),
+for as long as the table path's leaf-file listing (name, length,
+modification time, read through ``staging.fs_list_files``) is unchanged.
+Later loads read with the pinned schema and launch no job; the reference
+likewise never re-discovered a stream's columns per SELECT.
+``catalog.discover_parquet_catalog`` reads the same pinned schema, so
+discovery followed by a sync infers each table once.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from dataclasses import dataclass
+from weakref import WeakKeyDictionary
+
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+
+from redshift_to_pendo_api_data_pipeline_spark.staging import fs_list_files
 
 TABLES = (
     "region",
@@ -41,26 +56,75 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
+def _fixups(schema: T.StructType, name: str) -> tuple[Column, ...]:
+    """The load-time projection over a file schema, or ``()`` when every
+    column reads as it is stored."""
+    nanos = _NANOS_TS_COLS.get(name, ())
+    cols, fixed = [], False
+    for f in schema.fields:
+        q = "`" + f.name.replace("`", "``") + "`"
+        if f.name in nanos and isinstance(f.dataType, T.LongType):
+            # integer div: ns values (~1.7e18) overflow double mantissa
+            cols.append(F.timestamp_micros(F.expr(f"{q} div 1000")).alias(f.name))
+            fixed = True
+        elif isinstance(f.dataType, T.TimestampNTZType):
+            # Parquet TIMESTAMP(isAdjustedToUTC=false) surfaces as
+            # TIMESTAMP_NTZ; with the session pinned to UTC, casting to
+            # TIMESTAMP is an identity relabel that keeps every downstream
+            # function (unix_micros, windows, watermarks) applicable.
+            cols.append(F.col(q).cast("timestamp").alias(f.name))
+            fixed = True
+        else:
+            cols.append(F.col(q))
+    return tuple(cols) if fixed else ()
+
+
+@dataclass(frozen=True)
+class _Pinned:
+    listing: tuple[tuple[str, int, int], ...]  # (file, length, mtime)
+    schema: T.StructType                       # as Spark infers it
+    columns: tuple[Column, ...]                # the fix-up projection
+
+
+# One entry per table path for each session. An entry stands while the
+# path's leaf-file listing is unchanged: a rewritten, added or removed
+# file changes the listing and the next load infers again. Keyed by
+# session because inference reads session confs, and the fix-up columns
+# belong to that session's JVM. Two threads missing at once both infer;
+# either entry is valid.
+_PINNED: "WeakKeyDictionary[SparkSession, dict[str, _Pinned]]" = WeakKeyDictionary()
+
+
+def _pinned(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, _Pinned]:
+    _ensure_session_confs(spark)
+    path = f"{sf_dir}/{name}.parquet"
+    # listed before inferring: a file that lands in between changes the
+    # next listing, so the entry can never outlive the files it describes
+    listing = tuple(fs_list_files(spark, path))
+    entries = _PINNED.setdefault(spark, {})
+    hit = entries.get(path)
+    if hit is None or hit.listing != listing:
+        schema = spark.read.parquet(path).schema
+        hit = entries[path] = _Pinned(listing, schema, _fixups(schema, name))
+    return path, hit
+
+
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """The table's file schema as Spark infers it from the parquet
+    footers, inferred once per leaf-file listing."""
+    return _pinned(spark, sf_dir, name)[1].schema
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one table. Equivalent of the reference's per-stream
     SELECT (``tap-redshift/src/sync.py:107,143-155``) minus the hand-built
     WHERE/LIMIT strings — callers compose those as DataFrame ops and
-    Catalyst pushes them down."""
-    _ensure_session_confs(spark)
-    path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.parquet(path)
-    for c in _NANOS_TS_COLS.get(name, ()):
-        if isinstance(df.schema[c].dataType, T.LongType):
-            # integer div: ns values (~1.7e18) overflow double mantissa
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # Parquet TIMESTAMP(isAdjustedToUTC=false) surfaces as TIMESTAMP_NTZ;
-    # with the session pinned to UTC, casting to TIMESTAMP is an identity
-    # relabel that keeps every downstream function (unix_micros, windows,
-    # watermarks) applicable.
-    ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    Catalyst pushes them down. The scan reads with the pinned schema, so
+    a table whose files have not changed since its last load launches no
+    Spark job here."""
+    path, p = _pinned(spark, sf_dir, name)
+    df = spark.read.schema(p.schema).parquet(path)
+    return df.select(*p.columns) if p.columns else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -290,7 +290,7 @@ def test_global_plan_audit_no_smj_python_only_at_declared_edges(spark):
         sorted(set(committed) ^ set(entry.queries())))
     assert drift == [], (
         "plan counts differ from the committed PLANS.json; rerun "
-        "`SPARK_GRAFT_CPUS=4 python tools/dump_plans.py` and record why "
+        "`python tools/dump_plans.py` and record why "
         "in CHANGES.md:\n"
         + "\n".join(drift))
 

@@ -64,7 +64,9 @@ def test_banded_equals_theta_keyed_temporal(spark, sf_dir):
 def test_banded_join_is_hash_join_no_nested_loop(spark, sf_dir):
     """The scale contract: the banded join plans as a hash equi-join —
     never a nested loop — even when nothing is broadcastable."""
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    k = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(k, None)
+    spark.conf.set(k, "-1")
     try:
         ev = load_table(spark, sf_dir, "events").select("user_id", "event_id", "ts")
         win = ev.select(
@@ -79,7 +81,7 @@ def test_banded_join_is_hash_join_no_nested_loop(spark, sf_dir):
         assert "NestedLoop" not in plan and "Cartesian" not in plan
         assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set(k, old) if old is not None else spark.conf.unset(k)
 
 
 # --------------------------------------------- runtime bloom-filter prune

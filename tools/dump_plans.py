@@ -4,14 +4,15 @@ SCALE.md's claims (pushdown reaches the scan, joins broadcast where
 intended, aggregations partial-combine, Python appears only at the
 declared edges).
 
-    SPARK_GRAFT_CPUS=4 python tools/dump_plans.py
+    python tools/dump_plans.py
 
 ``tests/test_plans.py``'s registry sweep recomputes every count with the
-same ``plan_stats`` helper, in its ``local[4]`` session, and fails on any
-difference from the committed file, so a plan change lands together with
-a rerun of this script and a CHANGES.md line saying why. Run it at 4
-cores: ``lpa_copurchase_communities`` picks its broadcast build side
-from staged-file size estimates, which vary with the core count.
+same ``plan_stats`` helper and fails on any difference from the committed
+file, so a plan change lands together with a rerun of this script and a
+CHANGES.md line saying why. This script builds the sweep's session
+(``local[4]``, 4 shuffle partitions) whatever the host's core count:
+``lpa_copurchase_communities`` picks its broadcast build side from
+staged-file size estimates, which vary with the core count.
 
 What to look for in a query's plan (``df.explain("formatted")``):
 ``PushedFilters``/``ReadSchema`` on scans (pushdown + pruning),
@@ -80,7 +81,7 @@ def plan_stats(df) -> dict:
 
 
 def main() -> None:
-    spark = get_spark(app_name="dump-plans")
+    spark = get_spark(app_name="dump-plans", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
     stats = {name: plan_stats(fn(spark, SF_DIR))
              for name, fn in entrymod.queries().items()}
