@@ -83,23 +83,37 @@ class GiveUpError(Exception):
     __init__.py:305-307 ``giveup=lambda e: 400 <= e.status < 500``)."""
 
 
+def backoff_delays(
+    max_tries: int = 5, base_delay: float = 0.5, max_delay: float = 30.0
+) -> Iterator[float]:
+    """B6: the waits between ``max_tries`` attempts, doubling from
+    ``base_delay`` up to ``max_delay`` (0.5, 1, 2, 4 s by default)."""
+    delay = base_delay
+    for _ in range(max_tries - 1):
+        yield delay
+        delay = min(delay * 2, max_delay)
+
+
 def retry_with_backoff(
     fn: Callable[[], object],
     max_tries: int = 5,
     base_delay: float = 0.5,
     max_delay: float = 30.0,
     sleep: Callable[[float], None] = time.sleep,
+    delays: Iterator[float] | None = None,
 ):
-    """B6: expo backoff with full giveup on :class:`GiveUpError`."""
-    delay = base_delay
-    for attempt in range(1, max_tries + 1):
+    """B6: expo backoff with full giveup on :class:`GiveUpError`. After a
+    failure, sleep the next of ``delays`` (the rest of a schedule already
+    under way) or of ``backoff_delays(max_tries, ...)``, and re-raise once
+    they run out."""
+    waits = backoff_delays(max_tries, base_delay, max_delay) if delays is None else delays
+    while True:
         try:
             return fn()
         except GiveUpError:
             raise
         except Exception:
-            if attempt == max_tries:
+            wait = next(waits, None)
+            if wait is None:
                 raise
-            sleep(delay)
-            delay = min(delay * 2, max_delay)
-    raise AssertionError("unreachable")
+            sleep(wait)

@@ -5,12 +5,14 @@ to ``/api/v1/metadata/{kind}/{group}/value`` with asyncio concurrency
 (target-pendo/src/__init__.py:301-368). Here the equivalent is a
 ``mapPartitions`` writer: ``sink_dataframe`` spreads the records over as
 many writer partitions as the batch count and the cluster's cores allow,
-and Spark runs them as concurrent tasks, so the writer itself stays
-synchronous and simple; per-partition connection reuse replaces the
-shared httpx pool.
+and Spark runs them as concurrent tasks. Each writer keeps one POST in
+flight. Where the reference gives every POST its own backoff inside the
+gather, a writer here defers a batch that backs off and goes on posting
+the batches after it (``write_partition``), holding at most two batches.
 
 Reliability semantics preserved (SURVEY.md §2.9):
-- B6 retry: expo backoff, ≤5 tries, give up on 4xx;
+- B6 retry: expo backoff, ≤5 tries, give up on 4xx; a batch that shares
+  an ``id`` with a deferred one waits for it, so per-key order holds;
 - B7 per-record failure routing: the API reports per-record errors in the
   response body; failed records are routed to a quarantine location and
   re-posted by a later pass instead of failing the job
@@ -27,6 +29,7 @@ from __future__ import annotations
 
 import json
 import math
+import time
 import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
@@ -39,6 +42,7 @@ from redshift_to_pendo_api_data_pipeline_spark.sink.batching import (
     DEFAULT_MAX_RECORDS,
     GiveUpError,
     TokenBucket,
+    backoff_delays,
     batch_records,
     retry_with_backoff,
 )
@@ -133,11 +137,12 @@ class SinkConfig:
     # — N writers each get rate_calls/N. That bounds one sink call; each
     # bucket starts full, so several sink calls inside one period (sync
     # cycles, a quarantine retry pass) can together exceed the budget.
-    # Configs used directly in post_batch/write_partition
-    # (single-process paths) spend the whole budget.
+    # Configs used directly in post_once/write_partition
+    # (single-process paths) spend the whole budget. Every POST attempt,
+    # a deferred batch's retries included, takes one token.
     rate_calls: int = 1800
     rate_period: float = 300.0
-    max_tries: int = 5
+    max_tries: int = 5              # attempts per batch, first POST included
     request_delay: float = 0.0      # B10, default 0 (__init__.py:106)
     timeout: float = 300.0          # request.py:13-20
     group: str = "custom"
@@ -196,56 +201,56 @@ def _writer_count(spark, n: int, cfg: SinkConfig) -> int:
     ))
 
 
-def post_batch(cfg: SinkConfig, batch: list[bytes]) -> BatchResult:
-    """POST one JSON-array batch; classify per-record failures from the
-    response body (the API returns {total, updated, failed, errors:[{id}]}
-    — __init__.py:272-281 routes errors back to records)."""
-    body = b"[" + b",".join(batch) + b"]"
+def post_once(cfg: SinkConfig, batch: list[bytes]) -> dict:
+    """One POST attempt of a JSON-array batch: take a token from the
+    writer's bucket (B5), wait the fixed request delay (B10) and return
+    the parsed response body. A retryable failure raises as it is; any
+    other HTTP error raises :class:`GiveUpError` naming its class."""
     req = urllib.request.Request(
         cfg.endpoint,
-        data=body,
+        data=b"[" + b",".join(batch) + b"]",
         headers={
             "content-type": "application/json",
             "x-pendo-integration-key": cfg.api_key,
         },
         method="POST",
     )
-
-    def _do():
-        import time as _t
-        _bucket(cfg.rate_calls, cfg.rate_period).acquire()
-        if cfg.request_delay:
-            _t.sleep(cfg.request_delay)
+    _bucket(cfg.rate_calls, cfg.rate_period).acquire()
+    if cfg.request_delay:
+        time.sleep(cfg.request_delay)
+    try:
+        with urllib.request.urlopen(req, timeout=cfg.timeout) as resp:
+            return json.loads(resp.read() or b"{}")
+    except urllib.error.HTTPError as e:
+        # B8 (granular, r8): an error body of type `error.list` carries
+        # the application code the reference's
+        # raise_application_errors_on_failure maps (request.py:92-109).
+        # Codes in a retryable class keep retrying with backoff; the rest
+        # give up with the class named, not just the bare status.
+        err_code = None
         try:
-            with urllib.request.urlopen(req, timeout=cfg.timeout) as resp:
-                return json.loads(resp.read() or b"{}")
-        except urllib.error.HTTPError as e:
-            # B8 (granular, r8): an error body of type `error.list`
-            # carries the application code the reference's
-            # raise_application_errors_on_failure maps
-            # (request.py:92-109). Codes in a retryable class keep
-            # retrying with backoff; the rest give up with the class
-            # named, not just the bare status.
-            err_code = None
-            try:
-                body_ = json.loads(e.read() or b"{}")
-                if body_.get("type") == "error.list" and body_.get("errors"):
-                    d = body_["errors"][0]
-                    # reference reads .type then .code
-                    # (request.py:94-96); code wins when both present
-                    err_code = d.get("code") or d.get("type")
-            except (ValueError, AttributeError):
-                pass
-            klass = classify_error(err_code, e.code)
-            if klass in RETRYABLE_ERROR_CLASSES:
-                raise  # B6 path: backoff + retry
-            raise GiveUpError(
-                f"HTTP {e.code} [{klass}"
-                + (f"/{err_code}" if err_code else "")
-                + f"] at {cfg.endpoint}"
-            ) from e
+            body_ = json.loads(e.read() or b"{}")
+            if body_.get("type") == "error.list" and body_.get("errors"):
+                d = body_["errors"][0]
+                # reference reads .type then .code (request.py:94-96);
+                # code wins when both present
+                err_code = d.get("code") or d.get("type")
+        except (ValueError, AttributeError):
+            pass
+        klass = classify_error(err_code, e.code)
+        if klass in RETRYABLE_ERROR_CLASSES:
+            raise  # B6 path: backoff + retry
+        raise GiveUpError(
+            f"HTTP {e.code} [{klass}"
+            + (f"/{err_code}" if err_code else "")
+            + f"] at {cfg.endpoint}"
+        ) from e
 
-    payload = retry_with_backoff(_do, max_tries=cfg.max_tries)
+
+def batch_result(batch: list[bytes], payload: dict) -> BatchResult:
+    """Classify per-record failures from a response body (the API returns
+    {total, updated, failed, errors:[{id}]} — __init__.py:272-281 routes
+    errors back to records)."""
     res = BatchResult(
         total=int(payload.get("total", len(batch))),
         updated=int(payload.get("updated", 0)),
@@ -269,22 +274,81 @@ def post_batch(cfg: SinkConfig, batch: list[bytes]) -> BatchResult:
     return res
 
 
+def _ids(batch: list[bytes]) -> set:
+    return {json.loads(raw).get("id") for raw in batch}
+
+
+@dataclass
+class _Deferred:
+    """A batch whose POST failed with a retryable error, waiting out its
+    backoff while its writer posts the batches after it."""
+    batch: list[bytes]
+    ids: set
+    waits: Iterator[float]   # the rest of its backoff schedule
+    due: float               # time.monotonic() of its next attempt
+
+
+def _settle(cfg: SinkConfig, d: _Deferred) -> tuple:
+    """Wait until the deferred batch is due, then retry it on the rest of
+    its schedule; its result row, or the last attempt's error."""
+    time.sleep(max(0.0, d.due - time.monotonic()))
+    payload = retry_with_backoff(lambda: post_once(cfg, d.batch), delays=d.waits)
+    return _row(d.batch, payload)
+
+
+def _row(batch: list[bytes], payload: dict) -> tuple:
+    r = batch_result(batch, payload)
+    return (
+        r.total,
+        r.updated,
+        r.failed,
+        [p.decode() for p in r.failed_payloads],
+        list(r.failed_codes),
+        list(r.failed_classes),
+    )
+
+
 def write_partition(cfg: SinkConfig, payloads: Iterable[bytes]) -> Iterator[tuple]:
     """The foreachPartition body. Yields one row per batch:
     (total, updated, failed, failed_json_array, failed_codes,
     failed_classes) so failures land in a quarantine DataFrame —
     labeled with the application error code and its taxonomy class —
-    instead of killing the job."""
+    instead of killing the job.
+
+    B6 without stalling the writer: a batch whose POST fails with a
+    retryable error is deferred, and the writer goes on posting the
+    batches after it. The deferred batch is settled, retried on the rest
+    of its schedule (0.5, 1, 2, 4 s; ``max_tries`` attempts in all; a 4xx
+    gives up at once), when its backoff is due, before a second batch is
+    deferred, before a batch sharing an ``id`` with it is posted (so every
+    version of a key reaches the API in input order), and at the end of
+    the input. One POST is in flight at a time, and at most two batches
+    are held in memory."""
+    deferred = None
     for batch in batch_records(payloads, cfg.max_records, cfg.max_bytes):
-        r = post_batch(cfg, batch)
-        yield (
-            r.total,
-            r.updated,
-            r.failed,
-            [p.decode() for p in r.failed_payloads],
-            list(r.failed_codes),
-            list(r.failed_classes),
-        )
+        if deferred is not None and (
+            deferred.due <= time.monotonic() or not deferred.ids.isdisjoint(_ids(batch))
+        ):
+            yield _settle(cfg, deferred)
+            deferred = None
+        waits = backoff_delays(cfg.max_tries)
+        try:
+            payload = post_once(cfg, batch)
+        except GiveUpError:
+            raise
+        except Exception:
+            wait = next(waits, None)
+            if wait is None:
+                raise
+            failed = _Deferred(batch, _ids(batch), waits, time.monotonic() + wait)
+        else:
+            yield _row(batch, payload)
+            continue
+        if deferred is not None:
+            yield _settle(cfg, deferred)
+        deferred = failed
+    if deferred is not None:
+        yield _settle(cfg, deferred)
 
 
 def sink_dataframe(df: DataFrame, cfg: SinkConfig) -> DataFrame:

@@ -95,7 +95,11 @@ class _Pinned:
 _PINNED: "WeakKeyDictionary[SparkSession, dict[str, _Pinned]]" = WeakKeyDictionary()
 
 
-def _pinned(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, _Pinned]:
+def _pinned(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[str, _Pinned, DataFrame | None]:
+    """The table's path, its pinned entry and, on a miss, the inferring
+    reader that filled the entry (``None`` on a hit)."""
     _ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     # listed before inferring: a file that lands in between changes the
@@ -103,10 +107,12 @@ def _pinned(spark: SparkSession, sf_dir: str, name: str) -> tuple[str, _Pinned]:
     listing = tuple(fs_list_files(spark, path))
     entries = _PINNED.setdefault(spark, {})
     hit = entries.get(path)
-    if hit is None or hit.listing != listing:
-        schema = spark.read.parquet(path).schema
-        hit = entries[path] = _Pinned(listing, schema, _fixups(schema, name))
-    return path, hit
+    if hit is not None and hit.listing == listing:
+        return path, hit, None
+    inferred = spark.read.parquet(path)
+    schema = inferred.schema
+    entries[path] = _Pinned(listing, schema, _fixups(schema, name))
+    return path, entries[path], inferred
 
 
 def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
@@ -121,9 +127,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     WHERE/LIMIT strings — callers compose those as DataFrame ops and
     Catalyst pushes them down. The scan reads with the pinned schema, so
     a table whose files have not changed since its last load launches no
-    Spark job here."""
-    path, p = _pinned(spark, sf_dir, name)
-    df = spark.read.schema(p.schema).parquet(path)
+    Spark job here; a miss returns the reader that inferred the schema."""
+    path, p, df = _pinned(spark, sf_dir, name)
+    if df is None:
+        df = spark.read.schema(p.schema).parquet(path)
     return df.select(*p.columns) if p.columns else df
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import threading
 import time
+import urllib.error
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
@@ -21,6 +22,7 @@ from redshift_to_pendo_api_data_pipeline_spark.sink.http_sink import (
     SinkConfig,
     route_endpoint,
     sink_dataframe,
+    write_partition,
 )
 
 
@@ -444,3 +446,83 @@ def test_cli_http_sink_posts_each_batch_once(spark, mock_api):
     batches = {frozenset(r["id"] for r in b) for b in api.store}
     assert api.posts == len(api.store) == len(batches)
     assert sorted(_posted_ids(api)) == list(range(45))
+
+
+# ------------------------------------------------------- deferred retry
+def _one_writer(base_url: str) -> SinkConfig:
+    """rate_calls=1 keeps one writer; the short period keeps it from
+    waiting on its bucket between POSTs."""
+    return SinkConfig(base_url=base_url, stream_name="v", max_records=10,
+                      rate_calls=1, rate_period=0.02)
+
+
+def _stored(api) -> list:
+    """(first id, newer) of each batch, in the order the API took them."""
+    return [(b[0]["id"], b[0].get("newer")) for b in api.store]
+
+
+def test_backing_off_batch_does_not_block_its_writer(spark, mock_api):
+    """One writer, three batches, a 503 on the first POST: the second and
+    third batches reach the API before the first one's retry, and the
+    POSTs are the three batches plus that retry, one at a time."""
+    base_url, api = mock_api
+    api.service_s = 0.02
+    api.error_list_replies = (503, "service_unavailable", 1)
+    rows = sink_dataframe(spark.range(30).coalesce(1), _one_writer(base_url)).collect()
+    assert sum(r["updated"] for r in rows) == 30
+    assert _stored(api) == [(10, None), (20, None), (0, None)]
+    assert api.posts == 3 + 1
+    assert api.max_inflight == 1
+
+
+def test_deferred_batch_keeps_per_key_order(spark, mock_api):
+    """The third batch carries newer versions of the first batch's ids.
+    The first batch gets a 503; the second (other ids) goes ahead, and
+    the third is posted only after the first one's retry succeeded."""
+    base_url, api = mock_api
+    api.service_s = 0.02
+    api.error_list_replies = (503, "service_unavailable", 1)
+    shaped = spark.range(30).coalesce(1).select(
+        (F.col("id") % 20).alias("id"), (F.col("id") >= 20).alias("newer")
+    )
+    sink_dataframe(shaped, _one_writer(base_url)).collect()
+    assert _stored(api) == [(10, False), (0, False), (0, True)]
+    assert api.posts == 3 + 1
+
+
+def test_second_failure_settles_the_deferred_batch(spark, mock_api):
+    """A writer defers one batch at most: when the second batch fails
+    too, the first is retried before anything else is posted. The POSTs
+    are the batches plus the retries."""
+    base_url, api = mock_api
+    api.service_s = 0.02
+    api.error_list_replies = (503, "service_unavailable", 2)
+    rows = sink_dataframe(spark.range(30).coalesce(1), _one_writer(base_url)).collect()
+    assert sum(r["updated"] for r in rows) == 30
+    # the second batch falls due about when the first one has settled,
+    # so it may go before or after the third
+    first, *rest = _stored(api)
+    assert first == (0, None) and sorted(rest) == [(10, None), (20, None)]
+    assert api.posts == 3 + 2
+
+
+def test_deferred_batch_still_gives_up(mock_api):
+    """A batch failing on every attempt raises after max_tries, and a
+    4xx on a deferred batch's retry raises GiveUpError at once."""
+    base_url, api = mock_api
+    cfg = SinkConfig(base_url=base_url, stream_name="v", max_records=10, max_tries=2)
+    payloads = [json.dumps({"id": i}).encode() for i in range(20)]
+
+    api.error_list_replies = (503, "service_unavailable", 10**6)
+    with pytest.raises(urllib.error.HTTPError, match="503"):
+        list(write_partition(cfg, payloads))
+    assert api.posts == 2 + 1    # both batches, then batch 1's last try
+
+    api.posts = 0
+    api.error_list_replies = (503, "service_unavailable", 1)
+    rows = write_partition(cfg, payloads)
+    assert next(rows)[:2] == (10, 10)   # batch 2, while batch 1 waits
+    api.error_list_replies = (400, "parameter_invalid", 1)
+    with pytest.raises(GiveUpError, match="bad_request/parameter_invalid"):
+        next(rows)
+    assert api.posts == 3
