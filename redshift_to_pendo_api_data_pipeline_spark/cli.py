@@ -72,6 +72,9 @@ def _make_sink(cfg: dict, stream: StreamSpec, state: State):
 
         return singer_sink
     if kind == "http":
+        from redshift_to_pendo_api_data_pipeline_spark.sink.batching import (
+            DEFAULT_MAX_BYTES, DEFAULT_MAX_RECORDS,
+        )
         from redshift_to_pendo_api_data_pipeline_spark.sink.http_sink import SinkConfig, sink_dataframe
         from pyspark.sql import functions as F
 
@@ -81,8 +84,8 @@ def _make_sink(cfg: dict, stream: StreamSpec, state: State):
                 base_url=sink_cfg["base_url"],
                 stream_name=stream.name,
                 api_key=sink_cfg.get("api_key", ""),
-                max_records=int(sink_cfg.get("batch_records", 500)),
-                max_bytes=int(sink_cfg.get("batch_bytes", 5_000_000)),
+                max_records=int(sink_cfg.get("batch_records", DEFAULT_MAX_RECORDS)),
+                max_bytes=int(sink_cfg.get("batch_bytes", DEFAULT_MAX_BYTES)),
                 request_delay=float(sink_cfg.get("request_delay", 0.0)),
             )
             # one row per POSTed batch: collect once and sum here, so no
@@ -438,18 +441,15 @@ def cmd_compact(cfg: dict) -> int:
     Prints one JSON line: old/new version ids, file counts, dropped
     versions."""
     from redshift_to_pendo_api_data_pipeline_spark.sink import parquet_sink as PS
-    from redshift_to_pendo_api_data_pipeline_spark.staging import _hadoop_fs
+    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_list_files
 
     spark = get_spark(app_name="compact")
     path = cfg["path"]
     old_v = PS.active_version(path)
 
     def _n_files(version: int) -> int:
-        fs, root = _hadoop_fs(spark, f"{path}/version={version}")
-        return sum(
-            1 for s in fs.listStatus(root)
-            if s.getPath().getName().endswith(".parquet")
-        )
+        files = fs_list_files(spark, f"{path}/version={version}")
+        return sum(f.endswith(".parquet") for f, _, _ in files)
 
     files_before = _n_files(old_v)
     new_v = PS.compact_active_version(

@@ -26,6 +26,8 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from redshift_to_pendo_api_data_pipeline_spark.staging import fs_list_files
+
 # 16 bits per dimension: 65536 buckets is far finer than file count in
 # any practical layout job. The interleaved key must stay clear of a
 # long's SIGN bit (bit 63) — a key with bit 63 set sorts before 0 and
@@ -134,17 +136,9 @@ def compact_small_files(
     repartition(ByRange when sort_col given, preserving/establishing a
     clusterable order so min/max stats stay useful) + write. Returns
     {files_in, bytes_in, files_out} for the maintenance log."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    it = fs.listFiles(p, True)  # recursive: partitioned layouts nest dirs
-    n_files_in, bytes_in = 0, 0
-    while it.hasNext():
-        f = it.next()
-        if f.getPath().getName().endswith(".parquet"):
-            n_files_in += 1
-            bytes_in += f.getLen()
+    # every leaf file: partitioned layouts nest dirs
+    sizes = [n for f, n, _ in fs_list_files(spark, path) if f.endswith(".parquet")]
+    n_files_in, bytes_in = len(sizes), sum(sizes)
     n_out = max(1, -(-bytes_in // (target_file_mb * 1024 * 1024)))
 
     df = spark.read.parquet(path)

@@ -30,6 +30,7 @@ from redshift_to_pendo_api_data_pipeline_spark.operators.routing import (
 from redshift_to_pendo_api_data_pipeline_spark.staging import (
     fs_delete,
     fs_exists,
+    fs_list_files,
     fs_touch,
     reusable,
     stage,
@@ -896,20 +897,7 @@ def ivf_index_compact(
     in-place), an at-least-once replay of an already-applied batch is
     still a no-op against the compacted index. Returns
     {files_in, files_out, rows} for the maintenance log."""
-    from redshift_to_pendo_api_data_pipeline_spark.staging import _hadoop_fs
-
-    fs, p = _hadoop_fs(spark, index_path)
-
-    def _count_parquet(path_str: str) -> int:
-        f_s, p_s = _hadoop_fs(spark, path_str)
-        it = f_s.listFiles(p_s, True)
-        n = 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
-    files_in = _count_parquet(index_path)
+    names = [f.rsplit("/", 1)[-1] for f, _, _ in fs_list_files(spark, index_path)]
     df = spark.read.parquet(index_path)
     n_clusters = df.select("__cluster").distinct().count()
     w = df.repartition(n_clusters, "__cluster").write.mode("overwrite")
@@ -919,15 +907,15 @@ def ivf_index_compact(
 
     # carry replay-dedup markers: underscore files are invisible to
     # readers but load-bearing for ivf_index_append idempotence
-    status = fs.listStatus(p)
-    for s in status:
-        name = s.getPath().getName()
+    for name in names:
         if name.startswith("_append_"):
             fs_touch(spark, f"{out_path}/{name}")
 
     return {
-        "files_in": int(files_in),
-        "files_out": int(_count_parquet(out_path)),
+        "files_in": sum(n.endswith(".parquet") for n in names),
+        "files_out": sum(
+            f.endswith(".parquet") for f, _, _ in fs_list_files(spark, out_path)
+        ),
         "rows": int(spark.read.parquet(out_path).count()),
     }
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import threading
 import time
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Iterable, Iterator
 
 DEFAULT_MAX_RECORDS = 500       # target-pendo/src/__init__.py:105
 DEFAULT_MAX_BYTES = 5_000_000   # target-pendo/src/__init__.py:104
@@ -62,8 +62,8 @@ class TokenBucket:
         self.ts = time.monotonic()
         self._lock = threading.Lock()
 
-    def acquire(self, timeout: float | None = None) -> bool:
-        deadline = None if timeout is None else time.monotonic() + timeout
+    def acquire(self) -> None:
+        """Take one token, sleeping until the bucket has one."""
         while True:
             with self._lock:
                 now = time.monotonic()
@@ -71,10 +71,8 @@ class TokenBucket:
                 self.ts = now
                 if self.tokens >= 1:
                     self.tokens -= 1
-                    return True
+                    return
                 wait = (1 - self.tokens) / self.rate
-            if deadline is not None and time.monotonic() + wait > deadline:
-                return False
             time.sleep(min(wait, 1.0))
 
 
@@ -83,37 +81,8 @@ class GiveUpError(Exception):
     __init__.py:305-307 ``giveup=lambda e: 400 <= e.status < 500``)."""
 
 
-def backoff_delays(
-    max_tries: int = 5, base_delay: float = 0.5, max_delay: float = 30.0
-) -> Iterator[float]:
-    """B6: the waits between ``max_tries`` attempts, doubling from
-    ``base_delay`` up to ``max_delay`` (0.5, 1, 2, 4 s by default)."""
-    delay = base_delay
-    for _ in range(max_tries - 1):
-        yield delay
-        delay = min(delay * 2, max_delay)
-
-
-def retry_with_backoff(
-    fn: Callable[[], object],
-    max_tries: int = 5,
-    base_delay: float = 0.5,
-    max_delay: float = 30.0,
-    sleep: Callable[[float], None] = time.sleep,
-    delays: Iterator[float] | None = None,
-):
-    """B6: expo backoff with full giveup on :class:`GiveUpError`. After a
-    failure, sleep the next of ``delays`` (the rest of a schedule already
-    under way) or of ``backoff_delays(max_tries, ...)``, and re-raise once
-    they run out."""
-    waits = backoff_delays(max_tries, base_delay, max_delay) if delays is None else delays
-    while True:
-        try:
-            return fn()
-        except GiveUpError:
-            raise
-        except Exception:
-            wait = next(waits, None)
-            if wait is None:
-                raise
-            sleep(wait)
+def backoff_delays(max_tries: int) -> Iterator[float]:
+    """B6: the waits between ``max_tries`` attempts, doubling from 0.5 s
+    up to 30 s (0.5, 1, 2, 4 s for five tries)."""
+    for i in range(max_tries - 1):
+        yield min(0.5 * 2**i, 30.0)

@@ -6,9 +6,11 @@ to ``/api/v1/metadata/{kind}/{group}/value`` with asyncio concurrency
 ``mapPartitions`` writer: ``sink_dataframe`` spreads the records over as
 many writer partitions as the batch count and the cluster's cores allow,
 and Spark runs them as concurrent tasks. Each writer keeps one POST in
-flight. Where the reference gives every POST its own backoff inside the
-gather, a writer here defers a batch that backs off and goes on posting
-the batches after it (``write_partition``), holding at most two batches.
+flight. The reference wraps every POST in one backoff decorator inside
+the gather; here every POST, a batch's first and each retry, is one
+attempt step on the batch's own backoff schedule (``_attempt``). A
+writer defers a batch that backs off and goes on posting the batches
+after it (``write_partition``), holding at most two batches.
 
 Reliability semantics preserved (SURVEY.md §2.9):
 - B6 retry: expo backoff, ≤5 tries, give up on 4xx; a batch that shares
@@ -33,7 +35,7 @@ import time
 import urllib.error
 import urllib.request
 from collections.abc import Iterable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -44,7 +46,6 @@ from redshift_to_pendo_api_data_pipeline_spark.sink.batching import (
     TokenBucket,
     backoff_delays,
     batch_records,
-    retry_with_backoff,
 )
 
 
@@ -152,20 +153,6 @@ class SinkConfig:
         return route_endpoint(self.stream_name, self.base_url, self.group)
 
 
-@dataclass
-class BatchResult:
-    """Per-batch outcome; aggregated like the reference's Counter merge
-    (__init__.py:159,192-195)."""
-    total: int = 0
-    updated: int = 0
-    failed: int = 0
-    failed_payloads: list[bytes] = field(default_factory=list)
-    # aligned with failed_payloads: the application error code (or "")
-    # and its taxonomy class (ERROR_CODE_CLASSES / classify_error)
-    failed_codes: list[str] = field(default_factory=list)
-    failed_classes: list[str] = field(default_factory=list)
-
-
 # One bucket per (calls, period) per Python worker process. Spark runs
 # each concurrent task in its own worker, so a writer never shares its
 # bucket with another writer of the same sink call. A later sink call
@@ -247,16 +234,15 @@ def post_once(cfg: SinkConfig, batch: list[bytes]) -> dict:
         ) from e
 
 
-def batch_result(batch: list[bytes], payload: dict) -> BatchResult:
-    """Classify per-record failures from a response body (the API returns
-    {total, updated, failed, errors:[{id}]} — __init__.py:272-281 routes
-    errors back to records)."""
-    res = BatchResult(
-        total=int(payload.get("total", len(batch))),
-        updated=int(payload.get("updated", 0)),
-        failed=int(payload.get("failed", 0)),
-    )
-    if res.failed:
+def batch_result(batch: list[bytes], payload: dict) -> tuple:
+    """A batch's result row from its response body: (total, updated,
+    failed, failed_payloads, failed_codes, failed_classes). The API
+    returns {total, updated, failed, errors:[{id}]}, and the failed
+    records are joined back by id (__init__.py:272-281); the counts
+    aggregate like the reference's Counter merge (:159,192-195)."""
+    failed = int(payload.get("failed", 0))
+    payloads, codes, classes = [], [], []
+    if failed:
         # J4: join error ids back to the records of this batch; carry
         # each error's application code + taxonomy class alongside so
         # the quarantine relation is debuggable per Pendo rejection
@@ -268,10 +254,11 @@ def batch_result(batch: list[bytes], payload: dict) -> BatchResult:
             rec_id = json.loads(raw).get("id")
             if rec_id in errors_by_id:
                 code = errors_by_id[rec_id]
-                res.failed_payloads.append(raw)
-                res.failed_codes.append(code)
-                res.failed_classes.append(classify_error(code or None))
-    return res
+                payloads.append(raw.decode())
+                codes.append(code)
+                classes.append(classify_error(code or None))
+    return (int(payload.get("total", len(batch))), int(payload.get("updated", 0)),
+            failed, payloads, codes, classes)
 
 
 def _ids(batch: list[bytes]) -> set:
@@ -279,33 +266,43 @@ def _ids(batch: list[bytes]) -> set:
 
 
 @dataclass
-class _Deferred:
-    """A batch whose POST failed with a retryable error, waiting out its
-    backoff while its writer posts the batches after it."""
+class _Pending:
+    """A batch not yet posted successfully: the rest of its backoff
+    schedule, the time.monotonic() its next attempt is due, and its ids,
+    parsed once it is deferred."""
     batch: list[bytes]
-    ids: set
-    waits: Iterator[float]   # the rest of its backoff schedule
-    due: float               # time.monotonic() of its next attempt
+    waits: Iterator[float]
+    due: float = 0.0
+    ids: set | None = None
 
 
-def _settle(cfg: SinkConfig, d: _Deferred) -> tuple:
-    """Wait until the deferred batch is due, then retry it on the rest of
-    its schedule; its result row, or the last attempt's error."""
-    time.sleep(max(0.0, d.due - time.monotonic()))
-    payload = retry_with_backoff(lambda: post_once(cfg, d.batch), delays=d.waits)
-    return _row(d.batch, payload)
+def _attempt(cfg: SinkConfig, p: _Pending) -> tuple | None:
+    """One attempt at a batch: wait until it is due, POST it and return
+    its result row. A retryable error instead moves the batch's due time
+    by the next wait of its schedule and returns None; a
+    :class:`GiveUpError`, or any error once the schedule is spent,
+    raises."""
+    wait = p.due - time.monotonic()
+    if wait > 0:
+        time.sleep(wait)
+    try:
+        return batch_result(p.batch, post_once(cfg, p.batch))
+    except GiveUpError:
+        raise
+    except Exception:
+        wait = next(p.waits, None)
+        if wait is None:
+            raise
+        p.due = time.monotonic() + wait
+        return None
 
 
-def _row(batch: list[bytes], payload: dict) -> tuple:
-    r = batch_result(batch, payload)
-    return (
-        r.total,
-        r.updated,
-        r.failed,
-        [p.decode() for p in r.failed_payloads],
-        list(r.failed_codes),
-        list(r.failed_classes),
-    )
+def _settle(cfg: SinkConfig, p: _Pending) -> tuple:
+    """Attempt a deferred batch until it yields its row or raises."""
+    row = None
+    while row is None:
+        row = _attempt(cfg, p)
+    return row
 
 
 def write_partition(cfg: SinkConfig, payloads: Iterable[bytes]) -> Iterator[tuple]:
@@ -315,15 +312,16 @@ def write_partition(cfg: SinkConfig, payloads: Iterable[bytes]) -> Iterator[tupl
     labeled with the application error code and its taxonomy class —
     instead of killing the job.
 
-    B6 without stalling the writer: a batch whose POST fails with a
-    retryable error is deferred, and the writer goes on posting the
-    batches after it. The deferred batch is settled, retried on the rest
-    of its schedule (0.5, 1, 2, 4 s; ``max_tries`` attempts in all; a 4xx
-    gives up at once), when its backoff is due, before a second batch is
-    deferred, before a batch sharing an ``id`` with it is posted (so every
-    version of a key reaches the API in input order), and at the end of
-    the input. One POST is in flight at a time, and at most two batches
-    are held in memory."""
+    B6 without stalling the writer: every POST, a batch's first and each
+    retry, is one ``_attempt`` on the batch's own schedule (0.5, 1, 2,
+    4 s; ``max_tries`` attempts in all; a 4xx gives up at once). A batch
+    whose first attempt fails with a retryable error is deferred, and
+    the writer goes on posting the batches after it. The deferred batch
+    is settled, attempted until it succeeds or raises, when its backoff
+    is due, before a second batch is deferred, before a batch sharing an
+    ``id`` with it is posted (so every version of a key reaches the API
+    in input order), and at the end of the input. One POST is in flight
+    at a time, and at most two batches are held in memory."""
     deferred = None
     for batch in batch_records(payloads, cfg.max_records, cfg.max_bytes):
         if deferred is not None and (
@@ -331,22 +329,15 @@ def write_partition(cfg: SinkConfig, payloads: Iterable[bytes]) -> Iterator[tupl
         ):
             yield _settle(cfg, deferred)
             deferred = None
-        waits = backoff_delays(cfg.max_tries)
-        try:
-            payload = post_once(cfg, batch)
-        except GiveUpError:
-            raise
-        except Exception:
-            wait = next(waits, None)
-            if wait is None:
-                raise
-            failed = _Deferred(batch, _ids(batch), waits, time.monotonic() + wait)
-        else:
-            yield _row(batch, payload)
+        pending = _Pending(batch, backoff_delays(cfg.max_tries))
+        row = _attempt(cfg, pending)
+        if row is not None:
+            yield row
             continue
         if deferred is not None:
             yield _settle(cfg, deferred)
-        deferred = failed
+        pending.ids = _ids(batch)
+        deferred = pending
     if deferred is not None:
         yield _settle(cfg, deferred)
 
@@ -354,9 +345,8 @@ def write_partition(cfg: SinkConfig, payloads: Iterable[bytes]) -> Iterator[tupl
 def sink_dataframe(df: DataFrame, cfg: SinkConfig) -> DataFrame:
     """Write a shaped DataFrame (any schema with the record key in ``id``;
     serialized to one JSON doc per row here) to the HTTP endpoint. Returns
-    the per-batch results as a DataFrame ``(total, updated, failed,
-    failed_payloads)`` — the caller aggregates (A4) and persists the
-    quarantine set (B7).
+    the per-batch results (``batch_result`` rows) as a DataFrame — the
+    caller aggregates (A4) and persists the quarantine set (B7).
 
     Distribution: the input is counted once and spread over
     ``fan = min(ceil(n / max_records), defaultParallelism, rate_calls)``

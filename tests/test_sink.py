@@ -16,7 +16,6 @@ from redshift_to_pendo_api_data_pipeline_spark.sink.batching import (
     GiveUpError,
     TokenBucket,
     batch_records,
-    retry_with_backoff,
 )
 from redshift_to_pendo_api_data_pipeline_spark.sink.http_sink import (
     SinkConfig,
@@ -49,35 +48,10 @@ def test_token_bucket_paces():
 
     tb = TokenBucket(calls=5, period=0.5)  # 10/sec refill
     for _ in range(5):
-        assert tb.acquire()
+        tb.acquire()
     t0 = time.monotonic()
-    assert tb.acquire()  # must wait ~0.1s for a token
+    tb.acquire()  # must wait ~0.1s for a token
     assert time.monotonic() - t0 > 0.05
-
-
-def test_retry_backoff_and_giveup():
-    calls = []
-
-    def flaky():
-        calls.append(1)
-        if len(calls) < 3:
-            raise RuntimeError("boom")
-        return "ok"
-
-    assert retry_with_backoff(flaky, max_tries=5, sleep=lambda s: None) == "ok"
-    assert len(calls) == 3
-
-    def fatal():
-        raise GiveUpError("HTTP 400")
-
-    with pytest.raises(GiveUpError):
-        retry_with_backoff(fatal, max_tries=5, sleep=lambda s: None)
-
-    def always():
-        raise RuntimeError("down")
-
-    with pytest.raises(RuntimeError):
-        retry_with_backoff(always, max_tries=2, sleep=lambda s: None)
 
 
 def test_endpoint_routing():
@@ -245,6 +219,8 @@ def test_sink_retries_transient_500(spark, sf_dir, mock_api):
     cfg = SinkConfig(base_url=base_url, stream_name="v", max_records=100)
     agg = sink_dataframe(shaped, cfg).agg(F.sum("updated").alias("u")).first()
     assert agg["u"] == 5
+    # one schedule spans the first attempt and the deferred retries
+    assert api.posts == 3
 
 
 def test_sink_gives_up_on_4xx(spark, sf_dir, mock_api):
@@ -256,6 +232,7 @@ def test_sink_gives_up_on_4xx(spark, sf_dir, mock_api):
     shaped = cust.select(F.col("c_custkey").alias("id")).coalesce(1)
     with pytest.raises(Exception, match="HTTP 404"):
         sink_dataframe(shaped, cfg).count()
+    assert api.posts == 1
 
 
 def test_quarantine_rows_carry_error_code_taxonomy(spark, sf_dir, mock_api):

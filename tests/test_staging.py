@@ -91,6 +91,21 @@ def test_reuse_rule_lives_only_in_staging():
     assert hits == []
 
 
+def test_leaf_listings_go_through_fs_list_files():
+    """Static, no Spark: no package module calls Hadoop's ``listFiles``,
+    which also resolves block locations per file; leaf listings use
+    ``staging.fs_list_files``."""
+    hits = [
+        f"{p.relative_to(PACKAGE)}:{node.lineno}"
+        for p in sorted(PACKAGE.rglob("*.py"))
+        for node in ast.walk(ast.parse(p.read_text(), str(p)))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "listFiles"
+    ]
+    assert hits == []
+
+
 def _frame(spark):
     return spark.sql(
         """SELECT CAST(id AS SHORT) AS s,
