@@ -22,8 +22,6 @@ semantics + pruning behavior.
 from __future__ import annotations
 
 import json
-import shutil
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -50,19 +48,6 @@ def append_to_version(df: DataFrame, path: str, version: int) -> None:
         .partitionBy("version").parquet(path)
 
 
-def _fs(path: str):
-    """Hadoop FileSystem for ``path`` via the active session — the
-    pointer file must live on whatever scheme backs the table (file://,
-    hdfs://, s3a://); driver-local pathlib would silently scope the
-    ACTIVATE_VERSION contract to the driver's own disk. Falls back to
-    None (pathlib path) only when no session exists (plain-Python
-    tooling against a local table)."""
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        return None, None
-    return _hadoop_fs(spark, path)
-
-
 def activate(path: str, version: int) -> None:
     """The ACTIVATE_VERSION swap: atomic pointer flip. Hadoop FS
     ``create(overwrite=True)`` is create-then-write-then-close — the
@@ -72,29 +57,21 @@ def activate(path: str, version: int) -> None:
     _ACTIVE (rename is atomic on HDFS and POSIX local; on object stores
     the plain create was already a single PUT, and rename degrades to
     copy+delete — `active_version` additionally tolerates partial reads
-    as the belt-and-braces for that case). The no-session fallback keeps
-    the POSIX tmp+replace."""
-    fs, _ = _fs(path)
-    body = json.dumps({"version": version})
-    if fs is not None:
-        spark = SparkSession.getActiveSession()
-        jvm = spark._jvm
-        tmp_name = f"{path}/{_ACTIVE_FILE}.tmp.{version}"
-        fs_touch(spark, tmp_name, body)
-        src = jvm.org.apache.hadoop.fs.Path(tmp_name)
-        dst = jvm.org.apache.hadoop.fs.Path(f"{path}/{_ACTIVE_FILE}")
+    as the belt-and-braces for that case). The pointer goes through the
+    Hadoop FS so it lives on whatever scheme backs the table (file://,
+    hdfs://, s3a://)."""
+    spark = SparkSession.getActiveSession()
+    tmp_name = f"{path}/{_ACTIVE_FILE}.tmp.{version}"
+    fs_touch(spark, tmp_name, json.dumps({"version": version}))
+    fs, src = _hadoop_fs(spark, tmp_name)
+    _, dst = _hadoop_fs(spark, f"{path}/{_ACTIVE_FILE}")
+    if not fs.rename(src, dst):
+        # HDFS semantics: rename refuses when dst exists — drop the
+        # old pointer and retry (the unguarded window is between the
+        # delete and the rename; readers retry through it)
+        fs.delete(dst, False)
         if not fs.rename(src, dst):
-            # HDFS semantics: rename refuses when dst exists — drop the
-            # old pointer and retry (the unguarded window is between the
-            # delete and the rename; readers retry through it)
-            fs.delete(dst, False)
-            if not fs.rename(src, dst):
-                raise IOError(f"could not activate version pointer at {dst}")
-        return
-    p = Path(path) / _ACTIVE_FILE
-    tmp = p.with_suffix(".tmp")
-    tmp.write_text(body)
-    tmp.replace(p)  # atomic on POSIX
+            raise IOError(f"could not activate version pointer at {dst}")
 
 
 def active_version(path: str, retries: int = 5) -> int | None:
@@ -112,20 +89,11 @@ def active_version(path: str, retries: int = 5) -> int | None:
         if attempt:
             time.sleep(0.05 * attempt)
         try:
-            if spark is not None:
-                if not fs_exists(spark, ptr):
-                    if last_err is None:
-                        return None  # genuinely absent, not mid-swap
-                    continue  # vanished inside a delete+rename window
-                text = fs_read_text(spark, ptr)
-            else:
-                p = Path(path) / _ACTIVE_FILE
-                if not p.exists():
-                    if last_err is None:
-                        return None
-                    continue
-                text = p.read_text()
-            return int(json.loads(text)["version"])
+            if not fs_exists(spark, ptr):
+                if last_err is None:
+                    return None  # genuinely absent, not mid-swap
+                continue  # vanished inside a delete+rename window
+            return int(json.loads(fs_read_text(spark, ptr))["version"])
         except (json.JSONDecodeError, ValueError, KeyError) as e:
             last_err = e  # partial/empty pointer mid-swap: retry
     if last_err is not None:
@@ -258,20 +226,13 @@ def vacuum(path: str) -> list[int]:
     the same scheme the table lives on."""
     keep = active_version(path)
     dropped = []
-    fs, root = _fs(path)
-    if fs is not None:
-        for status in fs.listStatus(root):
-            name = status.getPath().getName()
-            if not name.startswith("version="):
-                continue
-            v = int(name.split("=")[1])
-            if v != keep:
-                fs.delete(status.getPath(), True)
-                dropped.append(v)
-        return sorted(dropped)
-    for d in Path(path).glob("version=*"):
-        v = int(d.name.split("=")[1])
+    fs, root = _hadoop_fs(SparkSession.getActiveSession(), path)
+    for status in fs.listStatus(root):
+        name = status.getPath().getName()
+        if not name.startswith("version="):
+            continue
+        v = int(name.split("=")[1])
         if v != keep:
-            shutil.rmtree(d)
+            fs.delete(status.getPath(), True)
             dropped.append(v)
     return sorted(dropped)

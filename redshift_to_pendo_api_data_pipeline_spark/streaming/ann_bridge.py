@@ -33,6 +33,9 @@ from redshift_to_pendo_api_data_pipeline_spark.operators.similarity import (
     _dot,
     _norm,
 )
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
 
 
 def _result_schema(spark, queries_df: DataFrame, index_path: str,
@@ -230,7 +233,6 @@ def streaming_ann_topk(
     qvec_col: str = "qvec",
     k: int = 10,
     n_probe: int = 4,
-    trigger_available_now: bool = True,
     max_driver_queries: int = 10_000,
 ):
     """Start a streaming query answering each micro-batch of
@@ -266,14 +268,7 @@ def streaming_ann_topk(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_process)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(stream_df, checkpoint, _process)
 
 
 def streaming_index_append(
@@ -284,7 +279,6 @@ def streaming_index_append(
     id_col: str,
     checkpoint: str,
     batch_prefix: str = "mb",
-    trigger_available_now: bool = True,
 ):
     """Streaming IVF index MAINTENANCE: every micro-batch of new
     (id, vector) rows is appended into the persisted index's list
@@ -315,11 +309,4 @@ def streaming_index_append(
             batch_id=f"{batch_prefix}-{batch_id}",
         )
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_process)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(stream_df, checkpoint, _process)

@@ -18,15 +18,29 @@ stream just flows through). At 100 TB the union re-agg touches only
 merge co-locates without a full shuffle. Exactly-once comes from the
 streaming checkpoint (a replayed batch overwrites the same version id,
 and activation is atomic).
+
+``commit_rollup`` is that commit protocol, checkpoint-ownership guard
+included. The streaming HLL and KMV rollups (``streaming/sketches``)
+commit through it with their own partial and merge.
 """
 
 from __future__ import annotations
 
+import json
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.sink import parquet_sink as PS
-
-ROLLUP_COLS = ("n", "sum_value", "min_value", "max_value")
+from redshift_to_pendo_api_data_pipeline_spark.staging import (
+    fs_delete,
+    fs_exists,
+    fs_read_text,
+    fs_touch,
+)
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
 
 # Marker persisted next to _ACTIVE_VERSION: the identity (query id) of the
 # checkpoint that owns this rollup. Exactly-once replay relies on version
@@ -37,20 +51,18 @@ ROLLUP_COLS = ("n", "sum_value", "min_value", "max_value")
 _CHECKPOINT_MARKER = "_CHECKPOINT_ID"
 
 
-def _checkpoint_query_id(checkpoint_dir: str) -> str | None:
+def _checkpoint_query_id(spark: SparkSession, checkpoint_dir: str) -> str | None:
     """The uuid Structured Streaming writes to <checkpoint>/metadata on
     first start — stable across restarts of the same checkpoint, fresh
-    when the checkpoint is recreated."""
-    import json
-    from pathlib import Path
-
-    p = Path(checkpoint_dir) / "metadata"
-    if p.exists():
-        try:
-            return json.loads(p.read_text()).get("id")
-        except (ValueError, OSError):
-            return None
-    return None
+    when the checkpoint is recreated. Read through the Hadoop FS, so a
+    checkpoint on any scheme is identified."""
+    meta = f"{checkpoint_dir}/metadata"
+    if not fs_exists(spark, meta):
+        return None
+    try:
+        return json.loads(fs_read_text(spark, meta)).get("id")
+    except ValueError:
+        return None
 
 
 def _partial(df: DataFrame, keys: list[str], value: str) -> DataFrame:
@@ -62,13 +74,69 @@ def _partial(df: DataFrame, keys: list[str], value: str) -> DataFrame:
     )
 
 
-def _merge(cur: DataFrame, part: DataFrame, keys: list[str]) -> DataFrame:
-    return cur.unionByName(part).groupBy(*keys).agg(
-        F.sum("n").alias("n"),
-        F.sum("sum_value").alias("sum_value"),
-        F.min("min_value").alias("min_value"),
-        F.max("max_value").alias("max_value"),
-    )
+def commit_rollup(
+    batch_df: DataFrame,
+    batch_id: int,
+    rollup_path: str,
+    checkpoint_dir: str,
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> None:
+    """Fold one micro-batch into the versioned rollup at ``rollup_path``:
+    ``partial(batch)`` is merged with the active version by
+    ``merge(active, partial)`` and published as version ``batch_id``.
+
+    Version id == batch id, and activation is the commit point: a
+    checkpoint-replayed batch either finds its version already active
+    (fully applied -> no-op) or rebuilds that version from the previous
+    active one (partial writes are cleared first). The rollup and the
+    checkpoint share a lifecycle, enforced by the _CHECKPOINT_ID marker:
+    a fresh checkpoint restarting batch ids at 0 against an existing
+    rollup would otherwise make 'active >= v' swallow every new batch.
+    An empty batch is skipped and publishes no version."""
+    if batch_df.isEmpty():
+        return
+    spark = batch_df.sparkSession
+    v = int(batch_id)
+    active = PS.active_version(rollup_path)
+
+    marker = f"{rollup_path}/{_CHECKPOINT_MARKER}"
+    cid = _checkpoint_query_id(spark, checkpoint_dir)
+    if fs_exists(spark, marker):
+        owner = fs_read_text(spark, marker).strip()
+        if cid is not None and owner != cid:
+            raise RuntimeError(
+                f"rollup at {rollup_path} is owned by checkpoint query "
+                f"{owner}; refusing batches from query {cid} — a fresh "
+                "or different checkpoint restarts batch ids at 0 and "
+                "its data would be silently discarded. Use the "
+                "original checkpoint, or start a new rollup path."
+            )
+    elif cid is not None:
+        if active is not None:
+            raise RuntimeError(
+                f"rollup at {rollup_path} has active version {active} "
+                "but no checkpoint-owner marker; refusing to adopt it "
+                "— batch ids from this checkpoint cannot be compared "
+                "to its versions. Start a new rollup path."
+            )
+        fs_touch(spark, marker, cid)
+
+    if active is not None and active >= v:
+        if active > v:
+            # same checkpoint lineage never regresses by more than the
+            # one uncommitted batch a restart replays
+            raise RuntimeError(
+                f"batch id {v} behind active version {active} at "
+                f"{rollup_path} — checkpoint/rollup lifecycle mismatch"
+            )
+        return
+    merged = partial(batch_df)
+    if active is not None:
+        merged = merge(PS.read_active(spark, rollup_path), merged)
+    fs_delete(spark, f"{rollup_path}/version={v}")
+    PS.write_versioned(merged, rollup_path, v, mode="append")
+    PS.activate(rollup_path, v)
 
 
 def run_continuous_agg(
@@ -77,83 +145,26 @@ def run_continuous_agg(
     checkpoint_dir: str,
     keys: list[str],
     value: str,
-    available_now: bool = True,
 ):
-    """Start (and for availableNow: drain) the maintenance stream.
-    Returns the StreamingQuery. Read the rollup with
+    """Start and drain the maintenance stream. Returns the
+    StreamingQuery. Read the rollup with
     `parquet_sink.read_active(spark, rollup_path)`."""
-    spark = events.sparkSession
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # version id == batch id, activation is the commit point: a
-        # checkpoint-replayed batch either finds its version already
-        # active (fully applied -> no-op) or rebuilds that version from
-        # the previous active one (partial writes clobbered below). The
-        # rollup table and the checkpoint share a lifecycle — enforced by
-        # the _CHECKPOINT_ID marker below, since a fresh checkpoint
-        # restarting batch ids at 0 against an existing rollup would make
-        # 'active >= v' swallow every new batch.
-        v = int(batch_id)
-        active = PS.active_version(rollup_path)
-
-        # marker I/O through the Hadoop FS: the ownership contract must
-        # hold on whatever scheme backs the rollup, not just local disk
-        from redshift_to_pendo_api_data_pipeline_spark.staging import (
-            fs_delete,
-            fs_exists,
-            fs_read_text,
-            fs_touch,
+    def merge(cur: DataFrame, part: DataFrame) -> DataFrame:
+        return cur.unionByName(part).groupBy(*keys).agg(
+            F.sum("n").alias("n"),
+            F.sum("sum_value").alias("sum_value"),
+            F.min("min_value").alias("min_value"),
+            F.max("max_value").alias("max_value"),
         )
 
-        marker = f"{rollup_path}/{_CHECKPOINT_MARKER}"
-        cid = _checkpoint_query_id(checkpoint_dir)
-        if fs_exists(spark, marker):
-            owner = fs_read_text(spark, marker).strip()
-            if cid is not None and owner != cid:
-                raise RuntimeError(
-                    f"rollup at {rollup_path} is owned by checkpoint query "
-                    f"{owner}; refusing batches from query {cid} — a fresh "
-                    "or different checkpoint restarts batch ids at 0 and "
-                    "its data would be silently discarded. Use the "
-                    "original checkpoint, or start a new rollup path."
-                )
-        elif cid is not None:
-            if active is not None:
-                raise RuntimeError(
-                    f"rollup at {rollup_path} has active version {active} "
-                    "but no checkpoint-owner marker; refusing to adopt it "
-                    "— batch ids from this checkpoint cannot be compared "
-                    "to its versions. Start a new rollup path."
-                )
-            fs_touch(spark, marker, cid)
-
-        if active is not None and active >= v:
-            if active > v:
-                # same checkpoint lineage never regresses by more than the
-                # one uncommitted batch a restart replays
-                raise RuntimeError(
-                    f"batch id {v} behind active version {active} at "
-                    f"{rollup_path} — checkpoint/rollup lifecycle mismatch"
-                )
-            return
-        part = _partial(batch_df, keys, value)
-        if active is None:
-            merged = part
-        else:
-            cur = PS.read_active(spark, rollup_path).select(*keys, *ROLLUP_COLS)
-            merged = _merge(cur, part, keys)
-        fs_delete(spark, f"{rollup_path}/version={v}")
-        PS.write_versioned(merged, rollup_path, v, mode="append")
-        PS.activate(rollup_path, v)
-
-    writer = (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(upsert)
+    return run_incremental_sync(
+        events, checkpoint_dir,
+        lambda batch_df, batch_id: commit_rollup(
+            batch_df, batch_id, rollup_path, checkpoint_dir,
+            lambda df: _partial(df, keys, value), merge,
+        ),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def refresh_rollup_from_diff(

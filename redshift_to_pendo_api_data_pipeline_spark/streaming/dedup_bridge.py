@@ -36,6 +36,10 @@ from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
     ngram_jaccard,
     staged_minhash_signatures,
 )
+from redshift_to_pendo_api_data_pipeline_spark.staging import fs_list_files
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
 
 
 def streaming_neardup_against_corpus(
@@ -50,7 +54,6 @@ def streaming_neardup_against_corpus(
     n: int = 3,
     k: int = 48,
     bands: int = 8,
-    trigger_available_now: bool = True,
 ):
     """Start a streaming query that near-dup-checks every micro-batch of
     ``stream_df`` (a streaming DataFrame of documents) against
@@ -84,14 +87,7 @@ def streaming_neardup_against_corpus(
         )
         on_pairs(pairs, batch_id)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_process)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(stream_df, checkpoint, _process)
 
 
 def streaming_corpus_line_dedup(
@@ -104,7 +100,6 @@ def streaming_corpus_line_dedup(
     on_batch: Callable[[DataFrame, int], None],
     line_sep: str = "\n",
     ttl_seconds: int | None = None,
-    trigger_available_now: bool = True,
 ):
     """Streaming twin of ``curation.corpus_line_dedup`` — C4's
     corpus-wide exact LINE dedup at INGEST time: within each
@@ -159,16 +154,16 @@ def streaming_corpus_line_dedup(
             F.min(F.struct("__doc", "__pos")).alias("__w"),
             F.min("__ts").alias("__first_ts"),
         )
-        import glob as _glob
-
         # a replayed batch must not be suppressed by (or wipe) its OWN
         # prior delta: read every delta EXCEPT batch=<this id>, so the
         # replay recomputes the identical fresh set and the overwrite
-        # below rewrites the identical delta
+        # below rewrites the identical delta. Listed through the Hadoop
+        # FS so the state is found on whatever scheme backs state_dir.
+        deltas = {f.rsplit("/", 2)[1] for f, _, _ in fs_list_files(spark, state_dir)}
         paths = [
-            p
-            for p in _glob.glob(f"{state_dir}/batch=*")
-            if not p.endswith(f"batch={batch_id}")
+            f"{state_dir}/{b}"
+            for b in sorted(deltas)
+            if b.startswith("batch=") and b != f"batch={batch_id}"
         ]
         if paths:
             state = spark.read.parquet(*paths)
@@ -224,11 +219,4 @@ def streaming_corpus_line_dedup(
             F.col("__d").alias("digest"), F.col("__first_ts").alias("first_ts")
         ).write.mode("overwrite").parquet(f"{state_dir}/batch={batch_id}")
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_process)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(stream_df, checkpoint, _process)

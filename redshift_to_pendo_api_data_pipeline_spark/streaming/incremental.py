@@ -13,9 +13,11 @@ natively:
 - periodic STATE      -> per-micro-batch checkpoint commit
 - the HTTP sink       -> foreachBatch reusing the exact same batch writer
 
-``run_incremental_sync`` drives the stream with availableNow (process
-everything pending, then stop) — the direct analogue of one tap
-invocation; leaving trigger=None gives continuous micro-batches.
+``run_incremental_sync`` is the package's one foreachBatch driver. It
+always runs availableNow (process everything pending, then stop) — the
+direct analogue of one tap invocation — and every streaming bridge starts
+its query through it. Only the two monitors in ``quality_monitor``, whose
+lifecycle the caller owns, keep the default continuous trigger.
 """
 
 from __future__ import annotations
@@ -115,21 +117,20 @@ def run_incremental_sync(
     sdf_shaped: DataFrame,
     checkpoint_dir: str,
     batch_writer: Callable[[DataFrame, int], None],
-    available_now: bool = True,
 ):
     """foreachBatch sink: every micro-batch goes through the same writer
     as the batch path (sink/http_sink.sink_dataframe inside the callable);
     the checkpoint commits only after the writer returns — the streaming
     equivalent of 'state echoes after the target succeeds'
-    (README.md:191-192)."""
-    writer = (
+    (README.md:191-192). Drains everything pending, then stops; returns
+    the StreamingQuery."""
+    return (
         sdf_shaped.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(batch_writer)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_exact_dedup(

@@ -34,6 +34,9 @@ from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import (
     incremental_editdist_pairs,
 )
 from redshift_to_pendo_api_data_pipeline_spark.staging import stage
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
 
 
 def stage_name_dictionary(
@@ -59,7 +62,6 @@ def streaming_linkage_against_corpus(
     checkpoint: str,
     on_pairs: Callable[[DataFrame, int], None],
     max_dist: int = 2,
-    trigger_available_now: bool = True,
 ):
     """Start a streaming query that fuzzy-links every micro-batch of
     ``stream_df`` (a streaming DataFrame with entity-name column
@@ -89,11 +91,4 @@ def streaming_linkage_against_corpus(
         )
         on_pairs(pairs.join(counts, "name_corpus"), batch_id)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_process)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(stream_df, checkpoint, _process)

@@ -17,6 +17,35 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.operators.quality import Suite, run_suite
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
+
+
+def _report_stream(
+    stream: DataFrame,
+    report: Callable[[DataFrame], DataFrame],
+    on_report: Optional[Callable[[DataFrame, int], None]],
+    report_path: Optional[str],
+    checkpoint_dir: Optional[str],
+):
+    """Start a default-trigger query that stamps ``report(batch)`` with
+    its batch id and hands it to ``on_report`` and/or appends it to
+    ``report_path`` parquet. The caller owns the query's lifecycle."""
+
+    def _each(batch_df: DataFrame, batch_id: int) -> None:
+        out = report(batch_df).withColumn(
+            "batch_id", F.lit(batch_id).cast("long")
+        )
+        if report_path is not None:
+            out.write.mode("append").parquet(report_path)
+        if on_report is not None:
+            on_report(out, batch_id)
+
+    writer = stream.writeStream.foreachBatch(_each)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
 
 
 def monitor_stream(
@@ -31,20 +60,10 @@ def monitor_stream(
     ``on_report`` callback, and/or appended to ``report_path`` parquet.
 
     Returns the StreamingQuery (caller owns lifecycle)."""
-
-    def _each(batch_df: DataFrame, batch_id: int) -> None:
-        report = run_suite(batch_df, suite).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        if report_path is not None:
-            report.write.mode("append").parquet(report_path)
-        if on_report is not None:
-            on_report(report, batch_id)
-
-    writer = stream.writeStream.foreachBatch(_each)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _report_stream(
+        stream, lambda df: run_suite(df, suite),
+        on_report, report_path, checkpoint_dir,
+    )
 
 
 def score_stream(
@@ -55,7 +74,6 @@ def score_stream(
     checkpoint: str,
     on_scores,
     dim: int = 2**15,
-    trigger_available_now: bool = True,
 ):
     """Streaming half of the learned quality filter: every micro-batch
     of documents is scored against the STAGED fixed-point weight table
@@ -90,14 +108,7 @@ def score_stream(
         )
         on_scores(scores, batch_id)
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_process)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(stream_df, checkpoint, _process)
 
 
 def privacy_monitor_stream(
@@ -122,16 +133,7 @@ def privacy_monitor_stream(
         k_anonymity_summary,
     )
 
-    def _each(batch_df: DataFrame, batch_id: int) -> None:
-        report = k_anonymity_summary(batch_df, quasi_cols, k).withColumn(
-            "batch_id", F.lit(batch_id).cast("long")
-        )
-        if report_path is not None:
-            report.write.mode("append").parquet(report_path)
-        if on_report is not None:
-            on_report(report, batch_id)
-
-    writer = stream.writeStream.foreachBatch(_each)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _report_stream(
+        stream, lambda df: k_anonymity_summary(df, quasi_cols, k),
+        on_report, report_path, checkpoint_dir,
+    )

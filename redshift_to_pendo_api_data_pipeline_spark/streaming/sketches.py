@@ -3,11 +3,13 @@ maintained rollup.
 
 The register table is the IDEAL streaming aggregate: max-merge is
 commutative, associative, and IDEMPOTENT, so unlike the sum-based rollup
-in ``continuous_agg`` (where exactly-once hangs on the version-id
-discipline), a replayed or duplicated micro-batch converges to the same
-registers by algebra alone. The version/activation machinery is still
-used — atomic publish so readers never see a half-merged table — but
-correctness does not depend on it.
+in ``continuous_agg``, a replayed or duplicated micro-batch converges to
+the same registers by algebra alone. Both sketch rollups still commit
+through ``continuous_agg.commit_rollup`` — version id = batch id, atomic
+ACTIVATE_VERSION publish, and the checkpoint-ownership guard. Idempotence
+protects against a replay, not against a batch that is never applied: a
+fresh checkpoint restarts batch ids at 0, and without the guard its
+batches would be dropped as already applied; with it the query fails.
 
 Per micro-batch:
 
@@ -22,9 +24,14 @@ per trigger regardless of traffic.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
-from redshift_to_pendo_api_data_pipeline_spark.sink import parquet_sink as PS
+from redshift_to_pendo_api_data_pipeline_spark.streaming.continuous_agg import (
+    commit_rollup,
+)
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
 
 
 def kmv_sketch_stream(
@@ -34,58 +41,37 @@ def kmv_sketch_stream(
     rollup_path: str,
     checkpoint: str,
     k: int = 128,
-    trigger_available_now: bool = True,
 ):
     """Maintain per-group KMV sketches from a stream — the mergeable
     twin of `hll_register_stream` for when downstream needs set ALGEBRA
     (union/intersection estimates via `analytics.kmv_pair_overlap`),
     not just cardinality. Merge = k smallest of (current ∪ batch) per
     group: min-k-merge is idempotent and commutative like the register
-    max, so replays converge by algebra; publish stays atomic via
-    ACTIVATE_VERSION. Per trigger the batch collapses to ≤ |groups|·k
-    sketch rows before touching the rollup."""
-    from pyspark.sql import Window
-
+    max, so replays converge by algebra; the commit (and its refusal of
+    a fresh checkpoint) is `continuous_agg.commit_rollup`. Per trigger
+    the batch collapses to ≤ |groups|·k sketch rows before touching the
+    rollup. Returns the StreamingQuery."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.analytics import (
         kmv_sketches,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_delete
 
-    spark = stream_df.sparkSession
+    def merge(cur: DataFrame, part: DataFrame) -> DataFrame:
+        rn = F.row_number().over(Window.partitionBy(group_col).orderBy("w"))
+        return (
+            cur.unionByName(part)
+            .distinct()
+            .withColumn("__rn", rn)
+            .where(F.col("__rn") <= k)
+            .select(group_col, "w")
+        )
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        v = int(batch_id)
-        active = PS.active_version(rollup_path)
-        if active is not None and active >= v:
-            return
-        part = kmv_sketches(batch_df, key_col, group_col, k=k)
-        if active is None:
-            merged = part
-        else:
-            cur = PS.read_active(spark, rollup_path).select(group_col, "w")
-            rn = F.row_number().over(
-                Window.partitionBy(group_col).orderBy("w"))
-            merged = (
-                cur.unionByName(part)
-                .distinct()
-                .withColumn("__rn", rn)
-                .where(F.col("__rn") <= k)
-                .select(group_col, "w")
-            )
-        fs_delete(spark, f"{rollup_path}/version={v}")
-        PS.write_versioned(merged, rollup_path, v, mode="append")
-        PS.activate(rollup_path, v)
-
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_merge)
+    return run_incremental_sync(
+        stream_df, checkpoint,
+        lambda batch_df, batch_id: commit_rollup(
+            batch_df, batch_id, rollup_path, checkpoint,
+            lambda df: kmv_sketches(df, key_col, group_col, k=k), merge,
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def hll_register_stream(
@@ -95,45 +81,29 @@ def hll_register_stream(
     rollup_path: str,
     checkpoint: str,
     m: int = 256,
-    trigger_available_now: bool = True,
 ):
-    """Maintain a grouped HLL register rollup from a stream. Read the
-    current registers with ``parquet_sink.read_active``; estimate with
+    """Maintain a grouped HLL register rollup from a stream, committed
+    through `continuous_agg.commit_rollup`. Read the current registers
+    with ``parquet_sink.read_active``; estimate with
     ``analytics.hll_estimate`` per group. Returns the StreamingQuery."""
     from redshift_to_pendo_api_data_pipeline_spark.operators.analytics import (
         hyperloglog_registers,
     )
-    from redshift_to_pendo_api_data_pipeline_spark.staging import fs_delete
 
-    spark = stream_df.sparkSession
     keys = list(group_cols) + ["bucket"]
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        v = int(batch_id)
-        active = PS.active_version(rollup_path)
-        if active is not None and active >= v:
-            return  # replayed batch: already folded (and idempotent anyway)
-        part = hyperloglog_registers(batch_df, key_col, group_cols, m=m)
-        if active is None:
-            merged = part
-        else:
-            cur = PS.read_active(spark, rollup_path).select(*keys, "register")
-            merged = (
-                cur.unionByName(part)
-                .groupBy(*keys)
-                .agg(F.max("register").alias("register"))
-            )
-        fs_delete(spark, f"{rollup_path}/version={v}")
-        PS.write_versioned(merged, rollup_path, v, mode="append")
-        PS.activate(rollup_path, v)
+    def merge(cur: DataFrame, part: DataFrame) -> DataFrame:
+        return (
+            cur.unionByName(part)
+            .groupBy(*keys)
+            .agg(F.max("register").alias("register"))
+        )
 
-    writer = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(_merge)
+    return run_incremental_sync(
+        stream_df, checkpoint,
+        lambda batch_df, batch_id: commit_rollup(
+            batch_df, batch_id, rollup_path, checkpoint,
+            lambda df: hyperloglog_registers(df, key_col, group_cols, m=m),
+            merge,
+        ),
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

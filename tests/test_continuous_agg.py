@@ -2,12 +2,17 @@
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.sink import parquet_sink as PS
 from redshift_to_pendo_api_data_pipeline_spark.sources.tables import load_table
 from redshift_to_pendo_api_data_pipeline_spark.streaming.continuous_agg import (
     run_continuous_agg,
+)
+from redshift_to_pendo_api_data_pipeline_spark.streaming.sketches import (
+    hll_register_stream,
+    kmv_sketch_stream,
 )
 
 
@@ -53,29 +58,50 @@ def test_continuous_agg_matches_batch_recompute(spark, sf_dir):
         assert PS.read_active(spark, rollup).count() == n_users
 
 
-def test_fresh_checkpoint_against_existing_rollup_fails_fast(spark, sf_dir):
+# every rollup that commits through continuous_agg.commit_rollup
+ROLLUPS = {
+    "continuous_agg": lambda stream, rollup, ckpt: run_continuous_agg(
+        stream, rollup, ckpt, ["user_id"], "value"),
+    "kmv": lambda stream, rollup, ckpt: kmv_sketch_stream(
+        stream, "user_id", "event_type", rollup, ckpt, k=16),
+    "hll": lambda stream, rollup, ckpt: hll_register_stream(
+        stream, "user_id", ["event_type"], rollup, ckpt, m=16),
+}
+
+
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["path", "file_uri"])
+@pytest.mark.parametrize("rollup_kind", list(ROLLUPS))
+def test_fresh_checkpoint_against_existing_rollup_fails_fast(
+    spark, sf_dir, rollup_kind, scheme
+):
     """Batch ids restart at 0 in a fresh checkpoint, so every batch would
     satisfy 'active >= v' and be silently discarded — the ownership marker
-    must turn that into an error instead."""
-    import pytest
+    must turn that into an error instead. The fresh checkpoint reads new
+    data, so a dropped batch would change the rollup; a ``file:`` URI
+    checkpoint must be identified as well as a plain path."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    ev = load_table(spark, sf_dir, "events").select("user_id", "value").limit(100)
+    start = ROLLUPS[rollup_kind]
+    ev = load_table(spark, sf_dir, "events").select("event_type", "user_id", "value")
     with tempfile.TemporaryDirectory() as d:
-        src, rollup = f"{d}/src", f"{d}/rollup"
-        ev.write.parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).parquet(src)
+        base = f"{scheme}{d}"
+        src1, src2, rollup = f"{base}/src1", f"{base}/src2", f"{base}/rollup"
+        ev.where(F.col("user_id") % 2 == 0).limit(100).write.parquet(src1)
+        ev.where(F.col("user_id") % 2 == 1).limit(100).write.parquet(src2)
+        schema = spark.read.parquet(src1).schema
 
-        q = run_continuous_agg(stream, rollup, f"{d}/ckpt1", ["user_id"], "value")
+        q = start(spark.readStream.schema(schema).parquet(src1), rollup,
+                  f"{base}/ckpt1")
         q.awaitTermination(120)
-        assert PS.read_active(spark, rollup).count() > 0
+        before = sorted(map(tuple, PS.read_active(spark, rollup).collect()))
+        assert before
 
-        q2 = run_continuous_agg(stream, rollup, f"{d}/ckpt2", ["user_id"], "value")
+        q2 = start(spark.readStream.schema(schema).parquet(src2), rollup,
+                   f"{base}/ckpt2")
         with pytest.raises(StreamingQueryException, match="owned by checkpoint"):
             q2.awaitTermination(120)
         # rollup content untouched by the refused stream
-        assert _rollup_dict(spark, rollup) == _expected(ev)
+        assert sorted(map(tuple, PS.read_active(spark, rollup).collect())) == before
 
 
 def test_refresh_rollup_from_diff_touches_only_affected_groups(spark, tmp_path):

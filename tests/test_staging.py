@@ -91,17 +91,42 @@ def test_reuse_rule_lives_only_in_staging():
     assert hits == []
 
 
+def _listing_calls(tree: ast.AST):
+    """Calls to Hadoop's ``listFiles`` and to the ``glob`` module, under
+    any import alias."""
+    nodes = list(ast.walk(tree))
+    mods = {
+        a.asname or a.name
+        for n in nodes if isinstance(n, ast.Import)
+        for a in n.names if a.name == "glob"
+    }
+    funcs = {
+        a.asname or a.name
+        for n in nodes if isinstance(n, ast.ImportFrom) and n.module == "glob"
+        for a in n.names
+    }
+    for node in nodes:
+        if not isinstance(node, ast.Call):
+            continue
+        f = node.func
+        if isinstance(f, ast.Attribute) and (
+            f.attr == "listFiles"
+            or (isinstance(f.value, ast.Name) and f.value.id in mods)
+        ):
+            yield node
+        elif isinstance(f, ast.Name) and f.id in funcs:
+            yield node
+
+
 def test_leaf_listings_go_through_fs_list_files():
     """Static, no Spark: no package module calls Hadoop's ``listFiles``,
-    which also resolves block locations per file; leaf listings use
+    which also resolves block locations per file, or the ``glob``
+    module, which sees only the driver's local disk; leaf listings use
     ``staging.fs_list_files``."""
     hits = [
         f"{p.relative_to(PACKAGE)}:{node.lineno}"
         for p in sorted(PACKAGE.rglob("*.py"))
-        for node in ast.walk(ast.parse(p.read_text(), str(p)))
-        if isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "listFiles"
+        for node in _listing_calls(ast.parse(p.read_text(), str(p)))
     ]
     assert hits == []
 

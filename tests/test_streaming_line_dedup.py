@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.operators.curation import (
@@ -52,9 +53,13 @@ def _run(spark, src, ckpt, state, schema, out, ttl=None):
     q.awaitTermination(120)
 
 
-def test_streaming_line_dedup_matches_batch_and_suppresses(spark):
+@pytest.mark.parametrize("scheme", ["", "file:"], ids=["path", "file_uri"])
+def test_streaming_line_dedup_matches_batch_and_suppresses(spark, scheme):
+    # a file: URI state dir must be listed through the Hadoop FS, or the
+    # second batch finds no state and lines already seen pass again
     with tempfile.TemporaryDirectory() as d:
-        src, ckpt, state = f"{d}/src", f"{d}/ckpt", f"{d}/state"
+        base = f"{scheme}{d}"
+        src, ckpt, state = f"{base}/src", f"{base}/ckpt", f"{base}/state"
         _df(spark, ROWS1).coalesce(1).write.parquet(src)
         schema = spark.read.parquet(src).schema
         out = []
