@@ -141,7 +141,7 @@ def q_payload_reshape(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.select("c_custkey", "c_name", "c_mktsegment"),
         {"c_custkey": "accountId", "c_name": "name", "c_mktsegment": "segment"},
     )
-    shaped = TR.reshape_payload(remapped, "accountId", "id")
+    shaped = TR.reshape_payload(remapped, "accountId")
     return shaped.select("id", F.to_json("values").alias("values_json"))
 
 

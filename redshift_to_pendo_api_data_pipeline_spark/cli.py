@@ -793,76 +793,38 @@ def cmd_sql(cfg: dict) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    commands = {
+        "discover": (cmd_discover, "emit catalog JSON (tap -d parity)"),
+        "sync": (cmd_sync, "sync all configured streams"),
+        "curate": (
+            cmd_curate, "run the corpus-curation funnel, write curated parquet"
+        ),
+        "profile": (cmd_profile, "one-pass column profiling report"),
+        "drift": (cmd_drift, "two-cohort KS/MW drift report (exit 1 on drift)"),
+        "classify": (
+            cmd_classify, "train the learned quality filter, publish weights"
+        ),
+        "compact": (cmd_compact, "compact the active version of a versioned table"),
+        "diff": (cmd_diff, "INSERT/UPDATE/DELETE delta between two table versions"),
+        "reconcile": (cmd_reconcile, "fingerprint-compare two tables (sync audit)"),
+        "mine": (cmd_mine, "mine candidate keys + inclusion deps (FKs)"),
+        "sql": (cmd_sql, "run ad-hoc SQL over configured tables (JSON lines)"),
+        "export": (
+            cmd_export, "rules -> dedup -> waterfill -> pack training export"
+        ),
+    }
     ap = argparse.ArgumentParser(prog="redshift_to_pendo_api_data_pipeline_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
-    d = sub.add_parser("discover", help="emit catalog JSON (tap -d parity)")
-    d.add_argument("-c", "--config", required=True)
-    s = sub.add_parser("sync", help="sync all configured streams")
-    s.add_argument("-c", "--config", required=True)
-    s.add_argument("-s", "--state", default=None)
-    c = sub.add_parser(
-        "curate", help="run the corpus-curation funnel, write curated parquet"
-    )
-    c.add_argument("-c", "--config", required=True)
-    p = sub.add_parser("profile", help="one-pass column profiling report")
-    dr = sub.add_parser(
-        "drift", help="two-cohort KS/MW drift report (exit 1 on drift)"
-    )
-    dr.add_argument("-c", "--config", required=True)
-    p.add_argument("-c", "--config", required=True)
-    cl = sub.add_parser(
-        "classify", help="train the learned quality filter, publish weights"
-    )
-    cl.add_argument("-c", "--config", required=True)
-    co = sub.add_parser(
-        "compact", help="compact the active version of a versioned table"
-    )
-    co.add_argument("-c", "--config", required=True)
-    df_ = sub.add_parser(
-        "diff", help="INSERT/UPDATE/DELETE delta between two table versions"
-    )
-    df_.add_argument("-c", "--config", required=True)
-    rc = sub.add_parser(
-        "reconcile", help="fingerprint-compare two tables (sync audit)"
-    )
-    rc.add_argument("-c", "--config", required=True)
-    mn = sub.add_parser(
-        "mine", help="mine candidate keys + inclusion deps (FKs)"
-    )
-    mn.add_argument("-c", "--config", required=True)
-    sq = sub.add_parser(
-        "sql", help="run ad-hoc SQL over configured tables (JSON lines)"
-    )
-    sq.add_argument("-c", "--config", required=True)
-    ex = sub.add_parser(
-        "export", help="rules -> dedup -> waterfill -> pack training export"
-    )
-    ex.add_argument("-c", "--config", required=True)
+    for name, (_, help_) in commands.items():
+        sp = sub.add_parser(name, help=help_)
+        sp.add_argument("-c", "--config", required=True)
+        if name == "sync":
+            sp.add_argument("-s", "--state", default=None)
     args = ap.parse_args(argv)
     cfg = json.loads(open(args.config).read())
-    if args.cmd == "discover":
-        return cmd_discover(cfg)
-    if args.cmd == "curate":
-        return cmd_curate(cfg)
-    if args.cmd == "profile":
-        return cmd_profile(cfg)
-    if args.cmd == "classify":
-        return cmd_classify(cfg)
-    if args.cmd == "compact":
-        return cmd_compact(cfg)
-    if args.cmd == "diff":
-        return cmd_diff(cfg)
-    if args.cmd == "reconcile":
-        return cmd_reconcile(cfg)
-    if args.cmd == "mine":
-        return cmd_mine(cfg)
-    if args.cmd == "sql":
-        return cmd_sql(cfg)
-    if args.cmd == "export":
-        return cmd_export(cfg)
-    if args.cmd == "drift":
-        return cmd_drift(cfg)
-    return cmd_sync(cfg, args.state)
+    if args.cmd == "sync":
+        return cmd_sync(cfg, args.state)
+    return commands[args.cmd][0](cfg)
 
 
 if __name__ == "__main__":

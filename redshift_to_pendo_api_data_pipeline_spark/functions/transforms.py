@@ -16,6 +16,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql import types as T
 
+# the sink payload's record key (target __init__.py:549-557)
+PAYLOAD_KEY = "id"
+
 _I64_MAX = (1 << 63) - 1
 _I64_MIN = -(1 << 63)
 
@@ -105,17 +108,14 @@ def remap_fields(df: DataFrame, mappings: dict[str, str]) -> DataFrame:
     return df.select(*out)
 
 
-def reshape_payload(
-    df: DataFrame, primary_key: str, pk_alias: str, value_cols: list[str] | None = None
-) -> DataFrame:
+def reshape_payload(df: DataFrame, primary_key: str) -> DataFrame:
     """F10: reshape a flat record to the sink payload
-    ``{<pk_alias>: pk, values: {attr: val, ...}}`` (__init__.py:549-557).
-    ``values`` is a struct column; serialize with :func:`json_envelope` at
-    the sink edge only."""
-    if value_cols is None:
-        value_cols = [c for c in df.columns if c != primary_key]
+    ``{id: pk, values: {attr: val, ...}}`` (__init__.py:549-557), every
+    other column going into ``values``. ``values`` is a struct column;
+    serialize with :func:`json_envelope` at the sink edge only."""
+    value_cols = [c for c in df.columns if c != primary_key]
     return df.select(
-        F.col(primary_key).alias(pk_alias),
+        F.col(primary_key).alias(PAYLOAD_KEY),
         F.struct(*[F.col(f"`{c}`") for c in value_cols]).alias("values"),
     )
 

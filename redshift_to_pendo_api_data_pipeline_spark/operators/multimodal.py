@@ -111,10 +111,6 @@ class PilCodec(Codec):
         return frames
 
 
-# kept as the historical name for the real-dependency boundary
-RealCodec = PilCodec
-
-
 class WavCodec(Codec):
     """REAL audio codec with zero external dependencies: RIFF/WAVE PCM
     via the stdlib ``wave`` module — unlike PilCodec this path actually

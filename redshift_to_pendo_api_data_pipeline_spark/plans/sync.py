@@ -47,7 +47,6 @@ def sync_plan(
     stream: StreamSpec,
     bookmark=None,
     allowlist: DataFrame | None = None,
-    pk_alias: str = "id",
     limit: int | None = DEFAULT_QUERY_LIMIT,
     lookback: str | None = None,
 ) -> DataFrame:
@@ -82,7 +81,7 @@ def sync_plan(
         out = ordered_limit(out, stream.replication_key, limit)
     out = remap_fields(out, stream.field_mappings)
     pk_out = stream.field_mappings.get(stream.primary_key, stream.primary_key)
-    return reshape_payload(out, pk_out, pk_alias)
+    return reshape_payload(out, pk_out)
 
 
 def run_sync(

@@ -15,6 +15,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from redshift_to_pendo_api_data_pipeline_spark.streaming.incremental import (
+    run_incremental_sync,
+)
+
 CORRUPT_COL = "_corrupt_record"
 
 
@@ -101,15 +105,15 @@ def stream_jsonl_with_quarantine(
     schema: T.StructType,
     on_batch,
     checkpoint_dir: str,
-    trigger_available_now: bool = True,
 ):
     """Streaming twin of read_jsonl: a JSON-lines directory consumed as
     a stream, each micro-batch split into (valid, quarantine) with the
     same PERMISSIVE corrupt-capture, routed through ``on_batch(valid,
     quarantine, batch_id)``. The split happens inside foreachBatch —
     batch DataFrames, so the corrupt-column restriction never applies
-    and the parse is evaluated once per trigger. Returns the
-    StreamingQuery (caller owns lifecycle)."""
+    and the parse is evaluated once per trigger. The query runs through
+    ``incremental.run_incremental_sync`` (availableNow: drain what is
+    pending, then stop); returns the StreamingQuery."""
     raw = (
         spark.readStream.schema(_with_corrupt(schema))
         .option("mode", "PERMISSIVE")
@@ -124,9 +128,4 @@ def stream_jsonl_with_quarantine(
         finally:
             batch_df.unpersist()
 
-    writer = raw.writeStream.foreachBatch(_each).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_incremental_sync(raw, checkpoint_dir, _each)

@@ -24,10 +24,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from redshift_to_pendo_api_data_pipeline_spark.functions.transforms import remap_fields, reshape_payload
+from redshift_to_pendo_api_data_pipeline_spark.operators.dedup import normalize_text
+from redshift_to_pendo_api_data_pipeline_spark.operators.url import url_normalize
 from redshift_to_pendo_api_data_pipeline_spark.schema import StreamSpec
 
 
@@ -47,7 +49,6 @@ def read_stream(
 def shape_stream(
     sdf: DataFrame,
     stream: StreamSpec,
-    pk_alias: str = "id",
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
     """Same record shaping as the batch plan (remap + {pk, values}),
@@ -58,7 +59,7 @@ def shape_stream(
         out = out.withWatermark(stream.replication_key, watermark_delay)
     out = remap_fields(out, stream.field_mappings)
     pk_out = stream.field_mappings.get(stream.primary_key, stream.primary_key)
-    return reshape_payload(out, pk_out, pk_alias)
+    return reshape_payload(out, pk_out)
 
 
 def windowed_event_counts(
@@ -164,14 +165,8 @@ def streaming_exact_dedup(
     alone and uses the event-time watermark purely for eviction —
     exactly the "duplicates arrive within a bounded delay" contract
     ingestion pipelines actually have."""
-    return (
-        sdf.withColumn(
-            "__digest",
-            F.md5(F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))),
-        )
-        .withWatermark(ts_col, watermark_delay)
-        .dropDuplicatesWithinWatermark(["__digest"])
-        .drop("__digest")
+    return _dedup_on_digest(
+        sdf, F.md5(normalize_text(F.col(text_col))), ts_col, watermark_delay
     )
 
 
@@ -200,20 +195,22 @@ def streaming_url_dedup(
     keep-best picks the HIGHEST-SCORE duplicate; a stream must decide
     on arrival, so this keeps the FIRST — the standard ingest
     trade-off (re-rank later in batch if scores matter)."""
-    from redshift_to_pendo_api_data_pipeline_spark.operators.url import (
-        url_normalize,
-    )
-
-    return (
-        sdf.withColumn(
-            "__digest",
-            F.md5(
-                F.coalesce(
-                    url_normalize(F.col(url_col)),
-                    F.concat(F.lit("__unparseable__"), F.col(url_col)),
-                )
-            ),
+    digest = F.md5(
+        F.coalesce(
+            url_normalize(F.col(url_col)),
+            F.concat(F.lit("__unparseable__"), F.col(url_col)),
         )
+    )
+    return _dedup_on_digest(sdf, digest, ts_col, watermark_delay)
+
+
+def _dedup_on_digest(
+    sdf: DataFrame, digest: Column, ts_col: str, watermark_delay: str
+) -> DataFrame:
+    """First row per ``digest`` within the watermark horizon passes; the
+    digest column is dropped again."""
+    return (
+        sdf.withColumn("__digest", digest)
         .withWatermark(ts_col, watermark_delay)
         .dropDuplicatesWithinWatermark(["__digest"])
         .drop("__digest")

@@ -17,10 +17,17 @@ State per key is three longs (session start, last event, event count) —
 at 100 TB the state store holds |active users| x 24 bytes, bounded by
 key cardinality, not event volume; events stream through without
 accumulating.
+
+All seven operators share one state step, ``_per_key``: it owns the
+GroupState protocol (empty chunks dropped, the rest concatenated, state
+read or defaulted, updated, rows emitted) and the one
+``applyInPandasWithState`` call; each operator keeps only its own sort
+and arithmetic.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from typing import Iterator, Tuple
 
 import numpy as np
@@ -36,6 +43,59 @@ _STATE_SCHEMA = "start long, last long, n long"  # epoch micros
 
 def _micros(series: pd.Series) -> np.ndarray:
     return series.astype("datetime64[us]").astype("int64").to_numpy()
+
+
+def _rows(rows: list[tuple], columns: list[str], *us_cols: str):
+    """Output frame from tuples, the ``us_cols`` epoch micros turned back
+    into timestamps; None when there is nothing to emit."""
+    if not rows:
+        return None
+    out = pd.DataFrame(rows, columns=columns)
+    for c in us_cols:
+        out[c] = pd.to_datetime(out[c], unit="us")
+    return out
+
+
+def _per_key(
+    df: DataFrame,
+    keys: list[str],
+    out_schema: str,
+    state_schema: str,
+    initial: tuple,
+    step: Callable[[Tuple, pd.DataFrame, tuple], tuple],
+) -> DataFrame:
+    """The one per-key state step of this module. With NoTimeout Spark
+    calls it only for keys that have rows in the micro-batch; empty
+    chunks are dropped, the rest concatenated, and ``step(key, batch,
+    state)`` gets the key's carried state, or ``initial`` before its
+    first batch. ``step`` returns ``(new_state, rows)``: the state is
+    updated unless ``new_state`` is None (then it stays exactly as it
+    was), and ``rows`` is emitted when it is a non-empty frame. Append
+    mode, so each emitted row leaves exactly once."""
+
+    def fn(
+        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if not chunks:
+            return
+        new_state, rows = step(
+            key,
+            pd.concat(chunks, ignore_index=True),
+            state.get if state.exists else initial,
+        )
+        if new_state is not None:
+            state.update(new_state)
+        if rows is not None and len(rows):
+            yield rows
+
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_sessionize(
@@ -55,62 +115,39 @@ def streaming_sessionize(
     """
     gap_us = int(gap_seconds) * 1_000_000
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, batch, state):
         (user,) = key
-        if state.exists:
-            start, last, n = state.get
-        else:
-            start, last, n = None, None, 0
-
+        start, last, n = state
         closed: list[tuple] = []
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        ts = (
-            np.sort(np.concatenate([_micros(c[ts_col]) for c in chunks]))
-            if chunks else np.empty(0, dtype="int64")
+        ts = np.sort(_micros(batch[ts_col]))
+        # stitch the open session in front so the diff sees the
+        # cross-batch gap too
+        if last is not None:
+            gaps = np.diff(np.concatenate(([last], ts)))
+        else:
+            gaps = np.diff(ts)
+            start, last, n = int(ts[0]), int(ts[0]), 1
+            ts = ts[1:]
+        breaks = np.nonzero(gaps[: len(ts)] > gap_us)[0]  # index into ts
+        prev = 0
+        for b in breaks:
+            seg = ts[prev:b]
+            if len(seg):
+                last, n = int(seg[-1]), n + len(seg)
+            closed.append((user, start, last, n))
+            start, last, n = int(ts[b]), int(ts[b]), 1
+            prev = b + 1
+        tail = ts[prev:]
+        if len(tail):
+            last, n = int(tail[-1]), n + len(tail)
+        return (start, last, n), _rows(
+            closed,
+            ["user_id", "session_start", "session_end", "n_events"],
+            "session_start", "session_end",
         )
-        if len(ts):
-            # stitch the open session in front so the diff sees the
-            # cross-batch gap too
-            if last is not None:
-                gaps = np.diff(np.concatenate(([last], ts)))
-            else:
-                gaps = np.diff(ts)
-                start, last, n = int(ts[0]), int(ts[0]), 1
-                ts = ts[1:]
-            breaks = np.nonzero(gaps[: len(ts)] > gap_us)[0]  # index into ts
-            prev = 0
-            for b in breaks:
-                seg = ts[prev:b]
-                if len(seg):
-                    last, n = int(seg[-1]), n + len(seg)
-                closed.append((user, start, last, n))
-                start, last, n = int(ts[b]), int(ts[b]), 1
-                prev = b + 1
-            tail = ts[prev:]
-            if len(tail):
-                last, n = int(tail[-1]), n + len(tail)
 
-        if start is not None:
-            state.update((start, last, n))
-        if closed:
-            out = pd.DataFrame(
-                closed, columns=["user_id", "session_start", "session_end", "n_events"]
-            )
-            out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-            out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-            yield out
-
-    return (
-        events.groupBy(user_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _per_key(
+        events, [user_col], _OUT_SCHEMA, _STATE_SCHEMA, (None, None, 0), step
     )
 
 
@@ -142,45 +179,25 @@ def streaming_debounce(
     clock. Exactly-once per kept event in append mode."""
     gap_us = int(gap_seconds) * 1_000_000
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, batch, state):
         user, etype = key
-        last_kept = state.get[0] if state.exists else None
-
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if chunks:
-            allpdf = pd.concat(chunks, ignore_index=True)
-            order = np.lexsort(
-                (allpdf[id_col].to_numpy(), _micros(allpdf[ts_col]))
-            )
-            ts = _micros(allpdf[ts_col])[order]
-            ids = allpdf[id_col].to_numpy()[order]
-            keep_rows = []
-            for i in range(len(ts)):
-                t = int(ts[i])
-                if last_kept is None or t - last_kept >= gap_us:
-                    keep_rows.append((user, etype, int(ids[i]), t))
-                    last_kept = t
-            if last_kept is not None:
-                state.update((last_kept,))
-            if keep_rows:
-                out = pd.DataFrame(
-                    keep_rows,
-                    columns=["user_id", "event_type", "event_id", "ts"],
-                )
-                out["ts"] = pd.to_datetime(out["ts"], unit="us")
-                yield out
-
-    return (
-        events.groupBy(user_col, type_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=_DEB_OUT_SCHEMA,
-            stateStructType=_DEB_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
+        (last_kept,) = state
+        order = np.lexsort((batch[id_col].to_numpy(), _micros(batch[ts_col])))
+        ts = _micros(batch[ts_col])[order]
+        ids = batch[id_col].to_numpy()[order]
+        keep_rows = []
+        for i in range(len(ts)):
+            t = int(ts[i])
+            if last_kept is None or t - last_kept >= gap_us:
+                keep_rows.append((user, etype, int(ids[i]), t))
+                last_kept = t
+        return (last_kept,), _rows(
+            keep_rows, ["user_id", "event_type", "event_id", "ts"], "ts"
         )
+
+    return _per_key(
+        events, [user_col, type_col], _DEB_OUT_SCHEMA, _DEB_STATE_SCHEMA,
+        (None,), step,
     )
 
 
@@ -219,19 +236,10 @@ def streaming_anomalies(
     """
     hist = frame - 1
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, batch, state):
         (user,) = key
-        prev = np.array(state.get[0], dtype="int64") if state.exists else np.empty(
-            0, dtype="int64"
-        )
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            if state.exists:
-                state.update((prev.tolist(),))
-            return
-        batch = pd.concat(chunks).sort_values([ts_col, id_col])
+        prev = np.array(state[0], dtype="int64")
+        batch = batch.sort_values([ts_col, id_col])
         v = np.floor(batch[value_col].to_numpy() * 100).astype("int64")
         buf = np.concatenate([prev, v])
         cs = np.concatenate(([0], np.cumsum(buf)))
@@ -244,8 +252,7 @@ def streaming_anomalies(
         lhs = (v * n - s) ** 2
         rhs = z * z * (n * ss - s * s)
         flag = ((n >= min_n) & (lhs > rhs)).astype("int32")
-        state.update((buf[-hist:].tolist() if hist else [],))
-        yield pd.DataFrame(
+        return (buf[-hist:].tolist() if hist else [],), pd.DataFrame(
             {
                 "user_id": user,
                 "event_id": batch[id_col].to_numpy(),
@@ -255,12 +262,8 @@ def streaming_anomalies(
             }
         )
 
-    return events.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=_ANOM_OUT_SCHEMA,
-        stateStructType=_ANOM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_key(
+        events, [user_col], _ANOM_OUT_SCHEMA, _ANOM_STATE_SCHEMA, ([],), step
     )
 
 
@@ -293,21 +296,15 @@ def streaming_funnel(
     step_of = {s: i for i, s in enumerate(steps)}
     n_steps = len(steps)
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, batch, state):
         (user,) = key
-        stage, t_reach = state.get if state.exists else (0, None)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks or stage >= n_steps:
-            if state.exists:
-                state.update((stage, t_reach))
-            return
+        stage, t_reach = state
+        if stage >= n_steps:
+            return None, None
         # Secondary key = funnel-stage index so same-timestamp events are
         # scanned in funnel order; ts-only stable sort could visit step
         # i+1 before step i at an equal ts and miss an advance the batch
         # operator's ts >= t_reach semantics would count.
-        batch = pd.concat(chunks)
         batch["__step_ord"] = (
             batch[type_col].map(step_of).fillna(n_steps).astype("int64")
         )
@@ -322,18 +319,13 @@ def streaming_funnel(
                 out.append((user, stage, steps[stage], t))
                 t_reach = int(t)
                 stage += 1
-        state.update((stage, t_reach))
-        if out:
-            df = pd.DataFrame(out, columns=["user_id", "step_idx", "step", "ts"])
-            df["ts"] = pd.to_datetime(df["ts"], unit="us")
-            yield df
+        return (stage, t_reach), _rows(
+            out, ["user_id", "step_idx", "step", "ts"], "ts"
+        )
 
-    return events.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=_FUNNEL_OUT_SCHEMA,
-        stateStructType=_FUNNEL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_key(
+        events, [user_col], _FUNNEL_OUT_SCHEMA, _FUNNEL_STATE_SCHEMA,
+        (0, None), step,
     )
 
 
@@ -379,36 +371,24 @@ def streaming_pattern_counts(
 
     rx = re.compile(pattern)
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, batch, state):
         (user,) = key
-        tail, total = state.get if state.exists else ("", 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            if state.exists:
-                state.update((tail, total))
-            return
-        batch = pd.concat(chunks).sort_values([ts_col, tiebreak_col])
+        tail, total = state
+        batch = batch.sort_values([ts_col, tiebreak_col])
         seq = tail + "".join(batch[type_col].str[:1].tolist())
         last_end, new = 0, 0
         for m in rx.finditer(seq):
             last_end, new = m.end(), new + 1
         tail = seq[last_end:][-max_state:]
         total += new
-        state.update((tail, total))
-        if new:
-            yield pd.DataFrame(
-                [(user, new, total)],
-                columns=["user_id", "new_matches", "total_matches"],
-            )
+        return (tail, total), _rows(
+            [(user, new, total)] if new else [],
+            ["user_id", "new_matches", "total_matches"],
+        )
 
-    return events.groupBy(user_col).applyInPandasWithState(
-        fn,
-        outputStructType=_PATTERN_OUT_SCHEMA,
-        stateStructType=_PATTERN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_key(
+        events, [user_col], _PATTERN_OUT_SCHEMA, _PATTERN_STATE_SCHEMA,
+        ("", 0), step,
     )
 
 
@@ -438,17 +418,10 @@ def streaming_cusum(
     per-row Python. Bit-equal to the batch twin on in-order arrival
     (pinned by test)."""
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, batch, state):
         (g,) = key
-        p0, minp0 = state.get if state.exists else (0, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            if state.exists:
-                state.update((p0, minp0))
-            return
-        batch = pd.concat(chunks).sort_values(t_col)
+        p0, minp0 = state
+        batch = batch.sort_values(t_col)
         x = batch[value_col].to_numpy().astype("int64")
         target = batch[target_col].to_numpy().astype("int64")
         k = batch[k_col].to_numpy().astype("int64")
@@ -456,8 +429,7 @@ def streaming_cusum(
         minp = np.minimum.accumulate(np.minimum(p, minp0))
         s = p - minp
         alarm = (s > h_mult * k).astype("int32")
-        state.update((int(p[-1]), int(minp[-1])))
-        yield pd.DataFrame(
+        return (int(p[-1]), int(minp[-1])), pd.DataFrame(
             {
                 "g": g,
                 "t": batch[t_col].to_numpy().astype("int64"),
@@ -466,12 +438,8 @@ def streaming_cusum(
             }
         )
 
-    return points.groupBy(group_col).applyInPandasWithState(
-        fn,
-        outputStructType=_CUSUM_OUT_SCHEMA,
-        stateStructType=_CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_key(
+        points, [group_col], _CUSUM_OUT_SCHEMA, _CUSUM_STATE_SCHEMA, (0, 0), step
     )
 
 
@@ -502,17 +470,12 @@ def streaming_lateness(
     histogram in a bounded agg).
     """
 
-    def fn(
-        key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    no_max = np.iinfo("int64").min
+
+    def step(key, batch, state):
         (g,) = key
-        (max0,) = state.get if state.exists else (np.iinfo("int64").min,)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            if state.exists:
-                state.update((max0,))
-            return
-        batch = pd.concat(chunks).sort_values(arrival_col)
+        (max0,) = state
+        batch = batch.sort_values(arrival_col)
         ts = batch[ts_col].to_numpy().astype("int64")
         cm = np.maximum.accumulate(ts)
         # exclusive prefix max seeded by carried state; the stream's
@@ -520,12 +483,10 @@ def streaming_lateness(
         # (lateness 0, the batch operator's NULL-coalesce), NOT the
         # int64-min sentinel (prev - ts would wrap)
         prev = np.empty_like(cm)
-        prev[0] = ts[0] if max0 == np.iinfo("int64").min else max0
+        prev[0] = ts[0] if max0 == no_max else max0
         prev[1:] = np.maximum(cm[:-1], prev[0])
         late = np.maximum(prev - ts, 0)
-        state.update((int(cm[-1]) if max0 == np.iinfo("int64").min
-                      else int(max(cm[-1], max0)),))
-        yield pd.DataFrame(
+        return (int(max(cm[-1], max0)),), pd.DataFrame(
             {
                 "g": g,
                 "arr": batch[arrival_col].to_numpy().astype("int64"),
@@ -533,10 +494,7 @@ def streaming_lateness(
             }
         )
 
-    return events.groupBy(group_col).applyInPandasWithState(
-        fn,
-        outputStructType=_LATENESS_OUT_SCHEMA,
-        stateStructType=_LATENESS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _per_key(
+        events, [group_col], _LATENESS_OUT_SCHEMA, _LATENESS_STATE_SCHEMA,
+        (no_max,), step,
     )

@@ -131,6 +131,45 @@ def test_leaf_listings_go_through_fs_list_files():
     assert hits == []
 
 
+# (module, function) that alone may make each streaming call
+_QUERY_OWNERS = {
+    "applyInPandasWithState": ("streaming/stateful.py", "_per_key"),
+    "trigger": ("streaming/incremental.py", "run_incremental_sync"),
+}
+
+
+def _query_calls(tree: ast.AST, owner=None):
+    """(innermost enclosing function, line, method) of every
+    ``applyInPandasWithState`` call and every ``.trigger(availableNow=...)``
+    call under ``tree``."""
+    for node in ast.iter_child_nodes(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield from _query_calls(node, node.name)
+            continue
+        f = getattr(node, "func", None)
+        if isinstance(f, ast.Attribute) and (
+            f.attr == "applyInPandasWithState"
+            or (f.attr == "trigger"
+                and any(k.arg == "availableNow" for k in node.keywords))
+        ):
+            yield owner, f.end_lineno, f.attr
+        yield from _query_calls(node, owner)
+
+
+def test_stateful_and_available_now_queries_have_one_owner():
+    """Static, no Spark: ``stateful._per_key`` is the only function that
+    calls ``applyInPandasWithState``, and ``run_incremental_sync`` the
+    only one that starts an availableNow query; every stateful operator
+    and micro-batch driver goes through them."""
+    hits = []
+    for p in sorted(PACKAGE.rglob("*.py")):
+        rel = p.relative_to(PACKAGE).as_posix()
+        for fn, line, attr in _query_calls(ast.parse(p.read_text(), str(p))):
+            if _QUERY_OWNERS[attr] != (rel, fn):
+                hits.append(f"{rel}:{line}")
+    assert hits == []
+
+
 def _frame(spark):
     return spark.sql(
         """SELECT CAST(id AS SHORT) AS s,
